@@ -59,18 +59,22 @@ private[graft] object IndexCache {
     try {
       val p = new org.apache.hadoop.fs.Path(sourcePath)
       val fs = p.getFileSystem(conf)
+      val rootUri = fs.makeQualified(p).toUri
       val files = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.hadoop.fs.FileStatus]
       val it = fs.listFiles(p, true)
       while (it.hasNext) {
         val f = it.next()
-        val name = f.getPath.getName
-        // mirror the scan's hidden-file convention (underscore/dot
-        // prefixes — _SUCCESS, staging temporaries): counting a file
-        // Spark's reader excludes would silently diverge c from
-        // corpus.count() (r18, ADVICE)
-        if (f.isFile && name.endsWith(".parquet") &&
-          !name.startsWith("_") && !name.startsWith(".")) files += f
+        // mirror the scan's hidden-path convention on EVERY component
+        // below the root, as remoteListingSignature does: a part file
+        // under `_temporary/0/` (a crashed or running writer's staging)
+        // is as invisible to Spark's reader as `_SUCCESS`, and counting
+        // it would silently diverge c from corpus.count() (r18, ADVICE)
+        val rel = rootUri.relativize(f.getPath.toUri).getPath
+        val hidden = (rel.split("/") :+ f.getPath.getName)
+          .exists(c => c.startsWith("_") || c.startsWith("."))
+        if (f.isFile && f.getPath.getName.endsWith(".parquet") && !hidden)
+          files += f
       }
       if (files.isEmpty) None
       else {

@@ -292,11 +292,13 @@ object IvfIndex {
       .parquet(s"$path/tombstones"))
   }
 
-  private[graft] def loadOptional(spark: SparkSession, dir: String): Option[DataFrame] = {
+  private[graft] def loadOptional(spark: SparkSession, dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      Some(spark.read.parquet(dir))
+      Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
     else None
   }
 

@@ -80,6 +80,11 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
     // loop: concurrency changes WHEN each deterministic fit runs, never
     // what it computes. Measured on a cold cache: the PQ/IVF-PQ build
     // queries drop ~2x (see OPTIMIZATION_r18.md).
+    // Every fit job carries one tag, so a failed build can cancel the
+    // fits still running. A tag rather than a job group: it leaves the
+    // caller's group, and whatever listens on it, intact.
+    val sc = spark.sparkContext
+    val fitTag = s"graft-pq-fit-${java.util.UUID.randomUUID()}"
     val fitPool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(m, 8))
     val codebooks: Array[Array[Array[Double]]] =
@@ -88,17 +93,28 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
           scala.concurrent.ExecutionContext.fromExecutor(fitPool)
         val fits = (0 until m).map { sub =>
           scala.concurrent.Future {
-            val slices = prepared.toDF()
+            sc.addJobTag(fitTag)
+            sc.setInterruptOnCancel(true)
+            fitSubspace(prepared.toDF()
               .select(array_to_vector(slice(col("unit"), sub * d + 1, d))
-                .as("features"))
-            new KMeans().setK(kCentroids).setSeed(seed + sub)
-              .setFeaturesCol("features").setPredictionCol("c")
-              .fit(slices).clusterCenters.map(_.toArray)
+                .as("features")), sub)
           }
         }
         scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(fits),
           scala.concurrent.duration.Duration.Inf).toArray
+      } catch {
+        case e: Throwable =>
+          // one fit failed (or the caller was interrupted): stop the
+          // others instead of letting their KMeans rounds run on.
+          // Interrupt the pool, wait until no fit thread can submit
+          // another job, then cancel what is still scheduled
+          fitPool.shutdownNow()
+          sc.cancelJobsWithTag(fitTag)
+          fitPool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+          sc.cancelJobsWithTag(fitTag)
+          prepared.unpersist()
+          throw e
       } finally fitPool.shutdown()
     // materialize the encode once: it feeds BOTH the code table and the
     // embedding fetch table (save() runs two independent write jobs, and
@@ -113,6 +129,12 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
       PqIndex.withBucket(coded.select(col("id"), col("emb"))),
       cbRows.toDF("sub", "c", "centroid"))
   }
+
+  /** One subspace's KMeans codebook over its `features` slices. */
+  protected[ml] def fitSubspace(slices: DataFrame, sub: Int): Array[Array[Double]] =
+    new KMeans().setK(kCentroids).setSeed(seed + sub)
+      .setFeaturesCol("features").setPredictionCol("c")
+      .fit(slices).clusterCenters.map(_.toArray)
 
   /** Map-side encode with the (tiny) codebooks in the task closure —
     * shared by [[build]] and [[append]]; contains no fit. */

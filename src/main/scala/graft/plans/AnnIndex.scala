@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, element_at, explode, lit, pmod, xxhash64}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 
@@ -68,15 +68,17 @@ object AnnIndexRegistry {
     * query shape; 0 = unknown/caller-owned width, no k-scaling), the
     * content fingerprint of the source directory AT registration
     * (`sourceFp` — what [[lookupFresh]] re-checks before serving; "" =
-    * legacy/unguarded entry), and — when the index job built one — the
+    * legacy/unguarded entry), when the index job built one, the
     * IVF-PQ sibling [[AnnIndexRule]]'s cost rule may serve large corpora
-    * from instead. */
+    * from instead, and the data schemas of the artifact tables the probe
+    * reads ([[tableSchemas]]; empty = infer at every read). */
   case class Entry(indexPath: String, idCol: String, embCol: String,
       nProbe: Int, centroids: Array[(Int, Array[Double])],
       payloadCols: Seq[String] = Seq.empty,
       pq: Option[PqFamily] = None,
       servedK: Int = 0,
-      sourceFp: String = "")
+      sourceFp: String = "",
+      schemas: Map[String, StructType] = Map.empty)
 
   /** Driver-state bound: each entry pins nCentroids × dim doubles of
     * routing table (~1.5 MiB at 256×768). Registrations are unbounded
@@ -159,7 +161,7 @@ object AnnIndexRegistry {
     val fp = graft.ml.IndexCache.sourceSignature(
       spark.sparkContext.hadoopConfiguration, sourcePath)
     val entry = Entry(path, idCol, embCol, nProbe, centroids, payloadCols,
-      pqFam, servedK, fp)
+      pqFam, servedK, fp, tableSchemas(spark, path))
     put(sourcePath, entry)
     // persist the registration beside the artifact so a FRESH session's
     // flagship rides the index without a re-CALL (rehydrate); best-effort
@@ -177,6 +179,33 @@ object AnnIndexRegistry {
     spark.read.parquet(s"$indexPath/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
       .sortBy(_._1)
+
+  /** The data schemas of an IVF artifact's probed tables, read once at
+    * registration: `assigned`, `augmented` when materialized, and the
+    * `tombstones` sidecar (the id column of `assigned`, which may not
+    * exist yet). A serve-time read then only lists the probed cell
+    * directories: inferring the schema instead costs a parquet footer
+    * job per table per query. The `cell` partition column is still
+    * inferred from the directory names. The tables of a published
+    * artifact never change schema: compaction rewrites cells in place,
+    * and a grown or rebuilt corpus publishes (and registers) a new
+    * artifact. */
+  private def tableSchemas(spark: SparkSession,
+      indexPath: String): Map[String, StructType] = {
+    def data(table: String): StructType = StructType(
+      spark.read.parquet(s"$indexPath/$table").schema.filterNot(_.name == "cell"))
+    val assigned = data("assigned")
+    Map("assigned" -> assigned,
+      "tombstones" -> StructType(Seq(assigned("id")))) ++
+      (if (exists(spark, s"$indexPath/augmented/_SUCCESS"))
+         Map("augmented" -> data("augmented"))
+       else Map.empty)
+  }
+
+  private[plans] def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /**
    * Materialize the metadata-CARRYING index table for filtered kNN: the
@@ -604,7 +633,7 @@ object AnnIndexRegistry {
         }
         val entry = Entry(dir.getPath, r.idCol, r.embCol, r.nProbe,
           loadCentroids(spark, dir.getPath), r.payloadCols, pqFam,
-          r.servedK, r.sourceFp)
+          r.servedK, r.sourceFp, tableSchemas(spark, dir.getPath))
         put(key, entry)
         entry
       }.toOption.orElse(miss)
@@ -877,8 +906,9 @@ object AnnIndexRule extends Rule[LogicalPlan] {
     // untouched chain above resolves unchanged
     val spark = SparkSession.active
     val table = if (needsPayload) "augmented" else "assigned"
-    if (needsPayload && IvfIndex.loadOptional(spark,
-        s"${entry.indexPath}/augmented").isEmpty) return None
+    if (needsPayload &&
+        !AnnIndexRegistry.exists(spark, s"${entry.indexPath}/augmented/_SUCCESS"))
+      return None
     // FAMILY PICK (r14): serve the limit-k flagship from the IVF-PQ codes
     // table once the corpus's raw embedding bytes cross the configured
     // advantage point (see [[PqMinBytesKey]]); IVF keeps serving below
@@ -898,12 +928,13 @@ object AnnIndexRule extends Rule[LogicalPlan] {
         val minBytes = pqMinBytes(conf.getConfString(_, _))
         if (embBytes < minBytes) None
         else pqCandidates(spark, fam, cells, queryVec, limitK,
-          longId = idAttr.dataType == LongType,
-          ivfIndexPath = entry.indexPath)
+          longId = idAttr.dataType == LongType, ivf = entry)
       }
     lazy val ivfLive: Option[DataFrame] =
-      prunedCellScan(spark, s"${entry.indexPath}/$table", cells).map { scan =>
-        IvfIndex.loadOptional(spark, s"${entry.indexPath}/tombstones")
+      prunedCellScan(spark, s"${entry.indexPath}/$table", cells,
+          entry.schemas.get(table)).map { scan =>
+        IvfIndex.loadOptional(spark, s"${entry.indexPath}/tombstones",
+          entry.schemas.get("tombstones"))
           .fold(scan)(t => scan.join(t, Seq("id"), "left_anti"))
       }
     val live = pqServed.orElse(ivfLive).getOrElse(return None)
@@ -1129,17 +1160,20 @@ object AnnIndexRule extends Rule[LogicalPlan] {
    * corpus, when the scan listed the whole table). A probed cell that
    * never received rows — or whose directory a fully-dead compaction
    * removed — simply isn't read; None (caller falls back to the exact
-   * scan) when no probed directory exists at all.
+   * scan) when no probed directory exists at all. A known data
+   * `schema` (the registration's) skips the read's schema-inference job.
    */
   private def prunedCellScan(spark: SparkSession, tablePath: String,
-      cells: Seq[Int]): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      cells: Seq[Int], schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = cells.map(c => s"$tablePath/cell=$c")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+      .filter(AnnIndexRegistry.exists(spark, _))
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", tablePath).parquet(dirs: _*))
+    else {
+      val reader = spark.read.option("basePath", tablePath)
+      Some(schema.fold(reader)(reader.schema).parquet(dirs: _*))
+    }
   }
+
 
   /** Flatten a filter condition into its AND-conjuncts. */
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {
@@ -1232,7 +1266,7 @@ object AnnIndexRule extends Rule[LogicalPlan] {
    */
   private def pqCandidates(spark: SparkSession, fam: AnnIndexRegistry.PqFamily,
       cells: Seq[Int], queryVec: Array[Double], k: Int,
-      longId: Boolean, ivfIndexPath: String): Option[DataFrame] = {
+      longId: Boolean, ivf: AnnIndexRegistry.Entry): Option[DataFrame] = {
     val qn = math.sqrt(queryVec.map(x => x * x).sum)
     if (qn == 0.0) return None
     val unit = queryVec.map(_ / qn)
@@ -1265,7 +1299,8 @@ object AnnIndexRule extends Rule[LogicalPlan] {
     // BEFORE the shortlist so a dead row can never occupy a top-k slot
     // and truncate the backfilled result. Surrogate-keyed artifacts map
     // the tombstoned ids into the xxhash64 domain the codes are keyed in.
-    val live = IvfIndex.loadOptional(spark, s"$ivfIndexPath/tombstones")
+    val live = IvfIndex.loadOptional(spark, s"${ivf.indexPath}/tombstones",
+        ivf.schemas.get("tombstones"))
       .fold(famLive) { t =>
         val dead =
           if (longId) t.select(col("id"))

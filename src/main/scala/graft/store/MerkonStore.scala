@@ -323,7 +323,8 @@ class MerkonStore(spark: SparkSession) {
     syncDump(name, dump,
       purgeEmptyKeys(current(name))
         .filter(col("embedding").isNotNull)
-        .select(col("key"), col("embedding")))
+        .select(dumpSchema.fields.toIndexedSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*))
     // default geometry is CORPUS-SIZED (sqrt-N cells, probe width
     // calibrated to recall@10 >= 0.95 — the reference's flagship top-k
     // shape) instead of a constant the collection outgrows; explicit
@@ -398,7 +399,7 @@ class MerkonStore(spark: SparkSession) {
     }
     val pending = pendingDumpKeys(name).distinct().localCheckpoint()
     if (pending.isEmpty) return
-    val dumpedKeys = spark.read.parquet(dump).select("key")
+    val dumpedKeys = readDump(dump).select("key")
     val hasUpdates = pending.join(dumpedKeys, Seq("key"), "left_semi")
       .limit(1).count() > 0
     if (hasUpdates) {
@@ -454,7 +455,7 @@ class MerkonStore(spark: SparkSession) {
       useIndex: Boolean = false,
       predicate: Option[Column] = None): DataFrame = {
     if (useIndex && limit > 0 && indexedCollections.contains(name)) {
-      val idx = spark.read.parquet(indexedCollections(name))
+      val idx = readDump(indexedCollections(name))
       // pre-filter contract (the filtered-ANN convention, see
       // IvfIndex.searchFiltered): restrict candidates to keys whose LIVE
       // record satisfies the predicate BEFORE top-k, so a selective
@@ -469,9 +470,13 @@ class MerkonStore(spark: SparkSession) {
         .orderBy(col("score").desc, col("key").asc)
         .limit(limit)
         .select(col("key"), col("score"))
+      // live keys are unique, so the join yields at most `limit` rows:
+      // the exact path's bounded top-k orders them in one job, where a
+      // global sort would plan a sampling and a shuffle job as well
       val fetched = purgeEmptyKeys(current(name)).join(broadcast(topk), Seq("key"))
       return project(fetched, withEmbeddings)
         .orderBy(col("score").desc, col("key").asc)
+        .limit(limit)
     }
     val filtered = predicate.fold(purgeEmptyKeys(current(name)))(p =>
       purgeEmptyKeys(current(name)).filter(p))
@@ -927,6 +932,12 @@ class MerkonStore(spark: SparkSession) {
       .drop("_rn", SeqCol)
   }
 
+  /** Open a snapshot dump with its fixed schema: an inferred read runs a
+    * parquet footer job every time the dump is opened. Files are still
+    * listed per read, so appends and re-dumps are always visible. */
+  private def readDump(dump: String): DataFrame =
+    spark.read.schema(dumpSchema).parquet(dump)
+
   private def purgeEmptyKeys(df: DataFrame): DataFrame =
     df.filter(length(coalesce(col("key"), lit(""))) > 0)
 
@@ -970,6 +981,12 @@ object MerkonStore {
     StructField("description", StringType),
     StructField("text", StringType),
     StructField("additional_metadata", StringType)))
+
+  /** The (key, embedding) snapshot [[MerkonStore.buildIndex]] dumps for
+    * the index job, as written and as every dump read imposes it. */
+  val dumpSchema: StructType = StructType(Seq(
+    StructField("key", StringType),
+    StructField("embedding", ArrayType(FloatType))))
 
   /** `DatabaseEntry` (MerkonDatabase.cs:243-254) with native types instead
     * of the reference's all-string fields. */

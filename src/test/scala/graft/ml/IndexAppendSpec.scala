@@ -770,4 +770,22 @@ class IndexAppendSpec extends AnyFunSuite with SparkTestBase {
     // codebooks re-fit over the different corpus differ from the originals
     assert(codebookSet(rebuilt.codebooks) != firstBooks)
   }
+
+  test("footer row count skips part files under hidden directories (_temporary/0/)") {
+    val dir = scratchDir("graft-footer-count")
+    val src = s"$dir/corpus"
+    baseHalf.write.parquet(src)
+    // a writer's staging leftover: a real part file Spark's reader skips
+    emb.limit(7).coalesce(1).write.parquet(s"$dir/staging")
+    val part = new java.io.File(s"$dir/staging").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val staged = new java.io.File(s"$src/_temporary/0")
+    assert(staged.mkdirs())
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(staged, "part-00000-staged.parquet").toPath)
+    val want = spark.read.parquet(src).count()
+    assert(want == baseHalf.count())
+    assert(IndexCache.rowCountFromFooters(spark.sparkContext.hadoopConfiguration, src)
+      .contains(want))
+  }
 }

@@ -913,4 +913,111 @@ class MerkonStoreSpec extends AnyFunSuite with SparkTestBase {
       assert(spark.read.parquet(s"${e3.indexPath}/assigned").count() == 3000)
     } finally graft.plans.AnnIndexRegistry.clear()
   }
+
+  /** `body`'s result and the Spark jobs it ran, counted by a listener
+    * scoped to one job group on this thread. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "jobsOf")
+    try {
+      val a = body
+      org.apache.spark.GraftTestBus.drain(sc)
+      (a, started.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("indexed top-k: no job while planning, 2 jobs to run (3 with tombstones), same rows as the unbounded plan") {
+    import graft.functions.VectorFunctions.cosineSim
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{broadcast, col, concat, lit}
+    val st = newStore
+    val dumpRoot = scratchDir("graft-store-jobs")
+    try {
+      val corpus = spark.read.parquet(s"$sf0_001/embeddings.parquet")
+      def slice(lo: Int, hi: Int) =
+        corpus.filter(col("vec_id") >= lo && col("vec_id") < hi)
+          .select(concat(lit("k"), col("vec_id")).as("key"), col("embedding"))
+      def vec(id: Int) = corpus.filter(col("vec_id") === id).select("embedding")
+        .head().getSeq[Float](0).toArray
+      val q = vec(5)
+      st.upsertBatch("vj", slice(0, 400))
+      // three more records carry k5's embedding: a four-way tie at 1.0
+      st.upsertBatch("vj", corpus.filter(col("vec_id") === 5).crossJoin(
+          spark.range(3).select(concat(lit("t"), col("id")).as("key")))
+        .select(col("key"), col("embedding")))
+      // compact as a service does after a write: the fetch then reads a
+      // checkpoint, not the keep-latest window over the upserts
+      st.compact("vj")
+      st.buildIndex("vj", nCentroids = 8, nProbe = 3, dir = dumpRoot)
+      val dump = s"$dumpRoot/${MerkonStore.pathSafe("vj")}"
+      assert(spark.read.parquet(dump).schema == MerkonStore.dumpSchema)
+
+      // the earlier spelling: inferred dump read, unbounded global sort
+      def unbounded(limit: Int, minScore: Double, predicate: Option[Column]) = {
+        val idx = spark.read.parquet(dump)
+        val live = st.getAll("vj")
+        val topk = predicate
+          .fold(idx)(p => idx.join(live.filter(p).select("key"), Seq("key"), "left_semi"))
+          .withColumn("score", cosineSim(col("embedding"), lit(q)))
+          .filter(col("score") >= minScore)
+          .orderBy(col("score").desc, col("key").asc)
+          .limit(limit)
+          .select(col("key"), col("score"))
+        live.join(broadcast(topk), Seq("key")).drop("embedding")
+          .orderBy(col("score").desc, col("key").asc)
+      }
+      def served(what: String, maxJobs: Int, limit: Int = 10,
+          minScore: Double = 0.0, predicate: Option[Column] = None) = {
+        val (df, planJobs) = jobsOf(st.getNearestMatches("vj", q, limit,
+          minScore, useIndex = true, predicate = predicate))
+        val (_, optJobs) = jobsOf(df.queryExecution.optimizedPlan)
+        assert(planJobs == 0 && optJobs == 0,
+          s"$what: $planJobs jobs building the plan, $optJobs optimizing it")
+        val (rows, runJobs) = jobsOf(df.collect().toSeq)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("rangepartitioning"), s"$what: global sort\n$plan")
+        // a predicate's allow-list runs its own jobs over the dump, which
+        // the rewrite does not serve
+        if (predicate.isEmpty) {
+          assert(runJobs <= maxJobs, s"$what: $runJobs jobs, expected <= $maxJobs")
+          assert(plan.contains("emb:array<float>"), s"$what: not index-served\n$plan")
+        }
+        val old = unbounded(limit, minScore, predicate)
+        assert(rows == old.collect().toSeq, s"$what: rows differ from the unbounded plan")
+        assert(df.schema == old.schema)
+        rows.map(_.getAs[String]("key"))
+      }
+
+      assert(served("no tombstones", 2).length == 10)
+      assert(served("tied scores", 2, limit = 2) == Seq("k5", "t0"))
+      val few = served("limit above the result", 2, limit = 50, minScore = 0.9)
+      assert(few.length >= 4 && few.length < 50, few)
+      val inSlice = served("predicate", 2, predicate = Some(col("key") > lit("k3")))
+      assert(inSlice.nonEmpty && inSlice.forall(_ > "k3"), inSlice)
+      assert(unbounded(10, 0.0, None).queryExecution.executedPlan.toString
+        .contains("rangepartitioning"), "the unbounded plan should sort globally")
+
+      st.removeBatch("vj", Seq("k5", "t1"))
+      st.compact("vj")
+      val afterRemove = served("after removeBatch", 3)
+      assert(afterRemove.take(2) == Seq("t0", "t2"), afterRemove)
+      st.compactIndex("vj")
+      assert(served("after compactIndex", 2) == afterRemove)
+      st.upsertBatch("vj", slice(400, 450))
+      st.compact("vj")
+      st.buildIndex("vj", nCentroids = 8, nProbe = 3, dir = dumpRoot)
+      served("after an append refresh", 3)
+    } finally graft.plans.AnnIndexRegistry.clear()
+  }
 }
