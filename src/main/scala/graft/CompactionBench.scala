@@ -71,7 +71,7 @@ object CompactionBench {
         case "clustered" => (0L until deleteN.toLong)            // ids 0..w-1
         case _ => (0 until deleteN).map(i => i.toLong * n / deleteN)
       }).toDF("id")
-      dead.coalesce(1).write.mode("overwrite").parquet(s"$path/tombstones")
+      graft.ml.IndexCache.writeTombstones(Some(dead), path)
       val built = IvfPqIndex.load(spark, path)
       val affectedCells = built.codedCell.join(dead, Seq("id"), "left_semi")
         .select("cell").distinct().count()

@@ -1,8 +1,16 @@
 package graft.ml
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /**
- * Shared build-once/read-many lifecycle for persisted ANN index artifacts
- * (IVF cell tables, PQ code tables): a registered query path must never
+ * Shared build-once/read-many lifecycle for the persisted ANN index
+ * artifacts of all four families (IVF, PQ, IVF-PQ, sign). Each family
+ * keeps its table list ([[Layout]]), its build and encode, and its
+ * per-table compaction rewrite; this module owns the rest — publish,
+ * open-or-grow ([[openOrGrow]], [[linkAppend]]), the tombstone sidecar,
+ * the compaction gate ([[compactOnDisk]]), the default roots and gc.
+ *
+ * A registered query path must never
  * run an iterative fit — it loads the prebuilt index keyed on a content
  * fingerprint of the source files plus the quantizer params, building and
  * publishing it atomically on first use (the single-node analog of the
@@ -34,16 +42,34 @@ package graft.ml
  */
 private[graft] object IndexCache {
 
-  /** THE default publish roots for the two ANN artifact families — one
-    * definition for the Scala index APIs, the store facade, the registry
-    * and the SQL `gc_index_cache('')` contract ("empty = the default
-    * roots"). Duplicated literals drifted once per call site before; a
-    * drift here silently un-bounds the sibling root GC exists to bound
-    * (ADVICE r14). */
+  /** THE default publish roots, one per index family — one definition
+    * for the Scala index APIs, the store facade, the registry and the SQL
+    * `gc_index_cache('')` contract ("empty = the default roots").
+    * Duplicated literals drifted once per call site before, and a root
+    * no gc sweep reaches grows by one artifact per rebuild (ADVICE r14). */
   private[graft] val DefaultIvfRoot: String =
     sys.props("java.io.tmpdir") + "/graft-ivf"
   private[graft] val DefaultIvfPqRoot: String =
     sys.props("java.io.tmpdir") + "/graft-ivfpq"
+  private[graft] val DefaultPqRoot: String =
+    sys.props("java.io.tmpdir") + "/graft-pq"
+  private[graft] val DefaultSignRoot: String =
+    sys.props("java.io.tmpdir") + "/graft-sign"
+
+  /** Every family's default root: what a gc sweep with no named root
+    * covers. */
+  private[graft] val DefaultRoots: Seq[String] =
+    Seq(DefaultIvfRoot, DefaultIvfPqRoot, DefaultPqRoot, DefaultSignRoot)
+
+  /** One family's artifact on disk: the KEY table, whose `_SUCCESS`
+    * marks a complete artifact and whose `id` column the append overlap
+    * probe and the compaction gate read, and the family's other data
+    * tables, which a link-append reuses. The tombstone sidecar belongs to
+    * every family and is not listed. */
+  private[graft] final case class Layout(keyTable: String,
+      tables: Seq[String]) {
+    def successRel: String = s"$keyTable/_SUCCESS"
+  }
 
   private val ManifestRel = "graft-manifest.txt"
 
@@ -94,21 +120,6 @@ private[graft] object IndexCache {
     * one-way hash of the source path). Entry lines follow the header. */
   private val SourceHeader = "source="
 
-  /** Resolve the published index dir for (source, params), building via
-    * `buildInto(stagingDir)` if absent. `successRel` is a file that only
-    * exists in a complete index (e.g. "assigned/_SUCCESS"). */
-  def openOrBuild(sourcePath: String, paramsFingerprint: String,
-      cacheRoot: String, successRel: String)(buildInto: String => Unit): String =
-    openOrBuildIncremental(sourcePath, paramsFingerprint, cacheRoot, successRel)(
-      buildInto)(appendInto = null)
-
-  /** [[openOrBuild]] plus the source-grew fast path: when a published
-    * index for the same params ingested a strict subset of the current
-    * source files (all of them unchanged), call
-    * `appendInto(publishedPath, newFiles, stagingDir)` — which must
-    * encode ONLY `newFiles` against the published index's frozen
-    * quantizer and write the grown index to `stagingDir` — instead of
-    * `buildInto`. Pass `appendInto = null` to always rebuild. */
   /** Data files of a source dir, hidden files excluded: _SUCCESS / .crc
     * sidecars are invisible to Spark's parquet reader, so they must be
     * invisible to the fingerprint too — otherwise a rewritten _SUCCESS
@@ -304,6 +315,15 @@ private[graft] object IndexCache {
       }
     }.getOrElse((Seq.empty, Seq.empty))
 
+  /** Resolve the published index dir for (source, params), building via
+    * `buildInto(stagingDir)` if absent. `successRel` is a file that only
+    * exists in a complete index (e.g. "assigned/_SUCCESS"). Source-grew
+    * fast path: when a published index for the same params ingested a
+    * strict subset of the current source files (all of them unchanged),
+    * call `appendInto(publishedPath, newFiles, stagingDir)` — which must
+    * encode ONLY `newFiles` against the published index's frozen
+    * quantizer and write the grown index to `stagingDir` — instead of
+    * `buildInto`. */
   def openOrBuildIncremental(sourcePath: String, paramsFingerprint: String,
       cacheRoot: String, successRel: String)(buildInto: String => Unit)(
       appendInto: (String, Seq[String], String) => Unit): String = {
@@ -349,7 +369,6 @@ private[graft] object IndexCache {
       successRel: String, entries: Seq[String], filePaths: Seq[String],
       appendInto: (String, Seq[String], String) => Unit,
       staging: java.io.File): Boolean = {
-    if (appendInto == null) return false
     val current = entries.toSet
     val byEntry = entries.zip(filePaths).toMap
     val candidates = Option(new java.io.File(cacheRoot).listFiles()).toSeq.flatten
@@ -377,6 +396,203 @@ private[graft] object IndexCache {
         true
       case None => false
     }
+  }
+
+  /** The open every family's `openOrBuild*` runs: [[openOrBuildIncremental]]
+    * keyed on `layout`'s success marker, whose grow step reads the new
+    * source files as `delta` and tries the family's O(delta)
+    * `linkAppend(published, delta, staging)` (see [[linkAppend]]),
+    * falling back to its LWW `rewrite(published, delta, staging)` when
+    * that declines. No quantizer fit runs on either grow form. The delta
+    * read keeps `basePath`: the new files are LEAF files, and a
+    * hive-partitioned corpus keeps its partition columns only in the
+    * directory structure — without the base path a partition-column id
+    * would vanish from the delta's schema (ADVICE r15). */
+  private[graft] def openOrGrow(spark: SparkSession, sourcePath: String,
+      paramsFingerprint: String, cacheRoot: String, layout: Layout)(
+      build: String => Unit)(
+      linkAppend: (String, DataFrame, String) => Boolean,
+      rewrite: (String, DataFrame, String) => Unit): String =
+    openOrBuildIncremental(sourcePath, paramsFingerprint, cacheRoot,
+      layout.successRel)(build) { (published, newFiles, staging) =>
+      val delta = spark.read.option("basePath", sourcePath)
+        .parquet(newFiles: _*)
+      if (!linkAppend(published, delta, staging))
+        rewrite(published, delta, staging)
+    }
+
+  /**
+   * The O(delta) artifact refresh every family's `appendOnDisk` shares
+   * (r15): grow a PUBLISHED artifact into `staging` by HARDLINKING every
+   * existing data file of its tables and the tombstone sidecar, then
+   * `writeDelta(staging)` appends ONLY the delta's encoded rows as new
+   * files — no shuffle of existing rows, no corpus-sized write. Links
+   * cannot express LWW row replacement, so this applies IFF `deltaIds`
+   * (in the artifact's key domain) are disjoint from the published key
+   * table AND its sidecar (the store's insert-only refresh shape — its
+   * update and re-add waves full-dump upstream). Returns false (nothing
+   * left in `staging`) on overlap or when the filesystem refuses links;
+   * the caller rewrites. A `writeDelta` that throws leaves its partial
+   * files in `staging`, which the open removes with the links, so the
+   * published artifact's files are never touched. At cluster scale the
+   * same shape is a metadata-only manifest commit (new files
+   * registered, existing files reused); the local hardlink is that
+   * commit's single-node spelling — and deleting either artifact dir
+   * later only unlinks names, never bytes the sibling still reads.
+   * Old-artifact CONTRACT sidecars (nprobe calibration, registration
+   * record, cache manifest, `augmented`) are deliberately not linked:
+   * the grown artifact recalibrates and re-registers.
+   */
+  private[graft] def linkAppend(spark: SparkSession, published: String,
+      staging: String, layout: Layout, deltaIds: DataFrame)(
+      writeDelta: String => Unit): Boolean = {
+    if (overlaps(spark.read.parquet(s"$published/${layout.keyTable}"), deltaIds) ||
+        readTombstones(spark, published).exists(overlaps(_, deltaIds)) ||
+        !linkArtifactTables(published, staging,
+          (layout.keyTable +: layout.tables) :+ TombstonesRel))
+      return false
+    writeDelta(staging)
+    true
+  }
+
+  /** Whether any `id` of `keys` is among `ids` — a one-row probe. */
+  private[graft] def overlaps(keys: DataFrame, ids: DataFrame): Boolean =
+    keys.select("id").join(ids, Seq("id"), "left_semi").limit(1).count() > 0
+
+  /** Hardlink each existing table dir of `published` into `staging` and
+    * write a FRESH (unshared) success marker per table — a linked marker
+    * would share its inode with the still-served old artifact, and the
+    * delta write job rewrites `_SUCCESS` in place. False (staging
+    * removed) on a link-refusing filesystem. */
+  private def linkArtifactTables(published: String, staging: String,
+      tables: Seq[String]): Boolean =
+    try {
+      tables.foreach { sub =>
+        val from = new java.io.File(published, sub)
+        if (from.isDirectory) {
+          val to = new java.io.File(new java.io.File(staging), sub)
+          linkTree(from, to)
+          java.nio.file.Files.write(
+            new java.io.File(to, "_SUCCESS").toPath, Array.emptyByteArray)
+        }
+      }
+      true
+    } catch {
+      case _: Exception =>
+        deleteRecursively(new java.io.File(staging))
+        false
+    }
+
+  /** Hardlink every VISIBLE file of `from` into `to`, recursing into
+    * partition subdirectories; `_`-markers and `.`-checksum sidecars are
+    * skipped (the new artifact writes its own — a linked marker/crc
+    * would share an inode with the old artifact's, and Hadoop's local
+    * FS rewrites both in place). */
+  private def linkTree(from: java.io.File, to: java.io.File): Unit = {
+    to.mkdirs()
+    Option(from.listFiles()).toSeq.flatten.foreach { f =>
+      if (f.isDirectory) linkTree(f, new java.io.File(to, f.getName))
+      else if (!f.getName.startsWith("_") && !f.getName.startsWith("."))
+        java.nio.file.Files.createLink(
+          new java.io.File(to, f.getName).toPath, f.toPath)
+    }
+  }
+
+  // ---- the tombstone sidecar ----
+  //
+  // A delete is O(|batch|) bookkeeping: the ids land in
+  // `<artifact>/tombstones` (one `id` column in the artifact's own key
+  // domain), every probe anti-joins it, and compaction folds it into the
+  // tables once the dead fraction is worth a rewrite. No quantizer ever
+  // re-runs for a delete. This is the one place that spells the path.
+
+  private val TombstonesRel = "tombstones"
+
+  /** A parquet table dir whose writer finished (`_SUCCESS`), else None.
+    * A known `schema` skips the footer-inference job. */
+  private[graft] def loadOptional(spark: SparkSession, dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+      Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
+    else None
+  }
+
+  /** The artifact's pending deletes, None when it has none. The serve
+    * path passes the registered `schema`. */
+  private[graft] def readTombstones(spark: SparkSession, artifact: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Option[DataFrame] =
+    loadOptional(spark, s"$artifact/$TombstonesRel", schema)
+
+  /** Persist a built index's sidecar (part of every family's `save`). */
+  private[graft] def writeTombstones(tombstones: Option[DataFrame],
+      artifact: String): Unit =
+    tombstones.foreach(_.coalesce(1).write.mode("overwrite")
+      .parquet(s"$artifact/$TombstonesRel"))
+
+  /** Union `dead` into a published artifact's sidecar (idempotent — a
+    * distinct union). Materialized before the overwrite because the union
+    * otherwise reads the directory the write is replacing.
+    * O(|sidecar| + |batch|), never touches index tables. */
+  private[graft] def mergeTombstones(spark: SparkSession, artifact: String,
+      dead: DataFrame): Unit =
+    writeTombstones(
+      Some(withTombstones(readTombstones(spark, artifact), dead).localCheckpoint()),
+      artifact)
+
+  /** A delete in memory: the sidecar with `dead` ids added. */
+  private[graft] def withTombstones(tombstones: Option[DataFrame],
+      dead: DataFrame): DataFrame =
+    tombstones.fold(dead)(_.unionByName(dead)).distinct()
+
+  /** An upsert in memory: ids a delta re-adds come OFF the sidecar —
+    * delete-then-upsert must leave the vector live (the store's LWW
+    * order). */
+  private[graft] def revive(tombstones: Option[DataFrame],
+      ids: DataFrame): Option[DataFrame] =
+    tombstones.map(_.join(ids, Seq("id"), "left_anti"))
+
+  /** `rows` minus the tombstoned ids: what a probe may see. No hint on
+    * the anti-join — the sidecar is usually tiny (AQE broadcasts it),
+    * but a long-uncompacted store can grow it past broadcast size and
+    * the join must still plan. */
+  private[graft] def live(rows: DataFrame,
+      tombstones: Option[DataFrame]): DataFrame =
+    tombstones.fold(rows)(t => rows.join(t, Seq("id"), "left_anti"))
+
+  /** (rows, reclaimable, dead fraction) of an artifact: its key table's
+    * row count and the sidecar ids that are actually in it — a semi-join,
+    * not the raw sidecar count, which over-reports when the sidecar holds
+    * never-indexed ids (deletes of zero-norm or never-dumped rows). The
+    * compaction gate and `index_stats` read this one definition, so the
+    * number an operator reads is the number the gate applies
+    * (ADVICE r14). */
+  private[graft] def deadStats(keys: DataFrame,
+      tombstones: Option[DataFrame]): (Long, Long, Double) = {
+    val total = keys.count()
+    val dead = tombstones.fold(0L)(t =>
+      keys.join(t.select("id"), Seq("id"), "left_semi").count())
+    (total, dead, if (total == 0) 0.0 else dead.toDouble / total)
+  }
+
+  /** The on-disk compaction every family's `compactOnDisk` shares: no
+    * sidecar, nothing to do; a reclaimable fraction ([[deadStats]] over
+    * the key rows `keys`) below `minDeadFraction` leaves the sidecar
+    * pending; otherwise `rewrite(dead)` folds the deletes into the
+    * family's tables and the sidecar drops LAST — a crash mid-rewrite
+    * leaves every delete recorded, never resurrects a row. */
+  private[graft] def compactOnDisk(spark: SparkSession, artifact: String,
+      keys: DataFrame, tombstones: Option[DataFrame],
+      minDeadFraction: Double)(rewrite: DataFrame => Unit): Unit = {
+    val dead = tombstones.getOrElse(return)
+    if (minDeadFraction > 0.0 &&
+        deadStats(keys, tombstones)._3 < minDeadFraction) return
+    rewrite(dead)
+    val t = new org.apache.hadoop.fs.Path(s"$artifact/$TombstonesRel")
+    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
   }
 
   /**

@@ -88,7 +88,7 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
       built.assigned.join(assignedDelta.select("id"), Seq("id"), "left_anti")
         .unionByName(assignedDelta).repartition(col("cell")),
       built.centroids,
-      built.tombstones.map(_.join(assignedDelta.select("id"), Seq("id"), "left_anti")))
+      IndexCache.revive(built.tombstones, assignedDelta.select("id")))
   }
 
   /**
@@ -102,10 +102,8 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
    * rows is unchanged by deletes).
    */
   def delete(built: IvfIndex.Built, ids: DataFrame, idCol: String): IvfIndex.Built = {
-    val dead = ids.select(col(idCol).as("id")).distinct()
-    IvfIndex.Built(built.assigned, built.centroids,
-      Some(built.tombstones.fold(dead)(t =>
-        t.unionByName(dead).distinct())))
+    IvfIndex.Built(built.assigned, built.centroids, Some(
+      IndexCache.withTombstones(built.tombstones, ids.select(col(idCol).as("id")))))
   }
 
   /** Top-k corpus neighbors by exact cosine for every query row, probing
@@ -187,6 +185,9 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
 
 object IvfIndex {
 
+  /** Cell-partitioned `assigned` (the key table) + the centroid table. */
+  private[graft] val Layout = IndexCache.Layout("assigned", Seq("centroids"))
+
   /** The frozen-quantizer delta encode shared by the in-memory
     * [[IvfIndex.append]] and the on-disk [[appendOnDisk]]: dedup the
     * delta's ids, drop zero-norm rows, and assign each vector to its
@@ -227,20 +228,8 @@ object IvfIndex {
     * NOT part of the searchable index (routing uses the centroid table). */
   case class Built(assigned: DataFrame, centroids: DataFrame,
       tombstones: Option[DataFrame] = None) {
-    /** Probe-visible rows: `assigned` minus tombstoned ids. No hint on
-      * the anti-join — the tombstone side is usually tiny (AQE broadcasts
-      * it), but a long-uncompacted store can grow it past broadcast size
-      * and the join must still plan. */
-    def live: DataFrame =
-      tombstones.fold(assigned)(t => assigned.join(t, Seq("id"), "left_anti"))
-
-    /** Dead fraction — the compaction trigger signal. */
-    def tombstoneFraction: Double = tombstones match {
-      case None => 0.0
-      case Some(t) =>
-        val total = assigned.count()
-        if (total == 0) 0.0 else t.count().toDouble / total
-    }
+    /** Probe-visible rows: `assigned` minus tombstoned ids. */
+    def live: DataFrame = IndexCache.live(assigned, tombstones)
   }
 
   /** Fold tombstones into the cell table (materialized via the caller's
@@ -288,24 +277,13 @@ object IvfIndex {
       .parquet(s"$path/assigned")
     built.centroids.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/centroids")
-    built.tombstones.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/tombstones"))
-  }
-
-  private[graft] def loadOptional(spark: SparkSession, dir: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      Some(schema.fold(spark.read)(spark.read.schema).parquet(dir))
-    else None
+    IndexCache.writeTombstones(built.tombstones, path)
   }
 
   def load(spark: SparkSession, path: String): Built =
     Built(spark.read.parquet(s"$path/assigned"),
       spark.read.parquet(s"$path/centroids"),
-      loadOptional(spark, s"$path/tombstones"))
+      IndexCache.readTombstones(spark, path))
 
   /**
    * Per-cell on-disk compaction of a PUBLISHED index: rewrite ONLY the
@@ -313,38 +291,27 @@ object IvfIndex {
    * overwrite — untouched cells keep their files byte-for-byte), then
    * drop the sidecar. The 100 TB discipline: a delete wave that hits 3 of
    * 1024 cells rewrites 3 cell directories, not the corpus, and never
-   * re-runs KMeans. No-op below `minDeadFraction`.
+   * re-runs KMeans. No-op below `minDeadFraction` of reclaimable rows
+   * ([[IndexCache.compactOnDisk]]).
    */
   def compactOnDisk(spark: SparkSession, path: String,
       minDeadFraction: Double = 0.0): Unit = {
     val built = load(spark, path)
-    if (built.tombstones.isEmpty) return
-    // gate on the RECLAIMABLE fraction (sidecar ids actually present in
-    // the cell table — the same semi-join statsRows reports as the
-    // cadence trigger signal), not the raw sidecar count: a sidecar can
-    // hold never-indexed ids (deletes of zero-norm or never-dumped rows),
-    // and the number an operator reads must be the number the gate
-    // applies (ADVICE r14).
-    if (minDeadFraction > 0.0) {
-      val total = built.assigned.count()
-      val reclaimable = built.assigned
-        .join(built.tombstones.get, Seq("id"), "left_semi").count()
-      if (total == 0 || reclaimable.toDouble / total < minDeadFraction) return
+    IndexCache.compactOnDisk(spark, path, built.assigned, built.tombstones,
+        minDeadFraction) { dead =>
+      val affected = built.assigned.join(dead, Seq("id"), "left_semi")
+        .select("cell").distinct().collect().map(_.get(0))
+      compactPartitions(spark, s"$path/assigned", "cell", affected,
+        built.live.filter(col("cell").isin(affected.toIndexedSeq: _*)))
+      // the metadata-carrying `augmented` sidecar (written by
+      // AnnIndexRegistry.register for filtered kNN) still holds the
+      // now-compacted dead rows, and with the tombstone sidecar gone they
+      // would resurface through the filtered rewrite — drop it; the next
+      // register() re-materializes it from the compacted cell table, and
+      // until then filtered plans gracefully keep their exact scan.
+      val aug = new org.apache.hadoop.fs.Path(s"$path/augmented")
+      aug.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(aug, true)
     }
-    val affected = built.assigned.join(built.tombstones.get, Seq("id"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0))
-    compactPartitions(spark, s"$path/assigned", "cell", affected,
-      built.live.filter(col("cell").isin(affected.toIndexedSeq: _*)))
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
-    // the metadata-carrying `augmented` sidecar (written by
-    // AnnIndexRegistry.register for filtered kNN) still holds the
-    // now-compacted dead rows, and with the tombstone sidecar gone they
-    // would resurface through the filtered rewrite — drop it; the next
-    // register() re-materializes it from the compacted cell table, and
-    // until then filtered plans gracefully keep their exact scan.
-    val aug = new org.apache.hadoop.fs.Path(s"$path/augmented")
-    aug.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(aug, true)
   }
 
   /** The shared per-partition compaction step (used by [[compactOnDisk]]
@@ -419,110 +386,30 @@ object IvfIndex {
       idCol: String,
       embCol: String,
       cacheRoot: String = IndexCache.DefaultIvfRoot): String =
-    IndexCache.openOrBuildIncremental(sourcePath, ivf.fingerprint,
-      cacheRoot, "assigned/_SUCCESS") { staging =>
+    // a grown source encodes ONLY the new files against the frozen
+    // centroids — no KMeans fit on either grow form
+    IndexCache.openOrGrow(spark, sourcePath, ivf.fingerprint, cacheRoot,
+      Layout) { staging =>
       save(ivf.build(spark, spark.read.parquet(sourcePath), idCol, embCol), staging)
-    } { (published, newFiles, staging) =>
-      // source grew: encode ONLY the new files against the frozen
-      // centroids — no KMeans fit anywhere on this path. The hardlink
-      // fast path also avoids rewriting the corpus-sized cell table
-      // (O(delta) files written); overlapping ids (LWW) fall back to
-      // the rewrite form below. basePath: newFiles are LEAF files, and a
-      // hive-partitioned corpus keeps its partition columns only in the
-      // directory structure — without the base path a partition-column
-      // id would vanish from the delta's schema and the grow path would
-      // throw where it used to full-rebuild (ADVICE r15).
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
-      if (!appendOnDisk(spark, published, delta, idCol, embCol, staging))
-        save(ivf.append(load(spark, published), delta, idCol, embCol), staging)
-    }
+    }((published, delta, staging) =>
+        appendOnDisk(spark, published, delta, idCol, embCol, staging),
+      (published, delta, staging) =>
+        save(ivf.append(load(spark, published), delta, idCol, embCol), staging))
 
-  /**
-   * The O(delta) artifact refresh (r15): grow a PUBLISHED index into
-   * `staging` by HARDLINKING every existing data file (assigned cell
-   * dirs, centroid table, tombstone sidecar) and appending ONLY the
-   * delta's encoded rows as new files in their cell directories — no
-   * shuffle of existing rows, no corpus-sized write. Before this, the
-   * append path skipped the KMeans re-fit but still re-shuffled and
-   * re-wrote the whole cell table per refresh — an O(corpus) IO bill at
-   * ingest cadence. [[IvfIndex.append]]'s rewrite form stays the
-   * semantic fallback: links cannot express LWW row replacement, so the
-   * fast path applies IFF the delta's ids are disjoint from the
-   * published table AND its tombstones (the store's insert-only refresh
-   * shape — its update and re-add waves full-dump upstream). Returns
-   * false (staging removed) when the overlap probe fails or the
-   * filesystem refuses links; the caller rewrites. At cluster scale the
-   * same shape is a metadata-only manifest commit (new files
-   * registered, existing files reused); the local hardlink is that
-   * commit's single-node spelling — and deleting either artifact dir
-   * later only unlinks names, never bytes the sibling still reads.
-   * Old-artifact CONTRACT sidecars (nprobe calibration, registration
-   * record, cache manifest) are deliberately not linked: the grown
-   * artifact recalibrates and re-registers.
-   */
+  /** The O(delta) refresh ([[IndexCache.linkAppend]]): hardlink the
+    * published cell dirs, centroid table and sidecar into `staging` and
+    * append ONLY the delta's frozen-centroid assignments as new files in
+    * their cell directories — no shuffle of existing rows, no
+    * corpus-sized write. [[IvfIndex.append]]'s rewrite form stays the
+    * LWW fallback (false on overlap or a link-refusing filesystem). */
   private[graft] def appendOnDisk(spark: SparkSession, published: String,
       delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
     val centroids = spark.read.parquet(s"$published/centroids")
     val d = assignDelta(centroids, delta, idCol, embCol).localCheckpoint()
-    val deltaIds = d.select("id")
-    val overlapsBase = spark.read.parquet(s"$published/assigned")
-      .select("id").join(deltaIds, Seq("id"), "left_semi")
-      .limit(1).count() > 0
-    if (overlapsBase) return false
-    val overlapsDead = loadOptional(spark, s"$published/tombstones")
-      .exists(_.select("id").join(deltaIds, Seq("id"), "left_semi")
-        .limit(1).count() > 0)
-    if (overlapsDead) return false
-    if (!linkArtifactTables(published, staging,
-        Seq("assigned", "centroids", "tombstones"))) return false
-    if (!d.isEmpty)
-      d.write.mode("append").partitionBy("cell").parquet(s"$staging/assigned")
-    true
-  }
-
-  /** The shared link phase of every family's [[appendOnDisk]]: hardlink
-    * each existing table dir of `published` into `staging` and write a
-    * FRESH (unshared) success marker per table — a linked marker would
-    * share its inode with the still-served old artifact, and the delta
-    * write job rewrites `_SUCCESS` in place. False (staging removed) on
-    * a link-refusing filesystem; the caller falls back to the rewrite
-    * form. */
-  private[ml] def linkArtifactTables(published: String, staging: String,
-      tables: Seq[String]): Boolean =
-    try {
-      tables.foreach { sub =>
-        val from = new java.io.File(published, sub)
-        if (from.isDirectory) {
-          val to = new java.io.File(new java.io.File(staging), sub)
-          linkTree(from, to)
-          java.nio.file.Files.write(
-            new java.io.File(to, "_SUCCESS").toPath, Array.emptyByteArray)
-        }
-      }
-      true
-    } catch {
-      case _: Exception =>
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(del)); f.delete()
-        }
-        del(new java.io.File(staging))
-        false
-    }
-
-  /** Hardlink every VISIBLE file of `from` into `to`, recursing into
-    * partition subdirectories; `_`-markers and `.`-checksum sidecars are
-    * skipped (the new artifact writes its own — a linked marker/crc
-    * would share an inode with the old artifact's, and Hadoop's local
-    * FS rewrites both in place). */
-  private def linkTree(from: java.io.File, to: java.io.File): Unit = {
-    to.mkdirs()
-    Option(from.listFiles()).toSeq.flatten.foreach { f =>
-      if (f.isDirectory) linkTree(f, new java.io.File(to, f.getName))
-      else if (!f.getName.startsWith("_") && !f.getName.startsWith("."))
-        java.nio.file.Files.createLink(
-          new java.io.File(to, f.getName).toPath, f.toPath)
+    IndexCache.linkAppend(spark, published, staging, Layout, d.select("id")) { st =>
+      if (!d.isEmpty)
+        d.write.mode("append").partitionBy("cell").parquet(s"$st/assigned")
     }
   }
 }

@@ -73,17 +73,16 @@ class IvfPqIndex(val nCentroids: Int = 8, val nProbe: Int = 5,
         .unionByName(PqIndex.withBucket(
           codedDelta.select(col("id"), col("emb")))),
       built.centroids, built.codebooks,
-      built.tombstones.map(_.join(deltaIds, Seq("id"), "left_anti")))
+      IndexCache.revive(built.tombstones, deltaIds))
   }
 
   /** Delete by id via the tombstone sidecar — same contract as
     * [[IvfIndex.delete]] / [[PqIndex.delete]]: O(|batch|), no fit. */
   def delete(built: IvfPqIndex.Built, ids: DataFrame,
       idCol: String): IvfPqIndex.Built = {
-    val dead = ids.select(col(idCol).as("id")).distinct()
     IvfPqIndex.Built(built.codedCell, built.embById, built.centroids,
-      built.codebooks,
-      Some(built.tombstones.fold(dead)(t => t.unionByName(dead).distinct())))
+      built.codebooks, Some(IndexCache.withTombstones(built.tombstones,
+        ids.select(col(idCol).as("id")))))
   }
 
   /** Top-k corpus neighbors by exact cosine: nProbe cells per query, ADC
@@ -142,6 +141,12 @@ class IvfPqIndex(val nCentroids: Int = 8, val nProbe: Int = 5,
 
 object IvfPqIndex {
 
+  /** Cell-partitioned `codedCell` (the key table), bucket-partitioned
+    * `embById`, the centroid and codebook tables, and — for a
+    * surrogate-keyed artifact only — the bucket-partitioned `idMap`. */
+  private[graft] val Layout = IndexCache.Layout("codedCell",
+    Seq("embById", "centroids", "codebooks", "idMap"))
+
   /** A built composite index: cell-keyed code table, id-bucketed
     * embedding fetch table, centroid routing table, PQ codebooks, and
     * an optional id-tombstone sidecar filtered out of the probed-cell
@@ -149,8 +154,7 @@ object IvfPqIndex {
   case class Built(codedCell: DataFrame, embById: DataFrame,
       centroids: DataFrame, codebooks: DataFrame,
       tombstones: Option[DataFrame] = None) {
-    def liveCodedCell: DataFrame =
-      tombstones.fold(codedCell)(t => codedCell.join(t, Seq("id"), "left_anti"))
+    def liveCodedCell: DataFrame = IndexCache.live(codedCell, tombstones)
   }
 
   /** Persist: codes partitioned by cell (probe prunes to cell dirs),
@@ -165,8 +169,7 @@ object IvfPqIndex {
       .parquet(s"$path/centroids")
     built.codebooks.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/codebooks")
-    built.tombstones.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/tombstones"))
+    IndexCache.writeTombstones(built.tombstones, path)
   }
 
   def load(spark: SparkSession, path: String): Built =
@@ -177,7 +180,7 @@ object IvfPqIndex {
         .select(col("bucket").cast("int").as("bucket"), col("id"), col("emb")),
       spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebooks"),
-      IvfIndex.loadOptional(spark, s"$path/tombstones"))
+      IndexCache.readTombstones(spark, path))
 
   /**
    * Per-cell/per-bucket on-disk compaction of a PUBLISHED composite
@@ -189,7 +192,7 @@ object IvfPqIndex {
    * Neither quantizer re-runs: deletes never move a surviving row's cell
    * or codes. A delete wave hitting 3 of 1024 cells rewrites 3 cell dirs
    * plus the dead ids' fetch buckets, not the corpus. No-op below
-   * `minDeadFraction` (dead rows / coded rows).
+   * `minDeadFraction` of reclaimable rows ([[IndexCache.compactOnDisk]]).
    *
    * The sidecar's ids are in the ARTIFACT's own key domain — xxhash64
    * surrogates for an [[openOrBuildPathAnyId]] artifact (whose published
@@ -199,33 +202,24 @@ object IvfPqIndex {
   def compactOnDisk(spark: SparkSession, path: String,
       minDeadFraction: Double = 0.0): Unit = {
     val built = load(spark, path)
-    val dead = built.tombstones.getOrElse(return)
-    // reclaimable (semi-join against the coded table) rather than raw
-    // sidecar count — the sidecar may hold never-indexed ids, and the
-    // gate must share statsRows' trigger-signal definition (ADVICE r14)
-    if (minDeadFraction > 0.0) {
-      val total = built.codedCell.count()
-      val reclaimable = built.codedCell.join(dead, Seq("id"), "left_semi")
-        .count()
-      if (total == 0 || reclaimable.toDouble / total < minDeadFraction) return
+    IndexCache.compactOnDisk(spark, path, built.codedCell, built.tombstones,
+        minDeadFraction) { dead =>
+      val affectedCells = built.codedCell.join(dead, Seq("id"), "left_semi")
+        .select("cell").distinct().collect().map(_.get(0))
+      IvfIndex.compactPartitions(spark, s"$path/codedCell", "cell",
+        affectedCells,
+        built.liveCodedCell.filter(col("cell").isin(affectedCells.toIndexedSeq: _*)))
+      val affectedBuckets =
+        PqIndex.compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
+      IndexCache.loadOptional(spark, s"$path/idMap").foreach { idMap =>
+        IvfIndex.compactPartitions(spark, s"$path/idMap", "bucket",
+          affectedBuckets,
+          idMap.select(col("bucket").cast("int").as("bucket"), col("sid"),
+              col("id"))
+            .filter(col("bucket").isin(affectedBuckets: _*))
+            .join(dead.select(col("id").as("sid")), Seq("sid"), "left_anti"))
+      }
     }
-    val affectedCells = built.codedCell.join(dead, Seq("id"), "left_semi")
-      .select("cell").distinct().collect().map(_.get(0))
-    IvfIndex.compactPartitions(spark, s"$path/codedCell", "cell",
-      affectedCells,
-      built.liveCodedCell.filter(col("cell").isin(affectedCells.toIndexedSeq: _*)))
-    val affectedBuckets =
-      PqIndex.compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
-    IvfIndex.loadOptional(spark, s"$path/idMap").foreach { idMap =>
-      IvfIndex.compactPartitions(spark, s"$path/idMap", "bucket",
-        affectedBuckets,
-        idMap.select(col("bucket").cast("int").as("bucket"), col("sid"),
-            col("id"))
-          .filter(col("bucket").isin(affectedBuckets: _*))
-          .join(dead.select(col("id").as("sid")), Seq("sid"), "left_anti"))
-    }
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
   }
 
   /** Index lifecycle: load the prebuilt index for `sourcePath`, else
@@ -251,34 +245,17 @@ object IvfPqIndex {
       idCol: String,
       embCol: String,
       cacheRoot: String = IndexCache.DefaultIvfPqRoot): String =
-    IndexCache.openOrBuildIncremental(sourcePath, ivfpq.fingerprint,
-      cacheRoot, "codedCell/_SUCCESS") { staging =>
+    IndexCache.openOrGrow(spark, sourcePath, ivfpq.fingerprint, cacheRoot,
+      Layout) { staging =>
       save(ivfpq.build(spark, spark.read.parquet(sourcePath), idCol, embCol),
         staging)
-    } { (published, newFiles, staging) =>
-      // basePath keeps hive partition columns visible in the leaf-file
-      // delta read (ADVICE r15; see IvfIndex.openOrBuildPath)
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
-      if (!appendOnDisk(spark, ivfpq, published, delta, idCol, embCol,
-          staging, idMapDelta = None))
+    }((published, delta, staging) =>
+        appendOnDisk(spark, ivfpq, published, delta, idCol, embCol, staging,
+          idMapDelta = None),
+      (published, delta, staging) =>
         save(ivfpq.append(load(spark, published), delta, idCol, embCol),
-          staging)
-    }
+          staging))
 
-  /**
-   * The composite-index analog of [[IvfIndex.appendOnDisk]] (r15):
-   * grow a PUBLISHED IVF-PQ artifact into `staging` by hardlinking
-   * every existing data file (codedCell cell dirs, embById/idMap
-   * buckets, centroid + codebook tables, tombstones) and appending
-   * ONLY the delta's encoded rows — both quantizers frozen AND no
-   * corpus-sized rewrite of any table. Applies IFF the delta's ids are
-   * disjoint from the published code table, its tombstones, and the
-   * idMap when one exists (LWW replacement needs the rewrite form);
-   * false (staging removed) on overlap or a link-refusing filesystem.
-   * `idMapDelta` is the surrogate path's (bucket, sid, id) rows for
-   * the delta; None for long-keyed corpora.
-   */
   /** Frozen-centroid cell routing of a prepared delta ((id, unit) rows)
     * — the assignment metric and tie-break live HERE once, shared by the
     * in-memory [[IvfPqIndex.append]] and the on-disk [[appendOnDisk]]
@@ -297,55 +274,48 @@ object IvfPqIndex {
       .select(col("id"), element_at(col("best.id"), 1).cast("int").as("cell"))
   }
 
+  /** The composite-index O(delta) refresh ([[IndexCache.linkAppend]]):
+    * hardlink every published table (codedCell cell dirs, embById/idMap
+    * buckets, centroid + codebook tables, sidecar) into `staging` and
+    * append ONLY the delta's encoded rows — both quantizers frozen AND
+    * no corpus-sized rewrite of any table. A surrogate-keyed artifact
+    * also needs the delta's keys disjoint from its `idMap`;
+    * `idMapDelta` is that path's (bucket, sid, id) rows for the delta,
+    * None for long-keyed corpora. */
   private[graft] def appendOnDisk(spark: SparkSession, ivfpq: IvfPqIndex,
       published: String, delta: DataFrame, idCol: String, embCol: String,
       staging: String, idMapDelta: Option[DataFrame]): Boolean = {
     val prepared = IvfIndex.dedupDeltaIds(
       ivfpq.pq.prepare(delta, idCol, embCol)).localCheckpoint()
     val deltaIds = prepared.select("id")
-    def overlaps(df: DataFrame, keyCol: String): Boolean =
-      df.select(col(keyCol).as("id")).join(deltaIds, Seq("id"), "left_semi")
-        .limit(1).count() > 0
-    if (overlaps(spark.read.parquet(s"$published/codedCell"), "id"))
+    val idMap = IndexCache.loadOptional(spark, s"$published/idMap")
+    // probe with ALL delta sids, not just the positive-norm ones
+    // `prepared` keeps: the idMap records every key (zero-norm rows
+    // included, matching the build), so a zero-norm re-upsert of an
+    // existing key would otherwise slip past and append a duplicate
+    // (bucket, sid, id) row — one id in two top-k slots after the
+    // restore join
+    if (idMap.exists(m => IndexCache.overlaps(m.select(col("sid").as("id")),
+        idMapDelta.fold(deltaIds)(_.select(col("sid").as("id"))))))
       return false
-    if (IvfIndex.loadOptional(spark, s"$published/tombstones")
-        .exists(overlaps(_, "id"))) return false
-    val hasIdMap = new java.io.File(s"$published/idMap/_SUCCESS").isFile
-    if (hasIdMap) {
-      // probe with ALL delta sids, not just the positive-norm ones
-      // `prepared` keeps: the idMap records every key (zero-norm rows
-      // included, matching the build), so a zero-norm re-upsert of an
-      // existing key would otherwise slip past and append a duplicate
-      // (bucket, sid, id) row — one id in two top-k slots after the
-      // restore join
-      val allDeltaSids = idMapDelta
-        .map(_.select(col("sid").as("id")))
-        .getOrElse(deltaIds)
-      val hit = spark.read.parquet(s"$published/idMap")
-        .select(col("sid").as("id"))
-        .join(allDeltaSids, Seq("id"), "left_semi").limit(1).count() > 0
-      if (hit) return false
+    IndexCache.linkAppend(spark, published, staging, Layout, deltaIds) { st =>
+      if (!prepared.isEmpty) {
+        val codebooks = spark.read.parquet(s"$published/codebooks")
+        val centroids = spark.read.parquet(s"$published/centroids")
+        val codedDelta = ivfpq.pq.encodeWith(spark, prepared,
+          ivfpq.pq.codebookArray(codebooks)).localCheckpoint()
+        val cellDelta = routeCells(prepared, centroids)
+        codedDelta.select(col("id"), col("codes"))
+          .join(cellDelta, "id")
+          .write.mode("append").partitionBy("cell")
+          .parquet(s"$st/codedCell")
+        PqIndex.withBucket(codedDelta.select(col("id"), col("emb")))
+          .write.mode("append").partitionBy("bucket")
+          .parquet(s"$st/embById")
+      }
+      idMapDelta.filter(_ => idMap.isDefined).foreach(
+        _.write.mode("append").partitionBy("bucket").parquet(s"$st/idMap"))
     }
-    if (!IvfIndex.linkArtifactTables(published, staging,
-        Seq("codedCell", "embById", "centroids", "codebooks", "tombstones") ++
-          (if (hasIdMap) Seq("idMap") else Nil))) return false
-    if (!prepared.isEmpty) {
-      val codebooks = spark.read.parquet(s"$published/codebooks")
-      val centroids = spark.read.parquet(s"$published/centroids")
-      val codedDelta = ivfpq.pq.encodeWith(spark, prepared,
-        ivfpq.pq.codebookArray(codebooks)).localCheckpoint()
-      val cellDelta = routeCells(prepared, centroids)
-      codedDelta.select(col("id"), col("codes"))
-        .join(cellDelta, "id")
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$staging/codedCell")
-      PqIndex.withBucket(codedDelta.select(col("id"), col("emb")))
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$staging/embById")
-    }
-    idMapDelta.filter(_ => hasIdMap).foreach(
-      _.write.mode("append").partitionBy("bucket").parquet(s"$staging/idMap"))
-    true
   }
 
   /**
@@ -389,21 +359,16 @@ object IvfPqIndex {
         .distinct()
     // "-sid" keeps a surrogate-keyed artifact from ever colliding with a
     // long-keyed one in the shared cache root
-    IndexCache.openOrBuildIncremental(sourcePath, ivfpq.fingerprint + "-sid",
-      cacheRoot, "codedCell/_SUCCESS") { staging =>
+    IndexCache.openOrGrow(spark, sourcePath, ivfpq.fingerprint + "-sid",
+      cacheRoot, Layout) { staging =>
       val corpus = spark.read.parquet(sourcePath)
       save(ivfpq.build(spark, surrogate(corpus), "sid", embCol), staging)
       idMapOf(corpus).write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$staging/idMap")
-    } { (published, newFiles, staging) =>
-      // basePath keeps hive partition columns visible in the leaf-file
-      // delta read (ADVICE r15; see IvfIndex.openOrBuildPath)
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
-      // O(delta) fast path for disjoint surrogate ids (incl. the idMap
-      // check); the rewrite form below stays the LWW fallback
-      if (!appendOnDisk(spark, ivfpq, published, surrogate(delta), "sid",
-          embCol, staging, idMapDelta = Some(idMapOf(delta)))) {
+    }((published, delta, staging) =>
+        appendOnDisk(spark, ivfpq, published, surrogate(delta), "sid",
+          embCol, staging, idMapDelta = Some(idMapOf(delta))),
+      (published, delta, staging) => {
         save(ivfpq.append(load(spark, published), surrogate(delta),
           "sid", embCol), staging)
         // LWW on re-upserted ids within the map, same as the index tables
@@ -413,7 +378,6 @@ object IvfPqIndex {
           .unionByName(deltaMap)
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$staging/idMap")
-      }
-    }
+      })
   }
 }

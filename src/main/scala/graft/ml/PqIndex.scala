@@ -197,16 +197,15 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
       built.embById.join(deltaIds, Seq("id"), "left_anti")
         .unionByName(PqIndex.withBucket(codedDelta.select(col("id"), col("emb")))),
       built.codebooks,
-      built.tombstones.map(_.join(deltaIds, Seq("id"), "left_anti")))
+      IndexCache.revive(built.tombstones, deltaIds))
   }
 
   /** Delete by id via the tombstone sidecar — O(|batch|), no re-encode,
     * none of the m KMeans fits; [[search]] filters the code scan. Same
     * contract as [[IvfIndex.delete]]. */
   def delete(built: PqIndex.Built, ids: DataFrame, idCol: String): PqIndex.Built = {
-    val dead = ids.select(col(idCol).as("id")).distinct()
-    PqIndex.Built(built.coded, built.embById, built.codebooks,
-      Some(built.tombstones.fold(dead)(t => t.unionByName(dead).distinct())))
+    PqIndex.Built(built.coded, built.embById, built.codebooks, Some(
+      IndexCache.withTombstones(built.tombstones, ids.select(col(idCol).as("id")))))
   }
 
   /** Exact-cosine top-k per query via ADC shortlist + exact re-rank.
@@ -294,6 +293,11 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
 
 object PqIndex {
 
+  /** Flat `coded` (the key table), bucket-partitioned `embById`, and the
+    * codebooks. */
+  private[graft] val Layout =
+    IndexCache.Layout("coded", Seq("embById", "codebooks"))
+
   /** Hash-bucket fan-out of the embedding fetch table. Sized so a
     * shortlist's buckets are a small fraction of the corpus partitions
     * at scale; at bench scale the per-bucket files are tiny either way. */
@@ -349,8 +353,7 @@ object PqIndex {
   case class Built(coded: DataFrame, embById: DataFrame, codebooks: DataFrame,
       tombstones: Option[DataFrame] = None) {
     /** ADC-scannable rows: `coded` minus tombstoned ids. */
-    def liveCoded: DataFrame =
-      tombstones.fold(coded)(t => coded.join(t, Seq("id"), "left_anti"))
+    def liveCoded: DataFrame = IndexCache.live(coded, tombstones)
   }
 
   /** Persist a built index. The embedding table is written PARTITIONED
@@ -362,8 +365,7 @@ object PqIndex {
     built.embById.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/embById")
     built.codebooks.coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    built.tombstones.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/tombstones"))
+    IndexCache.writeTombstones(built.tombstones, path)
   }
 
   def load(spark: SparkSession, path: String): Built =
@@ -371,7 +373,7 @@ object PqIndex {
       spark.read.parquet(s"$path/embById")
         .select(col("bucket").cast("int").as("bucket"), col("id"), col("emb")),
       spark.read.parquet(s"$path/codebooks"),
-      IvfIndex.loadOptional(spark, s"$path/tombstones"))
+      IndexCache.readTombstones(spark, path))
 
   /**
    * On-disk compaction of a PUBLISHED flat-PQ index: fold the tombstone
@@ -382,23 +384,20 @@ object PqIndex {
    * indexes, and this is the explicit maintenance job, not a query
    * path); the id-bucketed `embById` fetch table rewrites ONLY the dead
    * ids' buckets, exactly like the composite index's. No quantizer
-   * re-runs. No-op below `minDeadFraction` (dead rows / coded rows).
+   * re-runs. No-op below `minDeadFraction` of reclaimable rows
+   * ([[IndexCache.compactOnDisk]]).
    */
   def compactOnDisk(spark: SparkSession, path: String,
       minDeadFraction: Double = 0.0): Unit = {
     val built = load(spark, path)
-    val dead = built.tombstones.getOrElse(return)
-    if (minDeadFraction > 0.0) {
-      val total = built.coded.count()
-      if (total == 0 || dead.count().toDouble / total < minDeadFraction) return
+    IndexCache.compactOnDisk(spark, path, built.coded, built.tombstones,
+        minDeadFraction) { dead =>
+      // flat table: materialize the survivors, then overwrite in place
+      // (the write would otherwise read the directory it is replacing)
+      built.liveCoded.localCheckpoint()
+        .write.mode("overwrite").parquet(s"$path/coded")
+      compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
     }
-    // flat table: materialize the survivors, then overwrite in place
-    // (the write would otherwise read the directory it is replacing)
-    built.liveCoded.localCheckpoint()
-      .write.mode("overwrite").parquet(s"$path/coded")
-    compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
   }
 
   /** Load the prebuilt code table for `sourcePath` or build + publish it
@@ -410,56 +409,40 @@ object PqIndex {
       sourcePath: String,
       idCol: String,
       embCol: String,
-      cacheRoot: String = sys.props("java.io.tmpdir") + "/graft-pq"): Built = {
-    val path = IndexCache.openOrBuildIncremental(sourcePath, pq.fingerprint,
-      cacheRoot, "coded/_SUCCESS") { staging =>
+      cacheRoot: String = IndexCache.DefaultPqRoot): Built = {
+    // a grown source encodes ONLY the new files against the frozen
+    // codebooks — none of the m KMeans fits run on either grow form
+    val path = IndexCache.openOrGrow(spark, sourcePath, pq.fingerprint,
+      cacheRoot, Layout) { staging =>
       save(pq.build(spark, spark.read.parquet(sourcePath), idCol, embCol), staging)
-    } { (published, newFiles, staging) =>
-      // source grew: encode ONLY the new files against the frozen
-      // codebooks — none of the m KMeans fits run on this path; a
-      // disjoint-id delta also skips the corpus-sized table rewrite
-      // (hardlink append), overlaps take the LWW rewrite form. basePath
-      // keeps hive partition columns visible in the leaf-file delta
-      // read (ADVICE r15; see IvfIndex.openOrBuildPath)
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
-      if (!appendOnDisk(spark, pq, published, delta, idCol, embCol, staging))
-        save(pq.append(load(spark, published), delta, idCol, embCol), staging)
-    }
+    }((published, delta, staging) =>
+        appendOnDisk(spark, pq, published, delta, idCol, embCol, staging),
+      (published, delta, staging) =>
+        save(pq.append(load(spark, published), delta, idCol, embCol), staging))
     load(spark, path)
   }
 
-  /** The flat-PQ analog of [[IvfIndex.appendOnDisk]] (r15): hardlink the
-    * published code/fetch/codebook/tombstone files into `staging` and
-    * append ONLY the delta's encoded rows — O(delta) files written per
-    * refresh, both the 32×-compressed code table and the bucketed fetch
-    * table extended, never rewritten. Disjoint-id deltas only (LWW
-    * replacement falls back to the rewrite form); false on overlap or a
-    * link-refusing filesystem. */
+  /** The flat-PQ O(delta) refresh ([[IndexCache.linkAppend]]): hardlink
+    * the published code/fetch/codebook/sidecar files into `staging` and
+    * append ONLY the delta's encoded rows — both the 32×-compressed code
+    * table and the bucketed fetch table extend, never rewrite. */
   private[graft] def appendOnDisk(spark: SparkSession, pq: PqIndex,
       published: String, delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
     val prepared = IvfIndex.dedupDeltaIds(
       pq.prepare(delta, idCol, embCol)).localCheckpoint()
-    val deltaIds = prepared.select("id")
-    if (spark.read.parquet(s"$published/coded").select("id")
-        .join(deltaIds, Seq("id"), "left_semi").limit(1).count() > 0)
-      return false
-    if (IvfIndex.loadOptional(spark, s"$published/tombstones")
-        .exists(_.select("id").join(deltaIds, Seq("id"), "left_semi")
-          .limit(1).count() > 0)) return false
-    if (!IvfIndex.linkArtifactTables(published, staging,
-        Seq("coded", "embById", "codebooks", "tombstones"))) return false
-    if (!prepared.isEmpty) {
-      val codedDelta = pq.encodeWith(spark, prepared,
-        pq.codebookArray(spark.read.parquet(s"$published/codebooks")))
-        .localCheckpoint()
-      codedDelta.select(col("id"), col("codes"))
-        .write.mode("append").parquet(s"$staging/coded")
-      withBucket(codedDelta.select(col("id"), col("emb")))
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$staging/embById")
+    IndexCache.linkAppend(spark, published, staging, Layout,
+        prepared.select("id")) { st =>
+      if (!prepared.isEmpty) {
+        val codedDelta = pq.encodeWith(spark, prepared,
+          pq.codebookArray(spark.read.parquet(s"$published/codebooks")))
+          .localCheckpoint()
+        codedDelta.select(col("id"), col("codes"))
+          .write.mode("append").parquet(s"$st/coded")
+        withBucket(codedDelta.select(col("id"), col("emb")))
+          .write.mode("append").partitionBy("bucket")
+          .parquet(s"$st/embById")
+      }
     }
-    true
   }
 }

@@ -35,7 +35,10 @@ import org.apache.spark.sql.functions._
  */
 object SignIndex {
 
-  private val fingerprint = "sign-v1"
+  private[ml] val fingerprint = "sign-v1"
+
+  /** Flat `signs` (the key table) + bucket-partitioned `embById`. */
+  private[graft] val Layout = IndexCache.Layout("signs", Seq("embById"))
 
   /** The persisted pair: the 16-byte/row signature table the shortlist
     * scan streams, and the id-bucketed embedding fetch table the exact
@@ -48,8 +51,7 @@ object SignIndex {
     /** Shortlist-scannable rows: `signs` minus tombstoned ids (filtered
       * BEFORE the Hamming top-S, so a dead row can never occupy a
       * shortlist slot and truncate the re-ranked result). */
-    def liveSigns: DataFrame =
-      tombstones.fold(signs)(t => signs.join(t, Seq("id"), "left_anti"))
+    def liveSigns: DataFrame = IndexCache.live(signs, tombstones)
   }
 
   def build(src: DataFrame, idCol: String, embCol: String): Built = {
@@ -64,15 +66,14 @@ object SignIndex {
     built.signs.write.mode("overwrite").parquet(s"$path/signs")
     built.embById.write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/embById")
-    built.tombstones.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/tombstones"))
+    IndexCache.writeTombstones(built.tombstones, path)
   }
 
   def load(spark: SparkSession, path: String): Built =
     Built(spark.read.parquet(s"$path/signs"),
       spark.read.parquet(s"$path/embById")
         .select(col("bucket").cast("int").as("bucket"), col("id"), col("emb")),
-      IvfIndex.loadOptional(spark, s"$path/tombstones"))
+      IndexCache.readTombstones(spark, path))
 
   /** Map-side encode of new source files onto an existing index (LWW on
     * id collisions, mirroring [[PqIndex.append]]; a re-added id also
@@ -87,15 +88,14 @@ object SignIndex {
       built.signs.join(deltaIds, Seq("id"), "left_anti").unionByName(d.signs),
       built.embById.join(deltaIds, Seq("id"), "left_anti")
         .unionByName(d.embById),
-      built.tombstones.map(_.join(deltaIds, Seq("id"), "left_anti")))
+      IndexCache.revive(built.tombstones, deltaIds))
   }
 
   /** Delete by id via the tombstone sidecar — the same O(|batch|),
     * no-re-encode contract as [[IvfIndex.delete]]/[[PqIndex.delete]]. */
   def delete(built: Built, ids: DataFrame, idCol: String): Built = {
-    val dead = ids.select(col(idCol).cast("long").as("id")).distinct()
-    Built(built.signs, built.embById,
-      Some(built.tombstones.fold(dead)(t => t.unionByName(dead).distinct())))
+    Built(built.signs, built.embById, Some(IndexCache.withTombstones(
+      built.tombstones, ids.select(col(idCol).cast("long").as("id")))))
   }
 
   /** On-disk compaction of a PUBLISHED sign index — completes
@@ -103,69 +103,53 @@ object SignIndex {
     * the flat 16-byte/row signature table is rewritten whole (it has no
     * partition structure, and is the smallest artifact any family
     * streams), the id-bucketed fetch table rewrites ONLY the dead ids'
-    * buckets, then the sidecar drops. No-op below `minDeadFraction`. */
+    * buckets, then the sidecar drops. No-op below `minDeadFraction` of
+    * reclaimable rows ([[IndexCache.compactOnDisk]]). */
   def compactOnDisk(spark: SparkSession, path: String,
       minDeadFraction: Double = 0.0): Unit = {
     val built = load(spark, path)
-    val dead = built.tombstones.getOrElse(return)
-    if (minDeadFraction > 0.0) {
-      val total = built.signs.count()
-      if (total == 0 || dead.count().toDouble / total < minDeadFraction) return
+    IndexCache.compactOnDisk(spark, path, built.signs, built.tombstones,
+        minDeadFraction) { dead =>
+      built.liveSigns.localCheckpoint()
+        .write.mode("overwrite").parquet(s"$path/signs")
+      PqIndex.compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
     }
-    built.liveSigns.localCheckpoint()
-      .write.mode("overwrite").parquet(s"$path/signs")
-    PqIndex.compactEmbBuckets(spark, s"$path/embById", built.embById, dead)
-    val t = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    t.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(t, true)
   }
 
   /** Load the persisted index for `sourcePath` or build + publish once
     * (atomic publish / staleness / grow-by-append via [[IndexCache]]). */
   def openOrBuild(spark: SparkSession, sourcePath: String, idCol: String,
       embCol: String,
-      cacheRoot: String = sys.props("java.io.tmpdir") + "/graft-sign"): Built = {
-    val path = IndexCache.openOrBuildIncremental(sourcePath, fingerprint,
-      cacheRoot, "signs/_SUCCESS") { staging =>
+      cacheRoot: String = IndexCache.DefaultSignRoot): Built = {
+    val path = IndexCache.openOrGrow(spark, sourcePath, fingerprint,
+      cacheRoot, Layout) { staging =>
       save(build(spark.read.parquet(sourcePath), idCol, embCol), staging)
-    } { (published, newFiles, staging) =>
-      // basePath keeps hive partition columns visible in the leaf-file
-      // delta read (ADVICE r15; see IvfIndex.openOrBuildPath)
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
-      if (!appendOnDisk(spark, published, delta, idCol, embCol, staging))
-        save(append(load(spark, published), delta, idCol, embCol), staging)
-    }
+    }((published, delta, staging) =>
+        appendOnDisk(spark, published, delta, idCol, embCol, staging),
+      (published, delta, staging) =>
+        save(append(load(spark, published), delta, idCol, embCol), staging))
     load(spark, path)
   }
 
-  /** The sign-family analog of [[IvfIndex.appendOnDisk]] (r15): hardlink
-    * the published signature/fetch/tombstone files into `staging` and
-    * append ONLY the delta's packed rows — the 16-byte/row signs table
-    * and the bucketed fetch table extend instead of rewriting. Disjoint
-    * ids only; false on overlap (LWW rewrite fallback) or a
-    * link-refusing filesystem. */
+  /** The sign-family O(delta) refresh ([[IndexCache.linkAppend]]):
+    * hardlink the published signature/fetch/sidecar files into `staging`
+    * and append ONLY the delta's packed rows — the 16-byte/row signs
+    * table and the bucketed fetch table extend instead of rewriting. */
   private[graft] def appendOnDisk(spark: SparkSession, published: String,
       delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
     val base = IvfIndex.dedupDeltaIds(
       delta.select(col(idCol).cast("long").as("id"), col(embCol).as("emb")))
       .localCheckpoint()
-    val deltaIds = base.select("id")
-    if (spark.read.parquet(s"$published/signs").select("id")
-        .join(deltaIds, Seq("id"), "left_semi").limit(1).count() > 0)
-      return false
-    if (IvfIndex.loadOptional(spark, s"$published/tombstones")
-        .exists(_.select("id").join(deltaIds, Seq("id"), "left_semi")
-          .limit(1).count() > 0)) return false
-    if (!IvfIndex.linkArtifactTables(published, staging,
-        Seq("signs", "embById", "tombstones"))) return false
-    if (!base.isEmpty) {
-      val d = build(base, "id", "emb")
-      d.signs.write.mode("append").parquet(s"$staging/signs")
-      d.embById.write.mode("append").partitionBy("bucket")
-        .parquet(s"$staging/embById")
+    IndexCache.linkAppend(spark, published, staging, Layout,
+        base.select("id")) { st =>
+      if (!base.isEmpty) {
+        val d = build(base, "id", "emb")
+        d.signs.write.mode("append").parquet(s"$st/signs")
+        d.embById.write.mode("append").partitionBy("bucket")
+          .parquet(s"$st/embById")
+      }
     }
-    true
   }
 
   /**

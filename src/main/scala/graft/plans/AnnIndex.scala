@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.CosineSimilarity
-import graft.ml.{IvfIndex, PqIndex}
+import graft.ml.{IndexCache, IvfIndex, IvfPqIndex, PqIndex}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -372,49 +372,46 @@ object AnnIndexRegistry {
     * compaction/GC cadence decisions read: (family, artifact path,
     * coarse geometry, PQ code shape when the family has one, live rows,
     * reclaimable tombstones, dead fraction). Tombstones are counted as
-    * rows the sidecar would actually RECLAIM from that artifact
-    * (semi-join in its own key domain) — a raw sidecar count
-    * over-reports when it holds never-indexed ids. Row counts are
-    * parquet-metadata reads. Empty for an unregistered path. Shared by
+    * rows the sidecar would actually RECLAIM from that artifact — the
+    * compaction gate's definition ([[graft.ml.IndexCache.deadStats]]).
+    * Row counts are parquet-metadata reads. Empty for an unregistered
+    * path. Shared by
     * [[graft.store.MerkonStore.indexStats]] and the `index_stats` SQL
     * procedure. */
   def statsRows(spark: SparkSession, sourcePath: String)
       : Seq[(String, String, Int, Int, Option[Int], Option[Int], Long, Long, Double)] =
     lookup(sourcePath).toSeq.flatMap { entry =>
-      def stat(family: String, path: String, table: String,
+      def stat(family: String, path: String, layout: IndexCache.Layout,
           m: Option[Int], kCodebook: Option[Int]) = {
-        val t = spark.read.parquet(s"$path/$table")
-        val total = t.count()
-        val dead = IvfIndex.loadOptional(spark, s"$path/tombstones")
-          .map(ts => t.join(ts.select(col("id")), Seq("id"), "left_semi")
-            .count())
-          .getOrElse(0L)
+        val (total, dead, frac) = IndexCache.deadStats(
+          spark.read.parquet(s"$path/${layout.keyTable}"),
+          IndexCache.readTombstones(spark, path))
         (family, path, entry.centroids.length, entry.nProbe, m, kCodebook,
-          total, dead, if (total == 0) 0.0 else dead.toDouble / total)
+          total, dead, frac)
       }
-      stat("ivf", entry.indexPath, "assigned", None, None) +:
-        entry.pq.toSeq.map(f => stat("ivfpq", f.indexPath, "codedCell",
+      stat("ivf", entry.indexPath, IvfIndex.Layout, None, None) +:
+        entry.pq.toSeq.map(f => stat("ivfpq", f.indexPath, IvfPqIndex.Layout,
           Some(f.m), Some(f.kCentroids)))
     }
 
-  /** Union `dead` into an artifact's id-tombstone sidecar (idempotent —
-    * the merge is a distinct union). Materialized before the overwrite
-    * because the union otherwise reads the directory the write is
-    * replacing. O(|sidecar| + |batch|), never touches index tables. */
-  private[graft] def mergeTombstones(spark: SparkSession, dir: String,
+  /** Deletes reach a registration's artifacts as tombstones: `dead`
+    * (ORIGINAL ids) is merged into the registered IVF artifact's sidecar
+    * and, in its own key domain, into the IVF-PQ sibling's — EACH
+    * artifact owns its deletes, so compacting one (which drops ITS
+    * sidecar) can never resurrect deleted rows on the other's serve
+    * path. */
+  private[graft] def tombstone(spark: SparkSession, entry: Entry,
       dead: DataFrame): Unit = {
-    val merged = IvfIndex.loadOptional(spark, dir)
-      .fold(dead)(t => t.unionByName(dead)).distinct()
-      .localCheckpoint()
-    merged.coalesce(1).write.mode("overwrite").parquet(dir)
+    IndexCache.mergeTombstones(spark, entry.indexPath, dead)
+    entry.pq.foreach(fam =>
+      IndexCache.mergeTombstones(spark, fam.indexPath, famDeadIds(fam, dead)))
   }
 
   /** Map registered-artifact tombstone ids into a PQ sibling's own key
     * domain: xxhash64 surrogates when the sibling artifact is
     * surrogate-keyed (detected by its published idMap, the same signal
     * the serve path uses), verbatim otherwise. */
-  private[graft] def famDeadIds(spark: SparkSession, fam: PqFamily,
-      dead: DataFrame): DataFrame =
+  private def famDeadIds(fam: PqFamily, dead: DataFrame): DataFrame =
     if (new java.io.File(s"${fam.indexPath}/idMap/_SUCCESS").isFile)
       dead.select(xxhash64(col("id")).as("id"))
     else dead.select(col("id"))
@@ -436,13 +433,11 @@ object AnnIndexRegistry {
       minDeadFraction: Double = 0.0): Unit =
     lookup(sourcePath).foreach { entry =>
       entry.pq.foreach { fam =>
-        IvfIndex.loadOptional(spark, s"${entry.indexPath}/tombstones")
-          .foreach { t =>
-            mergeTombstones(spark, s"${fam.indexPath}/tombstones",
-              famDeadIds(spark, fam, t.select(col("id"))))
-          }
-        graft.ml.IvfPqIndex.compactOnDisk(spark, fam.indexPath,
-          minDeadFraction)
+        IndexCache.readTombstones(spark, entry.indexPath).foreach { t =>
+          IndexCache.mergeTombstones(spark, fam.indexPath,
+            famDeadIds(fam, t.select(col("id"))))
+        }
+        IvfPqIndex.compactOnDisk(spark, fam.indexPath, minDeadFraction)
       }
       IvfIndex.compactOnDisk(spark, entry.indexPath, minDeadFraction)
     }
@@ -620,11 +615,11 @@ object AnnIndexRegistry {
     candidates.sortBy(-_._2).headOption match {
       case None => miss
       case Some((dir, _, r)) => scala.util.Try {
-        require(new java.io.File(dir, "assigned/_SUCCESS").isFile,
+        require(new java.io.File(dir, IvfIndex.Layout.successRel).isFile,
           s"incomplete artifact at $dir")
         val spark = SparkSession.active
         val pqFam = r.pq.flatMap { case (p, m, kc, rows) =>
-          if (!new java.io.File(s"$p/codedCell/_SUCCESS").isFile) None
+          if (!new java.io.File(p, IvfPqIndex.Layout.successRel).isFile) None
           else Some(PqFamily(p, m, kc,
             spark.read.parquet(s"$p/codebooks").collect()
               .map(row => (row.getInt(0), row.getInt(1)) ->
@@ -933,9 +928,8 @@ object AnnIndexRule extends Rule[LogicalPlan] {
     lazy val ivfLive: Option[DataFrame] =
       prunedCellScan(spark, s"${entry.indexPath}/$table", cells,
           entry.schemas.get(table)).map { scan =>
-        IvfIndex.loadOptional(spark, s"${entry.indexPath}/tombstones",
-          entry.schemas.get("tombstones"))
-          .fold(scan)(t => scan.join(t, Seq("id"), "left_anti"))
+        IndexCache.live(scan, IndexCache.readTombstones(spark,
+          entry.indexPath, entry.schemas.get("tombstones")))
       }
     val live = pqServed.orElse(ivfLive).getOrElse(return None)
     // index-table spelling of each referenced relation column
@@ -1273,7 +1267,7 @@ object AnnIndexRule extends Rule[LogicalPlan] {
     val d = unit.length / fam.m
     if (d * fam.m != unit.length ||
         !fam.codebooks.get((0, 0)).exists(_.length == d)) return None
-    if (!new java.io.File(s"${fam.indexPath}/codedCell/_SUCCESS").isFile)
+    if (!new java.io.File(fam.indexPath, IvfPqIndex.Layout.successRel).isFile)
       return None
     if (!longId &&
         !new java.io.File(s"${fam.indexPath}/idMap/_SUCCESS").isFile)
@@ -1291,22 +1285,19 @@ object AnnIndexRule extends Rule[LogicalPlan] {
     }
     val scan = prunedCellScan(spark, s"${fam.indexPath}/codedCell", cells)
       .getOrElse(return None)
-    val famLive = IvfIndex.loadOptional(spark, s"${fam.indexPath}/tombstones")
-      .fold(scan)(t => scan.join(t, Seq("id"), "left_anti"))
-    // deletes land in the REGISTERED artifact's tombstone sidecar (the
-    // store's remove path writes `${entry.indexPath}/tombstones` with
-    // ORIGINAL ids) — the codes-table serve must honor them too, and
-    // BEFORE the shortlist so a dead row can never occupy a top-k slot
-    // and truncate the backfilled result. Surrogate-keyed artifacts map
-    // the tombstoned ids into the xxhash64 domain the codes are keyed in.
-    val live = IvfIndex.loadOptional(spark, s"${ivf.indexPath}/tombstones",
-        ivf.schemas.get("tombstones"))
-      .fold(famLive) { t =>
-        val dead =
+    val famLive = IndexCache.live(scan,
+      IndexCache.readTombstones(spark, fam.indexPath))
+    // deletes land in the REGISTERED artifact's tombstone sidecar too
+    // (the store's remove path writes it with ORIGINAL ids) — the
+    // codes-table serve must honor them, and BEFORE the shortlist so a
+    // dead row can never occupy a top-k slot and truncate the backfilled
+    // result. Surrogate-keyed artifacts map the tombstoned ids into the
+    // xxhash64 domain the codes are keyed in.
+    val live = IndexCache.live(famLive,
+      IndexCache.readTombstones(spark, ivf.indexPath, ivf.schemas.get("tombstones"))
+        .map(t =>
           if (longId) t.select(col("id"))
-          else t.select(xxhash64(col("id")).as("id"))
-        famLive.join(dead, Seq("id"), "left_anti")
-      }
+          else t.select(xxhash64(col("id")).as("id"))))
     val adc = (0 until fam.m).map(sub =>
       element_at(lit(tab), lit(sub * fam.kCentroids) +
         element_at(col("codes"), sub + 1) + 1)).reduce(_ + _)

@@ -311,18 +311,18 @@ object MerkonCatalog {
 
   /** `gc_index_cache(cache_root, older_than_ms)`: reclaim unreachable
     * artifacts ([[graft.ml.IndexCache.gc]]); one row per removed dir.
-    * An EMPTY `cache_root` means "the default roots" — both the IVF and
-    * the IVF-PQ sibling caches `build_index` publishes into; without
-    * this the pure-SQL lifecycle could never bound the sibling root,
-    * whose location is a Scala-API default the SQL user has no surface
-    * for. Artifacts a live registration in THIS session still references
+    * An EMPTY `cache_root` means "the default roots" — every index
+    * family's ([[graft.ml.IndexCache.DefaultRoots]]); without this the
+    * pure-SQL lifecycle could never bound the sibling roots, whose
+    * locations are Scala-API defaults the SQL user has no surface for.
+    * Artifacts a live registration in THIS session still references
     * are never reclaimed, even at `older_than_ms = 0` (ADVICE r14) —
     * but a registration made by ANOTHER session is invisible here, so
     * cross-session GC remains maintenance-window discipline. */
   private object GcIndexCacheProcedure extends SimpleProcedure(
     "gc_index_cache",
     "Reclaim unreachable index artifacts from a shared cache root " +
-      "('' = the default IVF + IVF-PQ roots). Artifacts referenced by a " +
+      "('' = every index family's default root). Artifacts referenced by a " +
       "live registration in this session are kept; registrations held " +
       "by OTHER sessions are not visible — run aggressive sweeps " +
       "(older_than_ms = 0) only in a maintenance window",
@@ -333,9 +333,7 @@ object MerkonCatalog {
     override protected def run(input: InternalRow): Seq[InternalRow] = {
       val root = input.getUTF8String(0).toString
       val roots =
-        if (root.nonEmpty) Seq(root)
-        else Seq(graft.ml.IndexCache.DefaultIvfRoot,
-          graft.ml.IndexCache.DefaultIvfPqRoot)
+        if (root.nonEmpty) Seq(root) else graft.ml.IndexCache.DefaultRoots
       val keep = graft.plans.AnnIndexRegistry.livePaths
       roots.flatMap(r => graft.ml.IndexCache.gc(r, input.getLong(1), keep))
         .map(p => InternalRow(utf8(p)))

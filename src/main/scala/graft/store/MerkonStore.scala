@@ -167,16 +167,11 @@ class MerkonStore(spark: SparkSession) {
     }
   }
 
-  /** Deletes reach the registered index as an id-tombstone sidecar at
-    * the PUBLISHED index path — O(|batch|) bookkeeping the very next
-    * probe observes; no KMeans, no snapshot re-dump, no rebuild. EACH
-    * registered artifact owns its deletes: when the entry carries an
-    * IVF-PQ sibling, the same keys land in the sibling's own sidecar too
-    * (xxhash64 surrogates when the sibling is surrogate-keyed), so the
-    * codes-table serve path never depends on another artifact's sidecar
-    * surviving — compacting the IVF artifact (which drops ITS sidecar)
-    * can never resurrect deleted rows on the family-served path. Fold
-    * tombstones in physically with [[compactIndex]] on a cadence. (A
+  /** Deletes reach the registered index as id tombstones on every
+    * PUBLISHED artifact of the registration
+    * ([[graft.plans.AnnIndexRegistry.tombstone]]) — O(|batch|)
+    * bookkeeping the very next probe observes; no KMeans, no snapshot
+    * re-dump, no rebuild. Fold tombstones in physically with [[compactIndex]] on a cadence. (A
     * delete-then-re-upsert of the same key stays hidden from the INDEXED
     * path until the next [[buildIndex]] — the snapshot contract; the
     * exact path sees it immediately.) */
@@ -184,14 +179,7 @@ class MerkonStore(spark: SparkSession) {
     indexedCollections.get(name).foreach { dump =>
       graft.plans.AnnIndexRegistry.lookup(dump).foreach { entry =>
         import spark.implicits._
-        val dead = keys.toDF("id")
-        graft.plans.AnnIndexRegistry.mergeTombstones(spark,
-          s"${entry.indexPath}/tombstones", dead)
-        entry.pq.foreach { fam =>
-          graft.plans.AnnIndexRegistry.mergeTombstones(spark,
-            s"${fam.indexPath}/tombstones",
-            graft.plans.AnnIndexRegistry.famDeadIds(spark, fam, dead))
-        }
+        graft.plans.AnnIndexRegistry.tombstone(spark, entry, keys.toDF("id"))
       }
     }
 
@@ -225,8 +213,8 @@ class MerkonStore(spark: SparkSession) {
         "n_probe", "m", "k_codebook", "rows", "tombstones", "dead_fraction")
   }
 
-  /** Reclaim superseded index artifacts from the cache roots
-    * [[buildIndex]] publishes into ([[graft.ml.IndexCache.gc]] — every
+  /** Reclaim superseded index artifacts from every index family's
+    * default cache root ([[graft.ml.IndexCache.gc]] — every
     * mutate-then-rebuild cycle publishes a new content-keyed artifact;
     * this is the maintenance job that keeps the roots from growing by
     * one corpus-scale directory per cycle). `olderThanMs` (default 1 h)
@@ -235,13 +223,10 @@ class MerkonStore(spark: SparkSession) {
     * live [[graft.plans.AnnIndexRegistry]] registration still
     * references, and staging dirs of still-running builders, are never
     * touched. Returns the removed paths. */
-  def gcIndexCache(olderThanMs: Long = 3600000L,
-      cacheRoot: String = graft.ml.IndexCache.DefaultIvfRoot,
-      pqCacheRoot: String = graft.ml.IndexCache.DefaultIvfPqRoot)
-      : Seq[String] = {
+  def gcIndexCache(olderThanMs: Long = 3600000L): Seq[String] = {
     val keep = graft.plans.AnnIndexRegistry.livePaths
-    graft.ml.IndexCache.gc(cacheRoot, olderThanMs, keep) ++
-      graft.ml.IndexCache.gc(pqCacheRoot, olderThanMs, keep)
+    graft.ml.IndexCache.DefaultRoots.flatMap(
+      graft.ml.IndexCache.gc(_, olderThanMs, keep))
   }
 
   /** A7 `RemoveItem` / B7 `RemoveAsync`. */
