@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * rewritten same-size within mtime granularity).
  *
  * Incremental growth: a vector store's steady state is upsert-heavy, and
- * a full KMeans re-fit + re-encode per ingest batch is the scale-killer
+ * a full k-means re-fit + re-encode per ingest batch is the scale-killer
  * the append path avoids. Each published index carries a MANIFEST of the
  * exact source-file fingerprints it ingested; when the current source is
  * a strict superset of a published manifest (files only ADDED — every

@@ -73,7 +73,7 @@ object IvfGeometry {
    * ~4x band (sqrt regime; ~2x in the clamp regime), so a grown corpus
    * resolves to the SAME index params and [[IvfIndex.openOrBuildPath]]
    * rides `IndexCache`'s manifest-subset append (frozen centroids, no
-   * KMeans re-fit) — only the cheap nProbe sidecar recalibrates. The
+   * k-means re-fit) — only the cheap nProbe sidecar recalibrates. The
    * literal sqrt rule re-keyed the cache every ~2/sqrt(N) of relative
    * growth (at 10^9 rows, every ~0.006% of ingest), degenerating the
    * index job into a perpetual re-fit. A band-crossing growth (or any
@@ -97,9 +97,10 @@ object IvfGeometry {
     c.toInt
   }
 
-  /** KMeans wants ~this many training points per centroid before a
-    * codebook stops overfitting its sample (the published faiss
-    * clustering guidance — below it, warn-and-subsample territory). */
+  /** k-means wants ~this many training points per centroid before a
+    * codebook stops overfitting its sample (FAISS's
+    * `min_points_per_centroid`; the training sample itself is capped at
+    * [[Quantizer.MaxPointsPerCentroid]] per centroid). */
   val TrainPointsPerCentroid = 39
 
   /** Corpus-sized PQ codebook width: the standard 8-bit codebooks (256

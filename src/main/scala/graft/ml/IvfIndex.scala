@@ -2,74 +2,64 @@ package graft.ml
 
 import graft.functions.VectorFunctions.{cosineSim, l2Distance, l2Norm}
 import graft.functions.TopKByScore
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * IVF (inverted-file) approximate nearest-neighbor search: a KMeans coarse
- * quantizer partitions the corpus into `nCentroids` cells; a query probes
- * only its `nProbe` nearest cells and scores candidates exactly.
+ * IVF (inverted-file) approximate nearest-neighbor search: a k-means
+ * coarse quantizer partitions the corpus into `nCentroids` cells; a query
+ * probes only its `nProbe` nearest cells and scores candidates exactly.
  *
  * Scale shape (the IVF contract at 100 TB):
- *  - index build = one KMeans fit + one map-side cluster assignment; the
- *    assigned corpus is then *partitioned by cell* — the expensive part
- *    happens once, not per query;
+ *  - index build = one spherical k-means fit over a bounded training
+ *    sample of at most 256 rows per cell, collected in one job and fitted
+ *    on the driver ([[Quantizer]]; MLlib KMeans on the same sample above
+ *    the driver budget), + one map-side cell assignment; the assigned
+ *    corpus is then *partitioned by cell* — the expensive part happens
+ *    once, not per query;
  *  - search = tiny centroid table (nCentroids × dim floats) broadcast to
  *    route each query to nProbe cells, then an equi-join on cell id pulls
  *    only ~nProbe/nCentroids of the corpus per query, scored exactly with
  *    the codegen'd cosine kernel and reduced by the bounded partial-agg
  *    top-k. Nothing ever materializes the all-pairs space.
  *
- * Determinism: fixed KMeans seed -> stable cells -> stable results.
+ * Determinism: a content-keyed sample and a fixed seed -> the same cells
+ * under any partitioning or row order -> stable results.
  * Recall vs exact brute force is pinned in IvfIndexSpec.
  */
 class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 42L) {
   require(nProbe <= nCentroids)
 
-  /** Cache key of the build-time params (nProbe is search-time only). */
-  private[ml] def fingerprint: String = s"k$nCentroids-s$seed"
+  /** Cache key of the build-time params (nProbe is search-time only).
+    * `u`: unit-length centroids of a coarse [[Quantizer.Fit]]. Artifacts
+    * of the earlier MLlib fit (keyed `k$nCentroids`) have other cells and
+    * must not pair with an IVF-PQ sibling trained by this one. The key
+    * keeps its length: plan strings truncate artifact paths. */
+  private[ml] def fingerprint: String = s"u$nCentroids-s$seed"
 
-  /** id + original embedding + unit `features` vector (zero vectors dropped). */
-  private def prepare(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    val norm = l2Norm(col(embCol))
-    df.filter(norm > 0)
-      .select(col(idCol).as("id"), col(embCol).as("emb"),
-        array_to_vector(transform(col(embCol), x => x / norm)).as("features"))
-  }
+  /** The coarse quantizer's fit — shared with [[IvfPqIndex]], whose cells
+    * must be these cells. */
+  private[ml] def coarseFit: Quantizer.Fit =
+    Quantizer.Fit(nCentroids, seed, coarse = true)
 
   def build(spark: SparkSession, corpus: DataFrame, idCol: String, embCol: String): IvfIndex.Built = {
-    val prepared = prepare(corpus, idCol, embCol)
-    // fail fast with the actual cause before KMeans meets an empty
-    // training set ("Nothing has been added to this summarizer"): a
-    // corpus of only zero-norm vectors has nothing searchable. Cold
-    // builds only — warm opens never reach here (r17).
-    require(prepared.limit(1).count() > 0,
-      "cannot build an IVF index: corpus has no searchable " +
-        "(non-zero-norm) vectors")
-    val model = new KMeans()
-      .setK(nCentroids).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(prepared)
-    val assigned = model.transform(prepared)
-      .select(col("id"), col("emb"), col("cell"))
+    val prepared = Quantizer.prepare(corpus, idCol, embCol)
+    // an all-zero-norm corpus fails here, in the sample job
+    val Seq(centres) = Quantizer.train(prepared, "an IVF index", Seq(coarseFit))
+    val assigned = prepared
+      .select(col("id"), col("emb"), Quantizer.cellOf(centres)(col("unit")).as("cell"))
       // the 100 TB analog: write the corpus partitioned/bucketed by cell so
       // the per-query candidate join is co-located
       .repartition(col("cell"))
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toDF("cell", "centroid")
-    IvfIndex.Built(assigned, centroids)
+    IvfIndex.Built(assigned, IvfIndex.centroidTable(spark, centres))
   }
 
   /**
    * Incremental ingest: assign `delta` vectors to their nearest FROZEN
-   * centroid and extend the cell table — NO KMeans re-fit (the 100 TB
+   * centroid and extend the cell table — NO k-means re-fit (the 100 TB
    * steady state is upsert-heavy, and re-clustering per ingest batch is
    * the scale-killer; codebooks only need periodic re-training, which is
-   * a full [[build]]). Assignment replicates KMeans' squared-euclidean
+   * a full [[build]]). Assignment replicates the fit's squared-euclidean
    * argmin over the unit vector via the codegen'd l2_distance kernel
    * (float32 centroids, so a near-tie at ~1e-7 may assign differently
    * than the double-precision fit would — recall is unaffected, search
@@ -98,7 +88,7 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
    * (let alone a re-fit) per RemoveAsync batch — tombstones make a delete
    * O(|batch|), and [[IvfIndex.compacted]] / [[IvfIndex.compactOnDisk]]
    * fold them into the cell table once the dead fraction crosses a
-   * threshold, still with no KMeans anywhere (cell assignment of live
+   * threshold, still with no k-means anywhere (cell assignment of live
    * rows is unchanged by deletes).
    */
   def delete(built: IvfIndex.Built, ids: DataFrame, idCol: String): IvfIndex.Built = {
@@ -145,7 +135,7 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
     * rank <= p exactly "this cell is probed at width p". */
   def cellRanks(built: IvfIndex.Built, queries: DataFrame, idCol: String,
       embCol: String, nCells: Int): DataFrame = {
-    val q = prepare(queries, idCol, embCol)
+    val q = Quantizer.prepare(queries, idCol, embCol)
       .select(col("id").as("q_id"), col("emb").as("q_emb"))
     q.crossJoin(broadcast(built.centroids))
       .select(col("q_id"), col("q_emb"), col("cell"),
@@ -160,7 +150,7 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
   private def searchCore(built: IvfIndex.Built, queries: DataFrame,
       idCol: String, embCol: String, k: Int,
       candidateFilter: DataFrame => DataFrame): DataFrame = {
-    val q = prepare(queries, idCol, embCol)
+    val q = Quantizer.prepare(queries, idCol, embCol)
       .select(col("id").as("q_id"), col("emb").as("q_emb"))
     // route: query × broadcast(centroids) -> nProbe nearest cells per query
     val routed = q.crossJoin(broadcast(built.centroids))
@@ -188,10 +178,18 @@ object IvfIndex {
   /** Cell-partitioned `assigned` (the key table) + the centroid table. */
   private[graft] val Layout = IndexCache.Layout("assigned", Seq("centroids"))
 
+  /** The (cell, centroid) routing table of fitted centres (float32). */
+  private[ml] def centroidTable(spark: SparkSession,
+      centres: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    centres.toSeq.zipWithIndex.map { case (c, i) => (i, c.map(_.toFloat)) }
+      .toDF("cell", "centroid")
+  }
+
   /** The frozen-quantizer delta encode shared by the in-memory
     * [[IvfIndex.append]] and the on-disk [[appendOnDisk]]: dedup the
     * delta's ids, drop zero-norm rows, and assign each vector to its
-    * argmin-l2 cell against the FROZEN centroid table (KMeans' metric
+    * argmin-l2 cell against the FROZEN centroid table (the fit's metric
     * over the unit vector) — a map-side broadcast pass, no fit. */
   private[ml] def assignDelta(centroids: DataFrame, delta: DataFrame,
       idCol: String, embCol: String): DataFrame = {
@@ -224,7 +222,7 @@ object IvfIndex {
     * + an optional id-tombstone sidecar (rows deleted since the last
     * compaction — still physically present in `assigned`, filtered out of
     * every probe by [[live]]). Searchable whether just built or loaded
-    * from disk — the fitted KMeans model is build-time-only state and is
+    * from disk — the fitted quantizer is build-time-only state and is
     * NOT part of the searchable index (routing uses the centroid table). */
   case class Built(assigned: DataFrame, centroids: DataFrame,
       tombstones: Option[DataFrame] = None) {
@@ -233,7 +231,7 @@ object IvfIndex {
   }
 
   /** Fold tombstones into the cell table (materialized via the caller's
-    * next [[save]]) — no KMeans, no re-encode: deletes never change the
+    * next [[save]]) — no k-means, no re-encode: deletes never change the
     * cell assignment of surviving rows. */
   def compacted(built: Built): Built =
     built.tombstones.fold(built)(_ =>
@@ -246,7 +244,7 @@ object IvfIndex {
    * vector is kept iff NO earlier-by-id vector in its IVF cell is within
    * `tau` cosine. The index IS the clustering, so semantic dedup costs
    * one within-cell pair join + one distinct + one left-anti over a table
-   * the pipeline already maintains — the KMeans cells confine all
+   * the pipeline already maintains — the k-means cells confine all
    * pairwise work, and cell count grows with the corpus, keeping the
    * per-cell fan-out bound constant at any scale. Tombstoned rows
    * neither dedup others nor survive (the prune sees [[Built.live]]).
@@ -291,7 +289,7 @@ object IvfIndex {
    * overwrite — untouched cells keep their files byte-for-byte), then
    * drop the sidecar. The 100 TB discipline: a delete wave that hits 3 of
    * 1024 cells rewrites 3 cell directories, not the corpus, and never
-   * re-runs KMeans. No-op below `minDeadFraction` of reclaimable rows
+   * re-runs k-means. No-op below `minDeadFraction` of reclaimable rows
    * ([[IndexCache.compactOnDisk]]).
    */
   def compactOnDisk(spark: SparkSession, path: String,
@@ -349,7 +347,7 @@ object IvfIndex {
   /**
    * The index lifecycle a query path must use: load the prebuilt index
    * for `sourcePath` if one exists, else build + persist it once.
-   * An iterative KMeans fit inside a registered query would re-run per
+   * An iterative k-means fit inside a registered query would re-run per
    * execution — a scale-killer at 100 TB, where the index is maintained
    * by an explicit index job and queries only ever read it.
    *
@@ -387,7 +385,7 @@ object IvfIndex {
       embCol: String,
       cacheRoot: String = IndexCache.DefaultIvfRoot): String =
     // a grown source encodes ONLY the new files against the frozen
-    // centroids — no KMeans fit on either grow form
+    // centroids — no k-means fit on either grow form
     IndexCache.openOrGrow(spark, sourcePath, ivf.fingerprint, cacheRoot,
       Layout) { staging =>
       save(ivf.build(spark, spark.read.parquet(sourcePath), idCol, embCol), staging)

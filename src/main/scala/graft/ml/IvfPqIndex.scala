@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
  * Composition, not reimplementation: the cell table comes from
  * [[IvfIndex]]'s quantizer, the code table and ADC machinery from
  * [[PqIndex]], and the exact re-rank is the shared bucketed fetch
- * ([[PqIndex.rerankExact]]). Both fits run ONLY in the index job
+ * ([[PqIndex.rerankExact]]). Both quantizers train on ONE bounded sample
+ * ([[Quantizer.train]]) and run ONLY in the index job
  * ([[IvfPqIndex.openOrBuild]]); search never fits anything.
  *
  * Search = route (broadcast centroid table, nProbe cells/query) →
@@ -33,33 +34,42 @@ class IvfPqIndex(val nCentroids: Int = 8, val nProbe: Int = 5,
   private[ml] val ivf = new IvfIndex(nCentroids, nProbe, seed)
   private[ml] val pq = new PqIndex(m, kCentroids, seed)
 
-  /** Cache key of the build-time params (nProbe is search-time only). */
+  /** Cache key of the build-time params (nProbe is search-time only).
+    * v3: both quantizers trained by [[Quantizer]], the coarse one
+    * spherical (see [[IvfIndex.fingerprint]]). */
   private[ml] def fingerprint: String =
-    s"ivfpq-c$nCentroids-m$m-k$kCentroids-s$seed-v1"
+    s"ivfpq-c$nCentroids-m$m-k$kCentroids-s$seed-v3"
 
   def build(spark: SparkSession, corpus: DataFrame,
       idCol: String, embCol: String): IvfPqIndex.Built = {
-    val ivfBuilt = ivf.build(spark, corpus, idCol, embCol)
-    val pqBuilt = pq.build(spark, corpus, idCol, embCol)
+    val prepared = Quantizer.prepare(corpus, idCol, embCol)
+    // ONE training sample for both quantizers: the coarse fit reads the
+    // same rows (a prefix of the sample) with the same seed as
+    // `ivf.build`, so the cells equal the IVF artifact's cells
+    val centres +: codebooks = Quantizer.train(prepared, "an IVF-PQ index",
+      ivf.coarseFit +: pq.subspaceFits)
+    val cb = pq.fullWidth(codebooks)
+    // one map-side pass encodes AND assigns; it feeds both tables
+    val coded = prepared.select(col("id"), col("emb"),
+      PqIndex.codesOf(cb)(col("unit")).as("codes"),
+      Quantizer.cellOf(centres)(col("unit")).as("cell")).localCheckpoint()
     // code table keyed by cell: the per-query candidate join prunes on
     // cell AND streams only codes — partitioned by cell like IvfIndex
-    val codedCell = pqBuilt.coded
-      .join(ivfBuilt.assigned.select(col("id"), col("cell")), "id")
-      .repartition(col("cell"))
-    IvfPqIndex.Built(codedCell, pqBuilt.embById,
-      ivfBuilt.centroids, pqBuilt.codebooks)
+    IvfPqIndex.Built(
+      coded.select(col("id"), col("codes"), col("cell")).repartition(col("cell")),
+      PqIndex.withBucket(coded.select(col("id"), col("emb"))),
+      IvfIndex.centroidTable(spark, centres), pq.codebookTable(spark, cb))
   }
 
   /** Incremental ingest: assign delta rows to their nearest FROZEN cell
     * centroid and encode them against the FROZEN codebooks — neither
-    * KMeans re-runs (same contract as [[IvfIndex.append]] /
+    * quantizer re-trains (same contract as [[IvfIndex.append]] /
     * [[PqIndex.append]]). LWW on id collisions in both tables. */
   def append(built: IvfPqIndex.Built, delta: DataFrame,
       idCol: String, embCol: String): IvfPqIndex.Built = {
-    val spark = delta.sparkSession
-    val prepared = IvfIndex.dedupDeltaIds(pq.prepare(delta, idCol, embCol))
+    val prepared = IvfIndex.dedupDeltaIds(Quantizer.prepare(delta, idCol, embCol))
       .localCheckpoint()
-    val codedDelta = pq.encodeWith(spark, prepared,
+    val codedDelta = pq.encodeWith(prepared,
       pq.codebookArray(built.codebooks))
     val cellDelta = IvfPqIndex.routeCells(prepared, built.centroids)
     val deltaCoded = codedDelta.select(col("id"), col("codes"))
@@ -286,7 +296,7 @@ object IvfPqIndex {
       published: String, delta: DataFrame, idCol: String, embCol: String,
       staging: String, idMapDelta: Option[DataFrame]): Boolean = {
     val prepared = IvfIndex.dedupDeltaIds(
-      ivfpq.pq.prepare(delta, idCol, embCol)).localCheckpoint()
+      Quantizer.prepare(delta, idCol, embCol)).localCheckpoint()
     val deltaIds = prepared.select("id")
     val idMap = IndexCache.loadOptional(spark, s"$published/idMap")
     // probe with ALL delta sids, not just the positive-norm ones
@@ -302,7 +312,7 @@ object IvfPqIndex {
       if (!prepared.isEmpty) {
         val codebooks = spark.read.parquet(s"$published/codebooks")
         val centroids = spark.read.parquet(s"$published/centroids")
-        val codedDelta = ivfpq.pq.encodeWith(spark, prepared,
+        val codedDelta = ivfpq.pq.encodeWith(prepared,
           ivfpq.pq.codebookArray(codebooks)).localCheckpoint()
         val cellDelta = routeCells(prepared, centroids)
         codedDelta.select(col("id"), col("codes"))

@@ -1,18 +1,12 @@
 package graft.ml
 
-import graft.functions.VectorFunctions.{cosineSim, l2Norm}
+import graft.functions.VectorFunctions.cosineSim
 import graft.functions.TopKByScore
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A corpus row prepared for PQ: original embedding + unit vector. */
 private[ml] case class PqRow(id: Long, emb: Seq[Float], unit: Seq[Double])
-
-/** A PQ-encoded corpus row: `codes(sub)` = nearest centroid id of
-  * subvector `sub`. The embedding is kept alongside for exact re-rank. */
-private[ml] case class PqCoded(id: Long, emb: Seq[Float], codes: Seq[Int])
 
 /** A query with its ADC lookup table: `tab(sub*k + c)` = squared L2
   * distance from the query's subvector to centroid c of subspace sub. */
@@ -22,7 +16,7 @@ private[ml] case class PqQuery(q_id: Long, q_emb: Seq[Float], tab: Seq[Double])
  * Product quantization ANN — the third standard index family next to LSH
  * ([[CosineLsh]]) and IVF ([[IvfIndex]]): the unit-normalized embedding is
  * split into `m` subvectors, each quantized to one of `kCentroids`
- * per-subspace KMeans centroids, so a D-dim float vector compresses to m
+ * per-subspace k-means centroids, so a D-dim float vector compresses to m
  * small codes (64-dim float32 → 8 bytes here, 32x). Search scores the
  * compressed codes with an ADC (asymmetric distance computation) lookup
  * table — `m` array reads + adds per candidate, no float vector math —
@@ -31,8 +25,9 @@ private[ml] case class PqQuery(q_id: Long, q_emb: Seq[Float], tab: Seq[Double])
  * quantization error.
  *
  * Scale shape:
- *  - build = m KMeans fits over subvector slices + one map-side encode;
- *    runs ONLY in the index job ([[PqIndex.openOrBuild]]), never per query;
+ *  - build = m k-means fits over slices of one bounded training sample,
+ *    on the driver ([[Quantizer]]), + one map-side encode; runs ONLY in
+ *    the index job ([[PqIndex.openOrBuild]]), never per query;
  *  - the code table is the index: m bytes/vector instead of 4D — the scan
  *    that ADC-scores 100 TB of embeddings reads ~3 TB of codes;
  *  - search = broadcast the per-query ADC tables (|Q| × m×k doubles),
@@ -52,115 +47,56 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
 
   // v2: the coded table split into (id, codes) + the id-bucketed embById
   // fetch table — versioning the fingerprint keeps a pre-split cached
-  // index from being loaded with the new layout
-  private[ml] def fingerprint: String = s"m$m-k$kCentroids-s$seed-v2"
-
-  private[ml] def prepare(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    val norm = l2Norm(col(embCol))
-    df.filter(norm > 0)
-      .select(col(idCol).as("id"), col(embCol).as("emb"),
-        transform(col(embCol), x => x.cast("double") / norm).as("unit"))
-  }
+  // index from being loaded with the new layout. v3: codebooks trained by
+  // [[Quantizer]] on a bounded sample, not by MLlib over the corpus
+  private[ml] def fingerprint: String = s"m$m-k$kCentroids-s$seed-v3"
 
   def build(spark: SparkSession, corpus: DataFrame,
       idCol: String, embCol: String): PqIndex.Built = {
-    import spark.implicits._
-    val prepared = prepare(corpus, idCol, embCol).as[PqRow].cache()
-    val dim = prepared.head().unit.size
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val d = dim / m
-    // m independent per-subspace quantizers (the expensive part; index
-    // job only). CONCURRENT fits (r18, guide-§2.6 overlap): each fit is
-    // a chain of tiny near-single-task Spark jobs (kmeans|| init + Lloyd
-    // rounds) whose cost is almost pure scheduling latency on the cached
-    // input, and the m fits are fully independent (own seed, own slice
-    // columns, shared read-only `prepared`), so submitting them from a
-    // bounded thread pool overlaps the per-job latency — the scheduler
-    // back-fills idle slots. Results are bit-identical to the sequential
-    // loop: concurrency changes WHEN each deterministic fit runs, never
-    // what it computes. Measured on a cold cache: the PQ/IVF-PQ build
-    // queries drop ~2x (see OPTIMIZATION_r18.md).
-    // Every fit job carries one tag, so a failed build can cancel the
-    // fits still running. A tag rather than a job group: it leaves the
-    // caller's group, and whatever listens on it, intact.
-    val sc = spark.sparkContext
-    val fitTag = s"graft-pq-fit-${java.util.UUID.randomUUID()}"
-    val fitPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(m, 8))
-    val codebooks: Array[Array[Array[Double]]] =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(fitPool)
-        val fits = (0 until m).map { sub =>
-          scala.concurrent.Future {
-            sc.addJobTag(fitTag)
-            sc.setInterruptOnCancel(true)
-            fitSubspace(prepared.toDF()
-              .select(array_to_vector(slice(col("unit"), sub * d + 1, d))
-                .as("features")), sub)
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(fits),
-          scala.concurrent.duration.Duration.Inf).toArray
-      } catch {
-        case e: Throwable =>
-          // one fit failed (or the caller was interrupted): stop the
-          // others instead of letting their KMeans rounds run on.
-          // Interrupt the pool, wait until no fit thread can submit
-          // another job, then cancel what is still scheduled
-          fitPool.shutdownNow()
-          sc.cancelJobsWithTag(fitTag)
-          fitPool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          sc.cancelJobsWithTag(fitTag)
-          prepared.unpersist()
-          throw e
-      } finally fitPool.shutdown()
+    val prepared = Quantizer.prepare(corpus, idCol, embCol)
+    val codebooks = fitCodebooks(prepared)
     // materialize the encode once: it feeds BOTH the code table and the
     // embedding fetch table (save() runs two independent write jobs, and
     // without the checkpoint each would re-run the full scan + m-subspace
     // encode)
-    val coded = encodeWith(spark, prepared.toDF(), codebooks).localCheckpoint()
-    val cbRows = for {
-      sub <- 0 until m; c <- 0 until kCentroids
-    } yield (sub, c, codebooks(sub)(c).toSeq)
-    prepared.unpersist()
+    val coded = encodeWith(prepared, codebooks).localCheckpoint()
     PqIndex.Built(coded.select(col("id"), col("codes")),
       PqIndex.withBucket(coded.select(col("id"), col("emb"))),
-      cbRows.toDF("sub", "c", "centroid"))
+      codebookTable(spark, codebooks))
   }
 
-  /** One subspace's KMeans codebook over its `features` slices. */
-  protected[ml] def fitSubspace(slices: DataFrame, sub: Int): Array[Array[Double]] =
-    new KMeans().setK(kCentroids).setSeed(seed + sub)
-      .setFeaturesCol("features").setPredictionCol("c")
-      .fit(slices).clusterCenters.map(_.toArray)
+  /** The m per-subspace codebooks (the index job only), fitted on slices
+    * of ONE training sample ([[Quantizer.train]]). A subspace with fewer
+    * distinct points than `kCentroids` repeats its last centre, so every
+    * codebook keeps the fixed width the ADC table offsets assume. */
+  protected[ml] def fitCodebooks(prepared: DataFrame): Array[Array[Array[Double]]] =
+    fullWidth(Quantizer.train(prepared, "a PQ index", subspaceFits))
 
-  /** Map-side encode with the (tiny) codebooks in the task closure —
-    * shared by [[build]] and [[append]]; contains no fit. */
-  private[ml] def encodeWith(spark: SparkSession, prepared: DataFrame,
+  private[ml] def fullWidth(
+      codebooks: Seq[Array[Array[Double]]]): Array[Array[Array[Double]]] =
+    codebooks.map(cs =>
+      Array.tabulate(kCentroids)(c => cs(math.min(c, cs.length - 1)))).toArray
+
+  /** Subspace `sub`'s fit: seed + sub over slice sub of m. */
+  private[ml] def subspaceFits: Seq[Quantizer.Fit] =
+    (0 until m).map(sub => Quantizer.Fit(kCentroids, seed + sub, sub, m))
+
+  /** The (sub, c, centroid) codebook table of a fitted codebook array. */
+  private[ml] def codebookTable(spark: SparkSession,
       codebooks: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
-    val mm = m
-    prepared.as[PqRow].map { r =>
-      val d = r.unit.size / mm
-      val codes = Array.tabulate(mm) { sub =>
-        val cb = codebooks(sub)
-        var best = 0; var bestDist = Double.MaxValue
-        var c = 0
-        while (c < cb.length) {
-          var dist = 0.0; var j = 0
-          while (j < d) {
-            val diff = r.unit(sub * d + j) - cb(c)(j); dist += diff * diff; j += 1
-          }
-          if (dist < bestDist) { bestDist = dist; best = c }
-          c += 1
-        }
-        best
-      }
-      PqCoded(r.id, r.emb, codes.toSeq)
-    }.toDF()
+    (for {
+      sub <- 0 until m; c <- 0 until kCentroids
+    } yield (sub, c, codebooks(sub)(c).toSeq)).toDF("sub", "c", "centroid")
   }
+
+  /** Map-side encode of [[Quantizer.prepare]]d rows to (id, emb, codes) with the
+    * (tiny) codebooks in the task closure — shared by [[build]] and
+    * [[append]]; contains no fit. */
+  private[ml] def encodeWith(prepared: DataFrame,
+      codebooks: Array[Array[Array[Double]]]): DataFrame =
+    prepared.select(col("id"), col("emb"),
+      PqIndex.codesOf(codebooks)(col("unit")).as("codes"))
 
   /** Collect the few-KiB codebook table into the m×k×d driver array the
     * encode/ADC closures use. */
@@ -173,19 +109,18 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
   /**
    * Incremental ingest: encode `delta` vectors against the FROZEN
    * per-subspace codebooks and extend the code table — none of the m
-   * KMeans fits re-run (PQ codebooks only need periodic re-training,
+   * k-means fits re-run (PQ codebooks only need periodic re-training,
    * which is a full [[build]]; the upsert steady state must be a
    * map-side encode of the delta only).
    */
   def append(built: PqIndex.Built, delta: DataFrame,
       idCol: String, embCol: String): PqIndex.Built = {
-    val spark = delta.sparkSession
     // materialize the delta encode once — it feeds both the code table
     // and the embedding fetch table (two write jobs in save()); same-id
     // rows within one delta reduce to a single deterministic winner
     // FIRST (the anti-join below only guards base-vs-delta collisions)
-    val codedDelta = encodeWith(spark,
-      IvfIndex.dedupDeltaIds(prepare(delta, idCol, embCol)),
+    val codedDelta = encodeWith(
+      IvfIndex.dedupDeltaIds(Quantizer.prepare(delta, idCol, embCol)),
       codebookArray(built.codebooks)).localCheckpoint()
     val deltaIds = codedDelta.select("id")
     // LWW on id collisions: delta rows replace same-id rows in BOTH
@@ -201,7 +136,7 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
   }
 
   /** Delete by id via the tombstone sidecar — O(|batch|), no re-encode,
-    * none of the m KMeans fits; [[search]] filters the code scan. Same
+    * none of the m k-means fits; [[search]] filters the code scan. Same
     * contract as [[IvfIndex.delete]]. */
   def delete(built: PqIndex.Built, ids: DataFrame, idCol: String): PqIndex.Built = {
     PqIndex.Built(built.coded, built.embById, built.codebooks, Some(
@@ -224,7 +159,7 @@ class PqIndex(m: Int = 8, kCentroids: Int = 16, seed: Long = 42L) {
     val cbMap = codebooks.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray).toMap
     val mm = m; val kk = kCentroids
-    prepare(queries, idCol, embCol).as[PqRow].map { r =>
+    Quantizer.prepare(queries, idCol, embCol).as[PqRow].map { r =>
       val d = r.unit.size / mm
       val tab = Array.tabulate(mm * kk) { i =>
         val sub = i / kk; val c = i % kk
@@ -297,6 +232,17 @@ object PqIndex {
     * codebooks. */
   private[graft] val Layout =
     IndexCache.Layout("coded", Seq("embById", "codebooks"))
+
+  /** Map-side PQ encode of a unit vector: `codes(sub)` = the nearest
+    * centroid of subvector `sub` in its codebook. */
+  private[ml] def codesOf(codebooks: Array[Array[Array[Double]]])
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (unit: Seq[Double]) =>
+      val v = unit.toArray
+      val d = v.length / codebooks.length
+      codebooks.indices.map(sub =>
+        Quantizer.nearest(codebooks(sub), v, sub * d)): Seq[Int]
+    }
 
   /** Hash-bucket fan-out of the embedding fetch table. Sized so a
     * shortlist's buckets are a small fraction of the corpus partitions
@@ -401,7 +347,7 @@ object PqIndex {
   }
 
   /** Load the prebuilt code table for `sourcePath` or build + publish it
-    * once — the m KMeans fits never run in a registered query path (see
+    * once — the m k-means fits never run in a registered query path (see
     * [[IndexCache]] for the fingerprint/atomic-publish discipline). */
   def openOrBuild(
       spark: SparkSession,
@@ -411,7 +357,7 @@ object PqIndex {
       embCol: String,
       cacheRoot: String = IndexCache.DefaultPqRoot): Built = {
     // a grown source encodes ONLY the new files against the frozen
-    // codebooks — none of the m KMeans fits run on either grow form
+    // codebooks — none of the m k-means fits run on either grow form
     val path = IndexCache.openOrGrow(spark, sourcePath, pq.fingerprint,
       cacheRoot, Layout) { staging =>
       save(pq.build(spark, spark.read.parquet(sourcePath), idCol, embCol), staging)
@@ -430,11 +376,11 @@ object PqIndex {
       published: String, delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
     val prepared = IvfIndex.dedupDeltaIds(
-      pq.prepare(delta, idCol, embCol)).localCheckpoint()
+      Quantizer.prepare(delta, idCol, embCol)).localCheckpoint()
     IndexCache.linkAppend(spark, published, staging, Layout,
         prepared.select("id")) { st =>
       if (!prepared.isEmpty) {
-        val codedDelta = pq.encodeWith(spark, prepared,
+        val codedDelta = pq.encodeWith(prepared,
           pq.codebookArray(spark.read.parquet(s"$published/codebooks")))
           .localCheckpoint()
         codedDelta.select(col("id"), col("codes"))

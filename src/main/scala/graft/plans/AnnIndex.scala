@@ -55,9 +55,12 @@ object AnnIndexRegistry {
     * compares against the codes-table advantage point. A non-long-keyed
     * corpus's artifact is surrogate-keyed with a published idMap
     * ([[graft.ml.IvfPqIndex.openOrBuildPathAnyId]]); the serve path
-    * detects it by the idMap's presence. */
+    * detects it by the idMap's presence. `schemas` are the data schemas
+    * of the tables the codes-table serve path reads
+    * ([[pqTableSchemas]]; empty = infer at every read). */
   case class PqFamily(indexPath: String, m: Int, kCentroids: Int,
-      codebooks: Map[(Int, Int), Array[Double]], corpusRows: Long)
+      codebooks: Map[(Int, Int), Array[Double]], corpusRows: Long,
+      schemas: Map[String, StructType] = Map.empty)
 
   /** A registered index: where the published IVF artifact lives, how the
     * source columns map onto it, the routing table (collected once at
@@ -130,10 +133,11 @@ object AnnIndexRegistry {
     // size for the advantage-point comparison
     val pqFam = ivfpq.map { q =>
       // both families must share the coarse quantizer (same cell count +
-      // default seed -> same KMeans fit): the rule routes ONCE against
-      // the registered centroid table and prunes either family's cell
-      // directories with the same probed-cell set
-      // cell-id COHERENCE requires both quantizers to be the same KMeans
+      // default seed -> same fit on the same sample rows, see
+      // graft.ml.Quantizer): the rule routes ONCE against the registered
+      // centroid table and prunes either family's cell directories with
+      // the same probed-cell set
+      // cell-id COHERENCE requires both quantizers to be the same
       // fit — same cell count AND same seed; a seed mismatch would make
       // "cell 3" of the routing table a different region than cell=3 of
       // the codes table, silently collapsing recall on the served path
@@ -150,7 +154,8 @@ object AnnIndexRegistry {
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2).toArray)
         .toMap
       PqFamily(pqPath, q.m, q.kCentroids, cbs,
-        spark.read.parquet(s"$path/assigned").count())
+        spark.read.parquet(s"$path/assigned").count(),
+        pqTableSchemas(spark, pqPath))
     }
     // fingerprint AFTER the artifact build: a source that changed while
     // the index job ran records the post-change state and the first
@@ -192,15 +197,39 @@ object AnnIndexRegistry {
     * artifact. */
   private def tableSchemas(spark: SparkSession,
       indexPath: String): Map[String, StructType] = {
-    def data(table: String): StructType = StructType(
-      spark.read.parquet(s"$indexPath/$table").schema.filterNot(_.name == "cell"))
-    val assigned = data("assigned")
+    val assigned = dataSchema(spark, s"$indexPath/assigned", "cell")
     Map("assigned" -> assigned,
       "tombstones" -> StructType(Seq(assigned("id")))) ++
       (if (exists(spark, s"$indexPath/augmented/_SUCCESS"))
-         Map("augmented" -> data("augmented"))
+         Map("augmented" -> dataSchema(spark, s"$indexPath/augmented", "cell"))
        else Map.empty)
   }
+
+  /** [[tableSchemas]] of an IVF-PQ sibling: `codedCell`, `embById`, its
+    * own `tombstones` sidecar (the key domain of `codedCell`) and, for a
+    * surrogate-keyed artifact, `idMap` — every table the codes-table
+    * serve path ([[AnnIndexRule]]'s `pqCandidates`) reads per query. */
+  private def pqTableSchemas(spark: SparkSession,
+      indexPath: String): Map[String, StructType] = {
+    val coded = dataSchema(spark, s"$indexPath/codedCell", "cell")
+    Map("codedCell" -> coded,
+      "embById" -> dataSchema(spark, s"$indexPath/embById", "bucket"),
+      "tombstones" -> StructType(Seq(coded("id")))) ++
+      (if (exists(spark, s"$indexPath/idMap/_SUCCESS"))
+         Map("idMap" -> dataSchema(spark, s"$indexPath/idMap", "bucket"))
+       else Map.empty)
+  }
+
+  /** A partitioned table's data schema (its partition column is still
+    * inferred from the directory names at read time). */
+  private def dataSchema(spark: SparkSession, table: String,
+      partCol: String): StructType =
+    StructType(spark.read.parquet(table).schema.filterNot(_.name == partCol))
+
+  /** Read a table with its registered data schema, if known. */
+  private[plans] def readKnown(spark: SparkSession, table: String,
+      schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(table)
 
   private[plans] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -244,7 +273,7 @@ object AnnIndexRegistry {
    * operating point) and build the IVF-PQ sibling exactly when the
    * family-picking rewrite would serve the codes table — the same
    * [[AnnIndexRule.PqMinBytesKey]] conf the rule reads, so the job
-   * builds what the optimizer will use and never pays the m KMeans fits
+   * builds what the optimizer will use and never pays the m k-means fits
    * for an artifact the cost rule would ignore. Shared by
    * [[graft.store.MerkonStore.buildIndex]] and the SQL CALL surface
    * ([[graft.store.MerkonCatalog]]'s `build_index` procedure).
@@ -624,7 +653,7 @@ object AnnIndexRegistry {
             spark.read.parquet(s"$p/codebooks").collect()
               .map(row => (row.getInt(0), row.getInt(1)) ->
                 row.getSeq[Double](2).toArray).toMap,
-            rows))
+            rows, pqTableSchemas(spark, p)))
         }
         val entry = Entry(dir.getPath, r.idCol, r.embCol, r.nProbe,
           loadCentroids(spark, dir.getPath), r.payloadCols, pqFam,
@@ -1283,10 +1312,10 @@ object AnnIndexRule extends Rule[LogicalPlan] {
       }
       dist
     }
-    val scan = prunedCellScan(spark, s"${fam.indexPath}/codedCell", cells)
-      .getOrElse(return None)
-    val famLive = IndexCache.live(scan,
-      IndexCache.readTombstones(spark, fam.indexPath))
+    val scan = prunedCellScan(spark, s"${fam.indexPath}/codedCell", cells,
+      fam.schemas.get("codedCell")).getOrElse(return None)
+    val famLive = IndexCache.live(scan, IndexCache.readTombstones(spark,
+      fam.indexPath, fam.schemas.get("tombstones")))
     // deletes land in the REGISTERED artifact's tombstone sidecar too
     // (the store's remove path writes it with ORIGINAL ids) — the
     // codes-table serve must honor them, and BEFORE the shortlist so a
@@ -1314,7 +1343,8 @@ object AnnIndexRule extends Rule[LogicalPlan] {
       .select(explode(col("cand.id")).as("id"))
       .select(pmod(col("id"), lit(PqIndex.EmbBuckets)).cast("int").as("bucket"),
         col("id"))
-    val emb = spark.read.parquet(s"${fam.indexPath}/embById")
+    val emb = AnnIndexRegistry.readKnown(spark, s"${fam.indexPath}/embById",
+        fam.schemas.get("embById"))
       .select(col("bucket").cast("int").as("bucket"), col("id"), col("emb"))
     val fetched = emb.join(shortlist, Seq("bucket", "id"), "left_semi")
       .select(col("id"), col("emb"))
@@ -1324,7 +1354,8 @@ object AnnIndexRule extends Rule[LogicalPlan] {
       // idMap restore joins on (bucket, sid) so the bucket-partitioned
       // map scan prunes to the shortlist's own buckets, exactly like the
       // embedding fetch above — never a full-corpus map scan.
-      val idMap = spark.read.parquet(s"${fam.indexPath}/idMap")
+      val idMap = AnnIndexRegistry.readKnown(spark, s"${fam.indexPath}/idMap",
+          fam.schemas.get("idMap"))
         .select(col("bucket").cast("int").as("bucket"), col("sid"), col("id"))
       Some(fetched
         .select(pmod(col("id"), lit(PqIndex.EmbBuckets)).cast("int")

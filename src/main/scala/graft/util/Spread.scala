@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
 /**
@@ -32,6 +33,23 @@ object Spread {
     // an already-well-partitioned input at real scale keeps its
     // parallelism instead of being folded down to defaultParallelism.
     val slots = df.sparkSession.sparkContext.defaultParallelism
-    df.repartition(math.max(df.rdd.getNumPartitions, slots), col(key))
+    df.repartition(math.max(scanSplits(df), slots), col(key))
+  }
+
+  /** The file splits the input's file scans plan to, from their
+    * relations' sizes and `spark.sql.files.maxPartitionBytes` — read off
+    * the analyzed plan. `df.rdd.getNumPartitions` would plan the input a
+    * second time, and under AQE run its upstream shuffles before any
+    * action. Non-file leaves count 0. */
+  private def scanSplits(df: DataFrame): Int = {
+    val maxBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val bytes = df.queryExecution.analyzed.collectLeaves().map {
+      case lr: LogicalRelation => lr.relation match {
+        case r: HadoopFsRelation => r.sizeInBytes
+        case _ => 0L
+      }
+      case _ => 0L
+    }.sum
+    math.min(Int.MaxValue.toLong, (bytes + maxBytes - 1) / maxBytes).toInt
   }
 }

@@ -46,48 +46,49 @@ class PqRerankSpec extends AnyFunSuite with SparkTestBase {
       s"ADC scan must not read embeddings: ${codedScan.mkString}")
   }
 
-  test("a failing subspace fit fails the PQ build and cancels the other fits' jobs") {
+  test("a failing subspace fit fails the PQ build, no job left, nothing persisted") {
+    // the m subspace fits run on the driver over one collected sample
+    // (Quantizer.train), so a fit that throws fails the build on the
+    // calling thread: no fit job can still be running, there is no
+    // pool or job tag to cancel, and the encode never starts
     val sc = spark.sparkContext
+    val group = s"pq-fit-${java.util.UUID.randomUUID()}"
     val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").exists(_.startsWith("graft-pq-fit-"))))
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           started.add(e.jobId)
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        ended.add(e.jobId)
     }
-    def within(ms: Long)(cond: => Boolean): Boolean = {
-      val until = System.currentTimeMillis() + ms
-      while (!cond && System.currentTimeMillis() < until) Thread.sleep(50)
-      cond
-    }
-    // subspace 0 throws once the other three fits are running a job
-    // that would take a minute unless cancelled
     val failing = new PqIndex(m = 4, kCentroids = 4) {
-      override protected[ml] def fitSubspace(slices: org.apache.spark.sql.DataFrame,
-          sub: Int): Array[Array[Double]] =
-        if (sub == 0) {
-          within(30000)(started.size >= 3)
-          throw new IllegalStateException("injected fit failure")
-        } else {
-          slices.rdd.mapPartitions { it => Thread.sleep(60000); it }.count()
-          super.fitSubspace(slices, sub)
-        }
+      override protected[ml] def fitCodebooks(
+          prepared: org.apache.spark.sql.DataFrame): Array[Array[Array[Double]]] = {
+        val fitted = super.fitCodebooks(prepared)
+        throw new IllegalStateException(s"injected fit failure after ${fitted.length} fits")
+      }
     }
+    val corpus = spark.read.parquet(s"$sf0_001/embeddings.parquet")
+    val persistedBefore = sc.getPersistentRDDs.keySet
     sc.addSparkListener(listener)
+    sc.setJobGroup(group, "failing PQ fit")
     try {
-      val t0 = System.nanoTime()
-      val e = intercept[IllegalStateException](failing.build(spark,
-        spark.read.parquet(s"$sf0_001/embeddings.parquet"), "vec_id", "embedding"))
-      assert(e.getMessage == "injected fit failure")
-      assert((System.nanoTime() - t0) / 1e9 < 30, "the build waited for the other fits")
-      assert(started.size >= 3, s"fit jobs seen: $started")
-      assert(within(10000) {
-        org.apache.spark.GraftTestBus.drain(sc)
-        started.stream().allMatch(ended.contains(_))
-      }, s"fit jobs still active: started $started, ended $ended")
-    } finally sc.removeSparkListener(listener)
+      val e = intercept[IllegalStateException](
+        failing.build(spark, corpus, "vec_id", "embedding"))
+      assert(e.getMessage == "injected fit failure after 4 fits")
+      org.apache.spark.GraftTestBus.drain(sc)
+      // the one sample job, and no encode after the failure
+      assert(started.size == 1, s"jobs started by the failed build: $started")
+      assert(sc.statusTracker.getActiveJobIds().isEmpty,
+        s"jobs still active: ${sc.statusTracker.getActiveJobIds().mkString(",")}")
+      assert(sc.getPersistentRDDs.keySet == persistedBefore,
+        "the failed build left a persisted dataset behind")
+      // a fit that cannot run at all fails the same way, before any
+      // codebook exists: 64 dims do not split into 5 subspaces
+      val e2 = intercept[IllegalArgumentException](new PqIndex(m = 5)
+        .build(spark, corpus, "vec_id", "embedding"))
+      assert(e2.getMessage.contains("dim 64 not divisible by m=5"), e2.getMessage)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -285,6 +285,55 @@ class AnnRewriteSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("the codes-table serve reads every IVF-PQ table with its registered schema: no inference job while planning") {
+    val dir = scratchDir("graft-pq-schemas")
+    val srcPath = s"$dir/corpus"
+    corpus.write.parquet(srcPath)
+    val sc = spark.sparkContext
+    val group = s"pq-serve-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    try {
+      spark.conf.set(AnnIndexRule.PqMinBytesKey, "0")
+      val entry = AnnIndexRegistry.indexJob(spark, srcPath, "vec_id",
+        "embedding", new IvfIndex(nCentroids = 8, nProbe = 6), servedK = 0)
+      assert(entry.pq.map(_.schemas.keySet).contains(
+        Set("codedCell", "embById", "tombstones")), entry.pq.map(_.schemas))
+      // both artifacts get a tombstone sidecar, so the serve reads four
+      // IVF-PQ-side tables: probed cells, its sidecar, the registered
+      // sidecar and the embedding fetch table
+      AnnIndexRegistry.tombstone(spark, entry,
+        spark.range(1).select((col("id") + 3).as("id")))
+      val q = flagshipOn(srcPath, queryVec(0L), 5)
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "plan")
+      try {
+        q.queryExecution.optimizedPlan
+        org.apache.spark.GraftTestBus.drain(sc)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      // the fetch table's 64 bucket directories are listed in one
+      // parallel job; every table's schema is the registered one
+      import scala.jdk.CollectionConverters._
+      val inferring = started.asScala.filterNot(_.startsWith("Listing leaf files"))
+      assert(inferring.isEmpty, s"jobs while planning the served top-k: $inferring")
+      assert(q.queryExecution.executedPlan.toString.contains("codes:array"),
+        "the family pick must serve the codes table")
+      val ids = q.select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(ids.head == 0L && !ids.contains(3L), ids)
+    } finally {
+      spark.conf.unset(AnnIndexRule.PqMinBytesKey)
+      AnnIndexRegistry.deregister(srcPath)
+      AnnIndexRegistry.clear()
+    }
+  }
+
   test("a fresh session rehydrates the persisted registration; deregister revokes it durably") {
     // VERDICT r14 ask #4: registrations were driver-JVM state, so a
     // fresh SQL session had to re-CALL build_index before its flagship
