@@ -106,7 +106,7 @@ class TopKByScoreNullSkipping(k: Int)
  * 963k-row stream — pure buffer-rebuild allocation); this heap is the
  * same algebra with O(log k) worst-case no-alloc updates.
  */
-final class TopKHeap(val k: Int) {
+final class TopKHeap(val k: Int) extends Serializable {
   var n: Int = 0
   val scores: Array[Double] = new Array[Double](k)
   val ids: Array[Long] = new Array[Long](k)

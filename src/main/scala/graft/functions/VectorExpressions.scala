@@ -53,9 +53,26 @@ case class CosineSimilarity(left: Expression, right: Expression)
     extends VectorBinaryExpression {
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  // the generated code calls the SAME kernel: a driver-side scorer
+  // (IvfGeometry's calibration pass) and this expression then compute
+  // identical doubles by construction
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.VectorKernels.cosine($x, $y)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Scalar kernels shared by an expression's interpreted and generated
+  * paths and by driver-side callers. */
+object VectorKernels {
+  /** dot(x, y) / (||x|| * ||y||) over the common prefix, accumulated in
+    * double (see the family semantics above). */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -68,28 +85,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny"); val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $nx = 0.0, $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $a.getFloat($i);
-         |  double $yi = (double) $b.getFloat($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 case class DotProduct(left: Expression, right: Expression)

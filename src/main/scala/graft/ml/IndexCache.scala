@@ -73,6 +73,13 @@ private[graft] object IndexCache {
 
   private val ManifestRel = "graft-manifest.txt"
 
+  /** Exact row count of the parquet source `df` reads: from its footers
+    * ([[rowCountFromFooters]]), else a counting job. */
+  private[graft] def rowCount(spark: SparkSession, sourcePath: String,
+      df: DataFrame): Long =
+    rowCountFromFooters(spark.sparkContext.hadoopConfiguration, sourcePath)
+      .getOrElse(df.count())
+
   /** Exact row count of a parquet source (file or directory, any Hadoop
     * scheme) summed from the file FOOTERS on the driver — no Spark job.
     * r17: the geometry memo's warm open paid a scheduled count() job per

@@ -1,7 +1,8 @@
 package graft.ml
 
-import graft.functions.TopKByScore
-import graft.functions.VectorFunctions.cosineSim
+import graft.functions.{TopKHeap, VectorKernels}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -28,9 +29,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    it lands at a small fraction of the cells. Either way the REGISTERED
  *    query serves whatever its corpus needs, at any scale.
  *
- * Cost shape: calibration is one anchor-sample exact top-k (|A| x N —
- * linear, |A| fixed) plus O(log nCentroids) probed searches over the
- * SAME |A| anchors. It runs once per (corpus, contract): the chosen
+ * Cost shape: calibration is four Spark jobs and no shuffle
+ * ([[buildJointHist]]): a row count, the anchor collect, ONE pass that
+ * scores the |A| <= 128 anchors against every searchable row (|A| x N
+ * cosines — linear, |A| fixed — reduced in each partition to bounded
+ * top-kCap lists, so |partitions| x |A| x kCap hits reach the driver),
+ * and a cell-table scan filtered to the <= |A| x kCap neighbour ids
+ * that also returns the centroid table; cell ranks and the histogram
+ * are driver arithmetic. It runs once per (corpus, contract): the chosen
  * width is persisted as a sidecar inside the published index directory
  * (the index is fingerprint-keyed on corpus content + build params, so
  * a regenerated corpus recalibrates), and a session-level memo makes
@@ -214,12 +220,8 @@ object IvfGeometry {
     // from the parquet FOOTERS on the driver — a warm open previously
     // paid a scheduled Spark job here (and another for the zero-norm
     // probe below) per (corpus, contract) memo entry, ~0.5 s × 7
-    // entries of pure job overhead per bench session; the footer walk
-    // is the exact row count with no job. corpus.count() remains the
-    // fallback for sources whose footers we cannot read.
-    val c = centroidsFor(IndexCache.rowCountFromFooters(
-        spark.sparkContext.hadoopConfiguration, sourcePath)
-      .getOrElse(corpus.count()))
+    // entries of pure job overhead per bench session.
+    val c = centroidsFor(IndexCache.rowCount(spark, sourcePath, corpus))
     val indexPath = IvfIndex.openOrBuildPath(spark, new IvfIndex(c, 1),
       sourcePath, idCol, embCol, cacheRoot)
     val sidecar = new java.io.File(indexPath, s"nprobe-${contract.fingerprint}")
@@ -266,7 +268,7 @@ object IvfGeometry {
     * at probe rank cr; cr = 0 marks pairs whose neighbor never matched a
     * probed cell (tombstoned-away — they count toward the denominator,
     * never the numerator, exactly as the per-contract histogram did). */
-  private final case class JointHist(kCap: Int, counts: Map[(Int, Int), Long])
+  private[ml] final case class JointHist(kCap: Int, counts: Map[(Int, Int), Long])
 
   /** One histogram per (index dir, anchor-rule, rank cap) and session:
     * the bench session calibrates SEVEN contracts against the embeddings
@@ -336,9 +338,41 @@ object IvfGeometry {
     Calibrated(new IvfIndex(c, hi), hiRecall)
   }
 
-  /** ONE exact pass + ONE routing pass building [[JointHist]]: the r17
-    * one-pass-per-contract sweep generalized across contracts (r18). */
-  private def buildJointHist(spark: SparkSession, built: IvfIndex.Built,
+  /** [[JointHist]] from four driver-collected jobs and no shuffle. The
+    * r18 spelling — a broadcast cross join, a grouped top-k and two
+    * joins, ~15 AQE jobs — is the test-scope oracle `JointHistOracle`,
+    * which `IvfGeometrySpec` holds this equal to, map for map:
+    *
+    *  1. count the searchable rows, then collect the ≤ nAnchors anchors
+    *     (hash-strided, id-ordered — the rule below) to the driver;
+    *  2. ONE pass over the searchable corpus: each partition keeps a
+    *     bounded top-kCap buffer per anchor id, ordered (cos desc, gid
+    *     asc) by the [[TopKHeap]] the SQL top-k aggregate uses (same
+    *     ties, NaN skipped), scored with the one cosine kernel
+    *     `cosine_similarity` also runs; `treeAggregate` merges the
+    *     buffers — a bounded local top-k per partition, merged once
+    *     (REPOSE's distributed top-k shape);
+    *  3. one collect of the cell table (plus the tombstone sidecar, so
+    *     the live filter needs no join) restricted to the ≤ nAnchors·kCap
+    *     neighbour ids, with the centroid table beside it;
+    *  4. on the driver: every anchor's cell ranks under the routing
+    *     order (cell_score desc, cell asc), then the per-pair MIN cell
+    *     rank and the histogram.
+    *
+    * Why the histogram is recall: an exact neighbour n of anchor q is
+    * returned by a width-p search IFF rank(q, cell(n)) <= p. (<=: ranks
+    * 1..p are exactly the probed cells, and n — globally top-k by the
+    * total order — survives the top-k cut of ANY candidate subset
+    * containing it. =>: an unprobed cell's rows are never candidates.)
+    * So recall@k(p) is a prefix sum of the (exact_rank, cell_rank)
+    * histogram, bit-identical to recallAt(p) of the search path. The
+    * MIN over a neighbour's cells (ADVICE r18) keeps a duplicated id in
+    * the cell table (append/LWW races, surrogate collision) from
+    * inflating recall: it is "found via the earliest probed cell holding
+    * it" — identical on healthy data — and a neighbour with no live cell
+    * (tombstoned away) lands in the cr = 0 bucket, counted in the
+    * denominator only. */
+  private[ml] def buildJointHist(spark: SparkSession, built: IvfIndex.Built,
       corpus: DataFrame, idCol: String, embCol: String, c: Int,
       nAnchors: Int, kCap: Int): JointHist = {
     // zero-norm vectors are structurally excluded from the index
@@ -347,17 +381,13 @@ object IvfGeometry {
     // measured recall below any target, breaking the "exhaustive probe
     // passes" termination guarantee. Calibrate over the searchable
     // corpus only. Ids go through a DETERMINISTIC LONG SURROGATE
-    // (xxhash64): the bounded top-k aggregator is long-keyed, and the
-    // store's collections carry STRING keys (the reference's shape) —
-    // recall is id-representation-agnostic, and a 64-bit collision
-    // (~n²/2⁶⁵) would only perturb one anchor's measured recall.
-    val searchable = graft.util.Spread.byKey(corpus
-      .filter(graft.functions.VectorFunctions.l2Norm(col(embCol)) > 0), idCol)
+    // (xxhash64): the store's collections carry STRING keys (the
+    // reference's shape) — recall is id-representation-agnostic, and a
+    // 64-bit collision (~n²/2⁶⁵) would only perturb one anchor's
+    // measured recall.
+    val searchable = corpus
+      .filter(graft.functions.VectorFunctions.l2Norm(col(embCol)) > 0)
       .withColumn("__gid", xxhash64(col(idCol)))
-    val builtS = IvfIndex.Built(
-      built.assigned.withColumn("id", xxhash64(col("id"))),
-      built.centroids,
-      built.tombstones.map(_.withColumn("id", xxhash64(col("id")))))
     // anchor sample: hash-strided so anchors spread over the id space
     // (a head-of-ids sample would sit inside one cluster of a clustered
     // corpus and calibrate on unrepresentative geometry), deterministic
@@ -365,8 +395,9 @@ object IvfGeometry {
     // stride targets ~nAnchors expected survivors ACROSS THE WHOLE id
     // range, so the hard-bound limit trims only a small high-id tail —
     // a wider stride (2x anchors) would make the limit cut the top HALF
-    // of the id space out of the sample.
-    val n = searchable.count()
+    // of the id space out of the sample. The count runs on the RDD: a
+    // Dataset count() is an aggregate, whose exchange is a second job.
+    val n = searchable.queryExecution.toRdd.count()
     // an empty (or all-zero-norm) corpus has no exact oracle rows, so
     // every recall would divide by zero and the sweep would persist a
     // NaN sidecar — fail fast with the actual cause
@@ -376,56 +407,87 @@ object IvfGeometry {
     val anchors = searchable
       .filter(pmod(hash(col(idCol)), lit(stride)) === 0)
       .orderBy(col(idCol)).limit(nAnchors)
-      .localCheckpoint()
-    // anchors broadcast: the probe side is the corpus scan, never a
-    // cartesian (QueriesSmokeSpec's no-CartesianProduct invariant holds
-    // inside calibration too). Neighbor side is the searchable corpus —
-    // the zero-norm exclusion above applies to BOTH sides of the oracle.
-    // posexplode: position + 1 IS the neighbor's exact rank under the
-    // (cos desc, id asc) total order (TopKByScore emits sorted), and a
-    // contract's depth-k exact set is rows with exact_rank <= k — the
-    // prefix property that lets one kCap-deep pass serve every contract.
-    val exact = searchable
-      .select(col("__gid").as("n_id"), col(embCol).as("n_emb"))
-      .crossJoin(broadcast(anchors
-        .select(col("__gid").as("q_id"), col(embCol).as("q_emb"))))
-      .select(col("q_id"), col("n_id"),
-        cosineSim(col("q_emb"), col("n_emb")).as("cos"))
-      .groupBy(col("q_id"))
-      .agg(TopKByScore(kCap)(col("cos"), col("n_id")).as("hits"))
-      .select(col("q_id"), posexplode(col("hits.id")).as(Seq("r0", "neighbor_id")))
-      .select(col("q_id"), (col("r0") + 1).as("exact_rank"), col("neighbor_id"))
-    // no localCheckpoint on `exact` (r18): the joint histogram is its
-    // ONLY consumer now — the old per-contract sweep re-read it per
-    // recallAt probe, this pipeline reads it exactly once
-    // ONE-pass sweep (r17): an exact neighbor n of anchor q is returned
-    // by a width-p search IFF rank(q, cell(n)) <= p. (<=: ranks 1..p are
-    // exactly the probed cells, and n — globally top-k by the total
-    // order — survives the top-k cut of ANY candidate subset containing
-    // it. =>: an unprobed cell's rows are never candidates.) So
-    // recall@k(p) is a prefix sum of the (exact_rank, cell_rank) pair
-    // histogram, bit-identical to recallAt(p) of the search path.
-    // LEFT joins + per-pair MIN cell_rank (r18, ADVICE): a duplicated id
-    // in the cell table (append/LWW races, surrogate collision) would
-    // multiply inner-join rows and inflate recall above truth; the min
-    // is "found via the earliest probed cell holding it" — identical on
-    // healthy data, sound under duplication — and unmatched pairs land
-    // in the cr = 0 bucket so they still count toward the denominator.
-    val ranks = new IvfIndex(c, c).cellRanks(builtS, anchors, "__gid",
-      embCol, c)
-    val neighborCells = builtS.live
-      .select(col("id").as("neighbor_id"), col("cell"))
-    val counts = exact
-      .join(neighborCells, Seq("neighbor_id"), "left")
-      .join(ranks, Seq("q_id", "cell"), "left")
-      .groupBy(col("q_id"), col("exact_rank"), col("neighbor_id"))
-      .agg(min(col("cell_rank")).as("cr"))
-      .groupBy(col("exact_rank"), coalesce(col("cr"), lit(0)).as("cr"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).intValue) ->
-        r.getLong(2))
-      .toMap
-    JointHist(kCap, counts)
+      .select(col("__gid"), col(embCol)).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    // one top-k list per anchor ID: rows sharing an id (a duplicated
+    // corpus key) feed one list, as the grouped aggregate did
+    val gids = anchors.map(_._1).distinct
+    val slot = anchors.map(a => gids.indexOf(a._1))
+    val qEmb = anchors.map(_._2)
+    val merge = (a: Array[TopKHeap], b: Array[TopKHeap]) => {
+      a.indices.foreach(i => a(i).absorb(b(i)))
+      a
+    }
+    val exact = searchable.select(col("__gid"), col(embCol))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val q = qEmb.map(e => UnsafeArrayData.fromPrimitiveArray(e): ArrayData)
+        val heaps = Array.fill(gids.length)(new TopKHeap(kCap))
+        rows.foreach { r =>
+          val id = r.getLong(0)
+          val e = r.getArray(1)
+          var i = 0
+          while (i < q.length) {
+            heaps(slot(i)).insert(VectorKernels.cosine(q(i), e), id)
+            i += 1
+          }
+        }
+        Iterator.single(heaps)
+      }
+      .treeAggregate(Array.fill(gids.length)(new TopKHeap(kCap)))(merge, merge)
+      // index p of a drained list is exact rank p + 1 under the
+      // (cos desc, id asc) total order, and a contract's depth-k exact
+      // set is ranks <= k — the prefix property (TopKProps) that lets
+      // one kCap-deep pass serve every contract
+      .map { h => val (_, ids, m) = h.drainSortedDesc(); ids.take(m) }
+    // ONE collect: the (id, cell, dead) rows of every neighbour —
+    // cell-table rows plus tombstone rows, so a tombstoned id has no
+    // live cell (IndexCache.live's anti-join, applied on the driver) —
+    // and, with a null id, the centroid table's (cell, centroid) rows
+    // a closure over the id set, not an `isin` of up to 8k literals that
+    // the analyzer and optimizer would walk on every rule pass
+    val need = exact.flatten.toSet
+    val isNeighbour = udf((id: Long) => need(id))
+    val tombstones = built.tombstones.fold(Seq.empty[DataFrame])(t =>
+      Seq(t.select(xxhash64(col("id")).as("id"), lit(-1).as("cell"),
+        lit(true).as("dead"))))
+    val (centroidRows, rows) = (built.assigned.select(xxhash64(col("id")).as("id"),
+        col("cell"), lit(false).as("dead")) +: tombstones)
+      .reduce(_ unionByName _)
+      .filter(isNeighbour(col("id")))
+      .unionByName(built.centroids.select(col("cell"), col("centroid")),
+        allowMissingColumns = true)
+      .collect().partition(_.isNullAt(0))
+    val dead = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
+    val cellsOf = rows.filter(r => !dead(r.getLong(0)))
+      .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getInt(1)) }
+    // cell ranks per anchor id: the routing top-c under (cell_score
+    // desc, cell asc) of every distinct (id, embedding) anchor row, with
+    // a duplicated row scored once per copy as the grouped aggregate
+    // did; a cell's rank for an id is its min over that id's rows
+    val centroids = centroidRows.map(r => (r.getInt(1),
+      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](3).toArray): ArrayData))
+    val cellRank = Array.fill(gids.length)(
+      scala.collection.mutable.HashMap.empty[Int, Int])
+    anchors.indices.groupBy(i => (anchors(i)._1, qEmb(i).toSeq)).values
+      .foreach { copies =>
+        val q = UnsafeArrayData.fromPrimitiveArray(qEmb(copies.head))
+        val h = new TopKHeap(c)
+        for ((cell, cent) <- centroids; _ <- copies)
+          h.insert(VectorKernels.cosine(q, cent), cell.toLong)
+        val (_, cells, m) = h.drainSortedDesc()
+        val ranks = cellRank(slot(copies.head))
+        (0 until m).foreach { p =>
+          val cell = cells(p).toInt
+          ranks(cell) = math.min(ranks.getOrElse(cell, Int.MaxValue), p + 1)
+        }
+      }
+    val counts = scala.collection.mutable.HashMap.empty[(Int, Int), Long]
+    for (s <- exact.indices; (nb, r0) <- exact(s).zipWithIndex) {
+      val crs = cellsOf.getOrElse(nb, Array.empty[Int]).flatMap(cellRank(s).get)
+      val key = (r0 + 1, if (crs.isEmpty) 0 else crs.min)
+      counts(key) = counts.getOrElse(key, 0L) + 1
+    }
+    JointHist(kCap, counts.toMap)
   }
 }

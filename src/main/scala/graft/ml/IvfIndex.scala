@@ -1,9 +1,10 @@
 package graft.ml
 
-import graft.functions.VectorFunctions.{cosineSim, l2Distance, l2Norm}
+import graft.functions.VectorFunctions.cosineSim
 import graft.functions.TopKByScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
 /**
  * IVF (inverted-file) approximate nearest-neighbor search: a k-means
@@ -59,11 +60,10 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
    * centroid and extend the cell table — NO k-means re-fit (the 100 TB
    * steady state is upsert-heavy, and re-clustering per ingest batch is
    * the scale-killer; codebooks only need periodic re-training, which is
-   * a full [[build]]). Assignment replicates the fit's squared-euclidean
-   * argmin over the unit vector via the codegen'd l2_distance kernel
-   * (float32 centroids, so a near-tie at ~1e-7 may assign differently
-   * than the double-precision fit would — recall is unaffected, search
-   * probes nProbe cells).
+   * a full [[build]]). Assignment is the build's [[Quantizer.cellOf]]
+   * over the persisted centroid table (float32 centres, so a near-tie at
+   * ~1e-7 may assign differently than the double-precision fit would —
+   * recall is unaffected, search probes nProbe cells).
    */
   def append(built: IvfIndex.Built, delta: DataFrame,
       idCol: String, embCol: String): IvfIndex.Built = {
@@ -127,26 +127,6 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
       live => live.join(allow, Seq("id"), "left_semi"))
   }
 
-  /** Every cell's rank in each query's probe order — the ONE-pass
-    * calibration primitive (r17): rank r means "probed at any width
-    * >= r". Spelled with the identical routing expression and
-    * (cell_score desc, cell asc) total order as [[searchCore]], and
-    * TopK's prefix property (top-p contains top-(p-1), TopKProps) makes
-    * rank <= p exactly "this cell is probed at width p". */
-  def cellRanks(built: IvfIndex.Built, queries: DataFrame, idCol: String,
-      embCol: String, nCells: Int): DataFrame = {
-    val q = Quantizer.prepare(queries, idCol, embCol)
-      .select(col("id").as("q_id"), col("emb").as("q_emb"))
-    q.crossJoin(broadcast(built.centroids))
-      .select(col("q_id"), col("q_emb"), col("cell"),
-        cosineSim(col("q_emb"), col("centroid")).as("cell_score"))
-      .groupBy(col("q_id"), col("q_emb"))
-      .agg(TopKByScore(nCells)(col("cell_score"), col("cell").cast("long")).as("cells"))
-      .select(col("q_id"), posexplode(col("cells.id")).as(Seq("p0", "cell")))
-      .select(col("q_id"), col("cell").cast("int").as("cell"),
-        (col("p0") + 1).as("cell_rank"))
-  }
-
   private def searchCore(built: IvfIndex.Built, queries: DataFrame,
       idCol: String, embCol: String, k: Int,
       candidateFilter: DataFrame => DataFrame): DataFrame = {
@@ -186,25 +166,39 @@ object IvfIndex {
       .toDF("cell", "centroid")
   }
 
+  /** The (cell, centroid) table's schema, as a read infers it. */
+  private val CentroidSchema = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("centroid", ArrayType(FloatType, containsNull = false))))
+
+  /** An artifact's centroid table, read with its known schema: inferring
+    * it costs a parquet footer job on every read. */
+  private[graft] def readCentroids(spark: SparkSession,
+      path: String): DataFrame =
+    spark.read.schema(CentroidSchema).parquet(s"$path/centroids")
+
+  /** The fitted centres of a (cell, centroid) table, indexed by cell —
+    * the few-KiB table collected once into the driver array that
+    * [[Quantizer.cellOf]] closes over. */
+  private[graft] def centresOf(centroids: DataFrame): Array[Array[Double]] = {
+    val byCell = centroids.select(col("cell"), col("centroid")).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
+      .sortBy(_._1)
+    require(byCell.map(_._1).sameElements(byCell.indices),
+      "a centroid table's cells must be 0 until its row count")
+    byCell.map(_._2)
+  }
+
   /** The frozen-quantizer delta encode shared by the in-memory
     * [[IvfIndex.append]] and the on-disk [[appendOnDisk]]: dedup the
-    * delta's ids, drop zero-norm rows, and assign each vector to its
-    * argmin-l2 cell against the FROZEN centroid table (the fit's metric
-    * over the unit vector) — a map-side broadcast pass, no fit. */
+    * delta's ids, drop zero-norm rows, and assign each unit vector with
+    * the build's own rule, [[Quantizer.cellOf]], against the FROZEN
+    * centroid table — a map-side pass, no fit. */
   private[ml] def assignDelta(centroids: DataFrame, delta: DataFrame,
-      idCol: String, embCol: String): DataFrame = {
-    val norm = l2Norm(col(embCol))
-    val p = dedupDeltaIds(delta.filter(norm > 0)
-      .select(col(idCol).as("id"), col(embCol).as("emb"),
-        transform(col(embCol), x => (x / norm).cast("float")).as("unit")))
-    p.crossJoin(broadcast(centroids))
+      idCol: String, embCol: String): DataFrame =
+    dedupDeltaIds(Quantizer.prepare(delta, idCol, embCol))
       .select(col("id"), col("emb"),
-        col("cell"), l2Distance(col("unit"), col("centroid")).as("dist"))
-      .groupBy(col("id"), col("emb"))
-      .agg(TopKByScore(1)(-col("dist"), col("cell").cast("long")).as("best"))
-      .select(col("id"), col("emb"),
-        element_at(col("best.id"), 1).cast("int").as("cell"))
-  }
+        Quantizer.cellOf(centresOf(centroids))(col("unit")).as("cell"))
 
   /** A delta carrying the same id twice (a document upserted twice in
     * one ingest batch) must contribute exactly ONE row, or the LWW
@@ -279,8 +273,7 @@ object IvfIndex {
   }
 
   def load(spark: SparkSession, path: String): Built =
-    Built(spark.read.parquet(s"$path/assigned"),
-      spark.read.parquet(s"$path/centroids"),
+    Built(spark.read.parquet(s"$path/assigned"), readCentroids(spark, path),
       IndexCache.readTombstones(spark, path))
 
   /**
@@ -403,8 +396,8 @@ object IvfIndex {
   private[graft] def appendOnDisk(spark: SparkSession, published: String,
       delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
-    val centroids = spark.read.parquet(s"$published/centroids")
-    val d = assignDelta(centroids, delta, idCol, embCol).localCheckpoint()
+    val d = assignDelta(readCentroids(spark, published), delta, idCol,
+      embCol).localCheckpoint()
     IndexCache.linkAppend(spark, published, staging, Layout, d.select("id")) { st =>
       if (!d.isEmpty)
         d.write.mode("append").partitionBy("cell").parquet(s"$st/assigned")

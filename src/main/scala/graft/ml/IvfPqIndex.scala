@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.functions.VectorFunctions.{cosineSim, l2Distance, l2Norm}
+import graft.functions.VectorFunctions.cosineSim
 import graft.functions.TopKByScore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -61,6 +61,19 @@ class IvfPqIndex(val nCentroids: Int = 8, val nProbe: Int = 5,
       IvfIndex.centroidTable(spark, centres), pq.codebookTable(spark, cb))
   }
 
+  /** The frozen-quantizer delta encode shared by the in-memory
+    * [[append]] and the on-disk [[IvfPqIndex.appendOnDisk]]: ONE
+    * map-side pass over `prepared` ((id, emb, unit) rows) that encodes
+    * against the codebook table and assigns the cell with the build's
+    * [[Quantizer.cellOf]] over the centroid table — the rule
+    * [[IvfIndex.assignDelta]] applies, so a sibling IVF artifact's
+    * appended rows land in the same cells. */
+  private[ml] def encodeDelta(prepared: DataFrame, codebooks: DataFrame,
+      centroids: DataFrame): DataFrame =
+    prepared.select(col("id"), col("emb"),
+      PqIndex.codesOf(pq.codebookArray(codebooks))(col("unit")).as("codes"),
+      Quantizer.cellOf(IvfIndex.centresOf(centroids))(col("unit")).as("cell"))
+
   /** Incremental ingest: assign delta rows to their nearest FROZEN cell
     * centroid and encode them against the FROZEN codebooks — neither
     * quantizer re-trains (same contract as [[IvfIndex.append]] /
@@ -68,16 +81,12 @@ class IvfPqIndex(val nCentroids: Int = 8, val nProbe: Int = 5,
   def append(built: IvfPqIndex.Built, delta: DataFrame,
       idCol: String, embCol: String): IvfPqIndex.Built = {
     val prepared = IvfIndex.dedupDeltaIds(Quantizer.prepare(delta, idCol, embCol))
+    val codedDelta = encodeDelta(prepared, built.codebooks, built.centroids)
       .localCheckpoint()
-    val codedDelta = pq.encodeWith(prepared,
-      pq.codebookArray(built.codebooks))
-    val cellDelta = IvfPqIndex.routeCells(prepared, built.centroids)
-    val deltaCoded = codedDelta.select(col("id"), col("codes"))
-      .join(cellDelta, "id")
-    val deltaIds = deltaCoded.select("id")
+    val deltaIds = codedDelta.select("id")
     IvfPqIndex.Built(
       built.codedCell.join(deltaIds, Seq("id"), "left_anti")
-        .unionByName(deltaCoded.select(col("id"), col("codes"), col("cell")))
+        .unionByName(codedDelta.select(col("id"), col("codes"), col("cell")))
         .repartition(col("cell")),
       built.embById.join(deltaIds, Seq("id"), "left_anti")
         .unionByName(PqIndex.withBucket(
@@ -188,7 +197,7 @@ object IvfPqIndex {
         .select(col("id"), col("codes"), col("cell").cast("int").as("cell")),
       spark.read.parquet(s"$path/embById")
         .select(col("bucket").cast("int").as("bucket"), col("id"), col("emb")),
-      spark.read.parquet(s"$path/centroids"),
+      IvfIndex.readCentroids(spark, path),
       spark.read.parquet(s"$path/codebooks"),
       IndexCache.readTombstones(spark, path))
 
@@ -266,24 +275,6 @@ object IvfPqIndex {
         save(ivfpq.append(load(spark, published), delta, idCol, embCol),
           staging))
 
-  /** Frozen-centroid cell routing of a prepared delta ((id, unit) rows)
-    * — the assignment metric and tie-break live HERE once, shared by the
-    * in-memory [[IvfPqIndex.append]] and the on-disk [[appendOnDisk]]
-    * (the composite twin of [[IvfIndex.assignDelta]]). */
-  private def routeCells(prepared: DataFrame,
-      centroids: DataFrame): DataFrame = {
-    import graft.functions.TopKByScore
-    prepared
-      .select(col("id"),
-        transform(col("unit"), x => x.cast("float")).as("unitf"))
-      .crossJoin(broadcast(centroids))
-      .select(col("id"), col("cell"),
-        l2Distance(col("unitf"), col("centroid")).as("dist"))
-      .groupBy(col("id"))
-      .agg(TopKByScore(1)(-col("dist"), col("cell").cast("long")).as("best"))
-      .select(col("id"), element_at(col("best.id"), 1).cast("int").as("cell"))
-  }
-
   /** The composite-index O(delta) refresh ([[IndexCache.linkAppend]]):
     * hardlink every published table (codedCell cell dirs, embById/idMap
     * buckets, centroid + codebook tables, sidecar) into `staging` and
@@ -310,13 +301,10 @@ object IvfPqIndex {
       return false
     IndexCache.linkAppend(spark, published, staging, Layout, deltaIds) { st =>
       if (!prepared.isEmpty) {
-        val codebooks = spark.read.parquet(s"$published/codebooks")
-        val centroids = spark.read.parquet(s"$published/centroids")
-        val codedDelta = ivfpq.pq.encodeWith(prepared,
-          ivfpq.pq.codebookArray(codebooks)).localCheckpoint()
-        val cellDelta = routeCells(prepared, centroids)
-        codedDelta.select(col("id"), col("codes"))
-          .join(cellDelta, "id")
+        val codedDelta = ivfpq.encodeDelta(prepared,
+          spark.read.parquet(s"$published/codebooks"),
+          IvfIndex.readCentroids(spark, published)).localCheckpoint()
+        codedDelta.select(col("id"), col("codes"), col("cell"))
           .write.mode("append").partitionBy("cell")
           .parquet(s"$st/codedCell")
         PqIndex.withBucket(codedDelta.select(col("id"), col("emb")))

@@ -181,9 +181,8 @@ object AnnIndexRegistry {
 
   private def loadCentroids(spark: SparkSession,
       indexPath: String): Array[(Int, Array[Double])] =
-    spark.read.parquet(s"$indexPath/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
-      .sortBy(_._1)
+    graft.ml.IvfIndex.centresOf(graft.ml.IvfIndex.readCentroids(spark,
+      indexPath)).zipWithIndex.map(_.swap)
 
   /** The data schemas of an IVF artifact's probed tables, read once at
     * registration: `assigned`, `augmented` when materialized, and the
@@ -281,7 +280,7 @@ object AnnIndexRegistry {
   def indexJob(spark: SparkSession, sourcePath: String, idCol: String,
       embCol: String, ivf: IvfIndex, servedK: Int): Entry = {
     val corpus = spark.read.parquet(sourcePath)
-    val n = corpus.count()
+    val n = graft.ml.IndexCache.rowCount(spark, sourcePath, corpus)
     val dim = corpus.filter(col(embCol).isNotNull)
       .select(org.apache.spark.sql.functions.size(col(embCol)))
       .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(0)

@@ -182,9 +182,7 @@ object VectorStreams {
       nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents: Array[(Int, Array[Double])] = built.centroids.collect()
-      .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
-      .sortBy(_._1)
+    val cents = IvfIndex.centresOf(built.centroids).zipWithIndex.map(_.swap)
     val np = nProbe
     queries.select(col("q_id"), col("q_emb")).as[QueryVec]
       .flatMap { q =>

@@ -97,7 +97,7 @@ object GeoProbe {
         .localCheckpoint()
       println("GEO exact=" + exact.count() + " perRank1=" +
         exact.filter(col("exact_rank") === 1).count())
-      val ranks = new IvfIndex(c, c).cellRanks(builtS, anchors, "__gid",
+      val ranks = JointHistOracle.cellRanks(builtS, anchors, "__gid",
         "embedding", c)
       println("GEO ranks=" + ranks.count())
       val neighborCells = builtS.live

@@ -227,6 +227,40 @@ class IndexAppendSpec extends AnyFunSuite with SparkTestBase {
       centroidSet(IvfIndex.load(spark, path1).centroids))
   }
 
+  test("a link-append grow assigns every delta row by Quantizer.cellOf; IVF and IVF-PQ cells agree") {
+    // one nearest-centre rule for builds and appends: an appended row's
+    // cell is cellOf of its unit vector over the persisted centroid
+    // table, and the two families that share those centroids put every
+    // appended row in the same cell (the registry requires it)
+    val srcDir = new java.io.File(scratchDir("graft-cellof-src"))
+    copyParquetFile(baseHalf, srcDir, "a.parquet")
+    val ivf = new IvfIndex(nCentroids = 8, nProbe = 3)
+    val ivfpq = new IvfPqIndex(nCentroids = 8, nProbe = 3, m = 8, kCentroids = 16)
+    val ivfRoot = scratchDir("graft-cellof-ivf")
+    val pqRoot = scratchDir("graft-cellof-ivfpq")
+    val base = IvfIndex.openOrBuildPath(spark, ivf, srcDir.getPath,
+      "vec_id", "embedding", ivfRoot)
+    IvfPqIndex.openOrBuildPath(spark, ivfpq, srcDir.getPath,
+      "vec_id", "embedding", pqRoot)
+    copyParquetFile(deltaHalf, srcDir, "b.parquet")
+    val grown = IvfIndex.openOrBuildPath(spark, ivf, srcDir.getPath,
+      "vec_id", "embedding", ivfRoot)
+    val grownPq = IvfPqIndex.openOrBuildPath(spark, ivfpq, srcDir.getPath,
+      "vec_id", "embedding", pqRoot)
+    assert(grown != base)
+    def cells(df: DataFrame): Map[Long, Int] = df.filter(col("id") >= 400)
+      .select("id", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // the known-schema centroid read is the schema a read infers
+    assert(IvfIndex.readCentroids(spark, grown).schema ==
+      spark.read.parquet(s"$grown/centroids").schema)
+    val centres = IvfIndex.centresOf(IvfIndex.readCentroids(spark, grown))
+    val expected = cells(Quantizer.prepare(deltaHalf, "vec_id", "embedding")
+      .select(col("id"), Quantizer.cellOf(centres)(col("unit")).as("cell")))
+    assert(expected.size == deltaHalf.count())
+    assert(cells(spark.read.parquet(s"$grown/assigned")) == expected)
+    assert(cells(spark.read.parquet(s"$grownPq/codedCell")) == expected)
+  }
+
   test("hive-partitioned source grows via append even when the id is a partition column (ADVICE r15)") {
     // the r15 recursive fingerprint made partitioned corpora append-
     // eligible; the delta read must keep partition columns visible

@@ -1,6 +1,8 @@
 package graft.ml
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -111,6 +113,110 @@ class IvfGeometrySpec extends AnyFunSuite with SparkTestBase {
       assert(rewritten == s"${first.ivf.nProbe} ${first.measuredRecall}",
         s"sidecar not healed after garbage '$garbage'")
     }
+  }
+
+  /** Hash-derived 16-dim embeddings for ids [from, until), no RNG. */
+  private def batch(from: Long, until: Long): DataFrame =
+    spark.range(from, until)
+      .select(col("id").as("vec_id"),
+        array((0 until 16).map(d =>
+          ((pmod(xxhash64(col("id") * (d + 1) + d), lit(1000)) / 500.0) - 1.0)
+            .cast("float")): _*).as("embedding"))
+
+  /** The one-pass histogram equals the Spark-SQL spelling, map for map. */
+  private def assertSameHist(built: IvfIndex.Built, corpus: DataFrame,
+      c: Int, what: String): Map[(Int, Int), Long] = {
+    val oracle = JointHistOracle.counts(built, corpus, "vec_id", "embedding",
+      c, nAnchors = 32, kCap = 64)
+    val hist = IvfGeometry.buildJointHist(spark, built, corpus, "vec_id",
+      "embedding", c, nAnchors = 32, kCap = 64)
+    assert(oracle.nonEmpty, what)
+    assert(hist.kCap == 64)
+    assert(hist.counts == oracle, what)
+    oracle
+  }
+
+  test("the one-pass joint histogram equals the Spark-SQL spelling, in four jobs and no shuffle") {
+    val dir = scratchDir("graft-geo-hist")
+    val root = scratchDir("graft-geo-hist-idx")
+    val src = s"$dir/embeddings.parquet"
+    val ivf = new IvfIndex(8, 1)
+    batch(0, 1200).repartition(3).write.parquet(src)
+    // a fresh build, counted: a cold calibration's jobs, none a shuffle
+    val path1 = IvfIndex.openOrBuildPath(spark, ivf, src, "vec_id",
+      "embedding", root)
+    val built1 = IvfIndex.load(spark, path1)
+    // the corpus is read (its schema inferred, one job) by the caller
+    val corpus1 = spark.read.parquet(src)
+    val sc = spark.sparkContext
+    val group = s"hist-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffles = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          shuffles.addAndGet(
+            e.stageInfos.count(org.apache.spark.GraftTestBus.isShuffleMapStage))
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "cold calibration")
+    val cold = try {
+      val h = IvfGeometry.buildJointHist(spark, built1, corpus1, "vec_id",
+        "embedding", 8, 32, 64)
+      org.apache.spark.GraftTestBus.drain(sc)
+      h
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    info(s"cold calibration: ${jobs.get} jobs, ${shuffles.get} shuffle stages")
+    assert(jobs.get <= 4, s"cold calibration ran ${jobs.get} jobs")
+    assert(shuffles.get == 0, s"cold calibration ran ${shuffles.get} shuffle stages")
+    assert(cold.counts == assertSameHist(built1, corpus1, 8, "fresh build"))
+
+    // a link-append grow (frozen centroids, delta cells appended)
+    batch(1200, 1500).repartition(2).write.mode("append").parquet(src)
+    val path2 = IvfIndex.openOrBuildPath(spark, ivf, src, "vec_id",
+      "embedding", root)
+    assert(path2 != path1)
+    val grown = IvfIndex.load(spark, path2)
+    assertSameHist(grown, spark.read.parquet(src), 8, "link-append grow")
+
+    // tombstones: every 7th id is deleted from the index but stays in
+    // the corpus, so some anchors' exact neighbours have no live cell and
+    // land in the cr = 0 bucket
+    val tomb = ivf.delete(grown, spark.range(0, 1500, 7).toDF("vec_id"), "vec_id")
+    val withTomb = assertSameHist(tomb, spark.read.parquet(src), 8,
+      "grow with tombstones")
+    assert(withTomb.exists { case ((_, cr), n) => cr == 0 && n > 0 },
+      "no tombstoned anchor neighbour was exercised")
+
+    // a duplicated id in the cell table: the per-pair MIN cell rank
+    val dupCells = IvfIndex.Built(grown.assigned.unionByName(
+      grown.assigned.filter(col("id") % 5 === 0)
+        .withColumn("cell", pmod(col("cell") + 3, lit(8)))),
+      grown.centroids)
+    assertSameHist(dupCells, spark.read.parquet(src), 8,
+      "duplicated id in the cell table")
+  }
+
+  test("the one-pass joint histogram matches on zero-norm rows and tied cosines") {
+    // zero-norm rows: excluded from both sides of the exact oracle
+    val zeros = spark.range(2000, 2040).select(col("id").as("vec_id"),
+      array(Seq.fill(16)(lit(0.0f)): _*).as("embedding"))
+    val withZeros = batch(0, 800).unionByName(zeros).repartition(3)
+      .localCheckpoint()
+    val ivf = new IvfIndex(8, 1)
+    assertSameHist(ivf.build(spark, withZeros, "vec_id", "embedding"),
+      withZeros, 8, "zero-norm rows")
+    // duplicated vectors under distinct ids: every tie is broken by id
+    val base = batch(0, 500)
+    val dups = base.unionByName(base.select((col("vec_id") + 10000).as("vec_id"),
+      col("embedding"))).repartition(4).localCheckpoint()
+    assertSameHist(ivf.build(spark, dups, "vec_id", "embedding"), dups, 8,
+      "duplicated vectors")
   }
 
   test("calibration on a corpus with no searchable vectors fails fast and descriptively") {
