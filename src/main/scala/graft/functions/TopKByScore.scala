@@ -1,106 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
-
-/** One kNN hit: similarity score + neighbor id. */
-case class Hit(score: Double, id: Long)
-
-/**
- * Bounded top-k-by-score aggregate for batch kNN joins.
- *
- * Why not `row_number() over (partition by q_id order by score desc)`:
- * the window plan shuffles EVERY scored (query, corpus) pair — |corpus|×|Q|
- * rows — then discards all but k per query. This Aggregator is a typed
- * UDAF, so Spark runs it with partial aggregation: each task reduces its
- * partition to at most k hits per query locally, and only |partitions|×k
- * candidates per query ever cross the shuffle. At a 100 TB corpus that is
- * the difference between shuffling the dataset and shuffling kilobytes.
- *
- * Determinism: hits are totally ordered by (score desc, id asc) — the same
- * tie-break the oracle's ROW_NUMBER uses — and both reduce and merge
- * preserve that order, so the result is partitioning-independent.
- */
-class TopKByScore(k: Int) extends Aggregator[(Double, Long), Seq[Hit], Seq[Hit]] {
-  require(k > 0, s"k must be positive, got $k")
-
-  /** The bound, readable by [[graft.plans.AnnIndexRule]]'s batch-kNN
-    * matcher (the aggregator instance is all the logical plan carries). */
-  private[graft] def kValue: Int = k
-
-  private def lt(a: Hit, b: Hit): Boolean =
-    a.score > b.score || (a.score == b.score && a.id < b.id)
-
-  /** Insert into a descending-sorted bounded buffer. */
-  private def insert(buf: Seq[Hit], h: Hit): Seq[Hit] =
-    if (buf.size == k && !lt(h, buf.last)) buf
-    else {
-      val (before, after) = buf.span(lt(_, h))
-      (before ++ (h +: after)).take(k)
-    }
-
-  override def zero: Seq[Hit] = Vector.empty
-
-  override def reduce(buf: Seq[Hit], in: (Double, Long)): Seq[Hit] =
-    // NaN scores contribute nothing (r18, ADVICE): under the all-false
-    // comparisons of the (score desc, id asc) order a NaN hit would
-    // PREPEND to a non-full buffer and shadow later buf.last evictions
-    // here, while the heap left it at an arbitrary position — two
-    // divergent wrong answers. cosineSim of a zero-norm vector is the
-    // realistic source; every query path filters those, so this is a
-    // robustness pin (spec-pinned in TopKByScoreSpec), not a
-    // behavior change for any declared query.
-    if (in._1.isNaN) buf else insert(buf, Hit(in._1, in._2))
-
-  override def merge(a: Seq[Hit], b: Seq[Hit]): Seq[Hit] = {
-    // merge two sorted bounded buffers (classic merge step, then cap)
-    val out = Vector.newBuilder[Hit]
-    var (i, j, n) = (0, 0, 0)
-    while (n < k && (i < a.size || j < b.size)) {
-      if (j >= b.size || (i < a.size && lt(a(i), b(j)))) { out += a(i); i += 1 }
-      else { out += b(j); j += 1 }
-      n += 1
-    }
-    out.result()
-  }
-
-  override def finish(r: Seq[Hit]): Seq[Hit] = r
-  override def bufferEncoder = ExpressionEncoder[Seq[Hit]]()
-  override def outputEncoder = ExpressionEncoder[Seq[Hit]]()
-}
-
-/**
- * Null-SKIPPING variant: rows whose score expression is null contribute
- * nothing (the untyped UDAF path would decode a null primitive double as
- * 0.0 — a phantom hit). This is what lets ONE grouped aggregation carry
- * several channel-conditional top-k lists (`when(ch === "x", score)`):
- * a streaming plan allows only one stateful aggregation, so multi-list
- * reductions must share it.
- */
-class TopKByScoreNullSkipping(k: Int)
-    extends Aggregator[(Option[Double], Long), Seq[Hit], Seq[Hit]] {
-  private val inner = new TopKByScore(k)
-  override def zero: Seq[Hit] = inner.zero
-  override def reduce(buf: Seq[Hit], in: (Option[Double], Long)): Seq[Hit] =
-    in._1.fold(buf)(s => inner.reduce(buf, (s, in._2)))
-  override def merge(a: Seq[Hit], b: Seq[Hit]): Seq[Hit] = inner.merge(a, b)
-  override def finish(r: Seq[Hit]): Seq[Hit] = r
-  override def bufferEncoder = ExpressionEncoder[Seq[Hit]]()
-  override def outputEncoder = ExpressionEncoder[Seq[Hit]]()
-}
 
 /**
  * Mutable bounded top-k state for [[TopKByScoreAgg]]: parallel primitive
  * arrays laid out as a binary MIN-heap under the total order
  * (score asc, id desc), so the root is the WORST kept hit and a full
  * buffer rejects a non-qualifying row with one comparison and ZERO
- * allocations. The immutable-`Vector` Aggregator above pays an O(k)
+ * allocations. The immutable-`Vector` reference Aggregator pays an O(k)
  * span/concat/take rebuild PER INPUT ROW (the r17 bitext probe measured
  * the k=16 aggregation at 4x the cost of the k=4 one over the same
  * 963k-row stream — pure buffer-rebuild allocation); this heap is the
@@ -111,10 +21,9 @@ final class TopKHeap(val k: Int) extends Serializable {
   val scores: Array[Double] = new Array[Double](k)
   val ids: Array[Long] = new Array[Long](k)
 
-  /** (s1, i1) strictly worse than (s2, i2) under (score desc, id asc) —
-    * the same primitive comparisons as [[TopKByScore.lt]], so NaN
-    * handling (all comparisons false => "not worse") matches the
-    * reference Aggregator's keep/reject decisions. */
+  /** (s1, i1) strictly worse than (s2, i2) under (score desc, id asc):
+    * all comparisons are false on NaN ("not worse"), which is why
+    * [[insert]] refuses NaN outright. */
   @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
     s1 < s2 || (s1 == s2 && i1 > i2)
 
@@ -139,8 +48,7 @@ final class TopKHeap(val k: Int) extends Serializable {
 
   def insert(s: Double, id: Long): Unit =
     // NaN never enters the heap (r18, ADVICE): all-false comparisons
-    // would park it wherever it lands and break the sift invariants —
-    // see TopKByScore.reduce for the shared skip-NaN contract
+    // would park it wherever it lands and break the sift invariants
     if (s != s) ()
     else if (n < k) {
       var i = n
@@ -200,13 +108,12 @@ object TopKHeap {
 /**
  * Catalyst-native spelling of the bounded top-k aggregate (r17
  * optimization): a [[TypedImperativeAggregate]] whose buffer is the
- * no-alloc [[TopKHeap]]. The udaf-wrapped [[TopKByScore]] Aggregator
- * above remains as the executable reference implementation its
- * unit/property specs pin; every query path routes through this one.
- * Same algebra, same (score desc, id asc) output order, same null
- * decode as the untyped udaf path (null score/id -> 0.0/0L — the
- * phantom-hit semantics [[TopKByScoreNullSkipping]] documents), and a
- * `skipNulls` flag carrying that variant's skip semantics.
+ * no-alloc [[TopKHeap]]; every query path routes through it. A null
+ * score or id decodes as 0.0/0L (a phantom hit) unless `skipNulls`,
+ * where a null-score row contributes nothing: that is what lets ONE
+ * grouped aggregation carry several channel-conditional top-k lists
+ * (`when(ch === "x", score)`), since a streaming plan allows only one
+ * stateful aggregation.
  */
 case class TopKByScoreAgg(
     score: Expression,
@@ -265,16 +172,34 @@ case class TopKByScoreAgg(
 }
 
 object TopKByScoreAgg {
-  /** array<struct<score:double,id:bigint>> — the [[Hit]] shape every
+  /** array<struct<score:double,id:bigint>> — the hit shape every
     * consumer reads (`h.score`, `h.id`). */
   val OutType: DataType = ArrayType(StructType(Seq(
     StructField("score", DoubleType, nullable = false),
     StructField("id", LongType, nullable = false))), containsNull = false)
 }
 
+/**
+ * Bounded top-k-by-score aggregate for batch kNN joins:
+ * `TopKByScore(k)(score, id)` is an `array<struct<score, id>>` of the k
+ * best (score, id) rows, totally ordered by (score desc, id asc) — the
+ * same tie-break the oracle's ROW_NUMBER uses.
+ *
+ * Why not `row_number() over (partition by q_id order by score desc)`:
+ * the window plan shuffles EVERY scored (query, corpus) pair — |corpus|×|Q|
+ * rows — then discards all but k per query. This aggregate runs with
+ * partial aggregation: each task reduces its partition to at most k hits
+ * per query locally, and only |partitions|×k candidates per query ever
+ * cross the shuffle. At a 100 TB corpus that is the difference between
+ * shuffling the dataset and shuffling kilobytes. Both reduce and merge
+ * preserve the total order, so the result is partitioning-independent.
+ * NaN scores contribute nothing (the realistic source is the cosine of a
+ * zero-norm vector). The typed `Aggregator` spelling it replaced lives
+ * in test scope as the reference the equivalence specs compare against.
+ */
 object TopKByScore {
-  /** Applies the Catalyst-native [[TopKByScoreAgg]] — same call shape as
-    * the previous udaf handle: `TopKByScore(3)(col("score"), col("id"))`. */
+  /** Applies the Catalyst-native [[TopKByScoreAgg]]:
+    * `TopKByScore(3)(col("score"), col("id"))`. */
   final case class Handle(k: Int, skipNulls: Boolean) {
     def apply(score: org.apache.spark.sql.Column,
         id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -293,10 +218,4 @@ object TopKByScore {
 
   /** Null-skipping handle for channel-conditional multi-list aggregation. */
   def nullSkipping(k: Int): Handle = Handle(k, skipNulls = true)
-
-  /** The reference udaf spellings, kept for the equivalence specs. */
-  private[graft] def referenceUdaf(k: Int): UserDefinedFunction =
-    udaf(new TopKByScore(k), ExpressionEncoder[(Double, Long)]())
-  private[graft] def referenceNullSkippingUdaf(k: Int): UserDefinedFunction =
-    udaf(new TopKByScoreNullSkipping(k), ExpressionEncoder[(Option[Double], Long)]())
 }

@@ -76,7 +76,7 @@ private[graft] object IndexCache {
   /** Exact row count of the parquet source `df` reads: from its footers
     * ([[rowCountFromFooters]]), else a counting job. */
   private[graft] def rowCount(spark: SparkSession, sourcePath: String,
-      df: DataFrame): Long =
+      df: => DataFrame): Long =
     rowCountFromFooters(spark.sparkContext.hadoopConfiguration, sourcePath)
       .getOrElse(df.count())
 

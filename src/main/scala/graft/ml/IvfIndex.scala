@@ -1,7 +1,9 @@
 package graft.ml
 
 import graft.functions.VectorFunctions.cosineSim
-import graft.functions.TopKByScore
+import graft.functions.{TopKByScore, TopKHeap, VectorKernels}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
@@ -187,6 +189,26 @@ object IvfIndex {
     require(byCell.map(_._1).sameElements(byCell.indices),
       "a centroid table's cells must be 0 until its row count")
     byCell.map(_._2)
+  }
+
+  /** Driver-side cell routing over `centres` ([[centresOf]]), the SQL
+    * route of [[search]] computed without a job: `cosine_similarity` of
+    * the query against each centroid, then `TopKByScore(nProbe)`. Cells
+    * come best first under (score desc, cell asc), scored by the shared
+    * kernel, and a NaN score (a zero-norm query or centroid) never
+    * routes. The centres are converted once; the returned function
+    * routes one query and may ship in a task closure. */
+  private[graft] def route(centres: Array[Array[Double]],
+      nProbe: Int): Array[Float] => Array[Int] = {
+    val cs: Array[ArrayData] =
+      centres.map(c => UnsafeArrayData.fromPrimitiveArray(c.map(_.toFloat)))
+    q => {
+      val qa = UnsafeArrayData.fromPrimitiveArray(q)
+      val h = new TopKHeap(nProbe)
+      cs.indices.foreach(cell => h.insert(VectorKernels.cosine(qa, cs(cell)), cell))
+      val (_, cells, m) = h.drainSortedDesc()
+      cells.take(m).map(_.toInt)
+    }
   }
 
   /** The frozen-quantizer delta encode shared by the in-memory
@@ -377,11 +399,21 @@ object IvfIndex {
       idCol: String,
       embCol: String,
       cacheRoot: String = IndexCache.DefaultIvfRoot): String =
+    openOrBuildPath(spark, ivf, sourcePath, spark.read.parquet(sourcePath),
+      idCol, embCol, cacheRoot)
+
+  /** [[openOrBuildPath]] over `corpus`, the caller's own read of
+    * `sourcePath` (only a cold build reads it): a caller that reads the
+    * corpus anyway ([[IvfGeometry]]'s calibration) shares one read, and
+    * one schema-inference job, with the build. */
+  private[ml] def openOrBuildPath(spark: SparkSession, ivf: IvfIndex,
+      sourcePath: String, corpus: => DataFrame, idCol: String, embCol: String,
+      cacheRoot: String): String =
     // a grown source encodes ONLY the new files against the frozen
     // centroids — no k-means fit on either grow form
     IndexCache.openOrGrow(spark, sourcePath, ivf.fingerprint, cacheRoot,
       Layout) { staging =>
-      save(ivf.build(spark, spark.read.parquet(sourcePath), idCol, embCol), staging)
+      save(ivf.build(spark, corpus, idCol, embCol), staging)
     }((published, delta, staging) =>
         appendOnDisk(spark, published, delta, idCol, embCol, staging),
       (published, delta, staging) =>

@@ -918,7 +918,8 @@ object AnnIndexRule extends Rule[LogicalPlan] {
       if (thresholdOnly) math.min(2 * entry.nProbe, entry.centroids.length)
       else math.min(entry.centroids.length,
         math.ceil(entry.nProbe * k2k).toInt)
-    val cells = route(queryVec, entry.centroids, probeN)
+    val cells = graft.ml.IvfIndex.route(entry.centroids.map(_._2), probeN)(
+      queryVec.map(_.toFloat)).toSeq
     if (cells.isEmpty) return None
 
     // the replacement: cell-partition-pruned scan of the index table
@@ -1362,18 +1363,5 @@ object AnnIndexRule extends Rule[LogicalPlan] {
         .join(idMap, Seq("bucket", "sid"))
         .select(col("id"), col("emb")))
     }
-  }
-
-  private def route(q: Array[Double], centroids: Array[(Int, Array[Double])],
-      nProbe: Int): Seq[Int] = {
-    val nq = math.sqrt(q.map(x => x * x).sum)
-    if (nq == 0.0) return Seq.empty
-    centroids.map { case (cell, c) =>
-      var dot = 0.0; var nc = 0.0; var i = 0
-      while (i < c.length && i < q.length) {
-        dot += q(i) * c(i); nc += c(i) * c(i); i += 1
-      }
-      (cell, if (nc == 0.0) -1.0 else dot / (nq * math.sqrt(nc)))
-    }.sortBy { case (cell, s) => (-s, cell) }.take(nProbe).map(_._1).toSeq
   }
 }

@@ -47,22 +47,17 @@ object AnnQueries extends QueryPack {
       .select(col("q_id"), explode(col("hits.id")).as("neighbor_id"))
   }
 
-  /** One exact-top-k frame per (session, dir, corpus-slice, |Q|, k),
-    * computed once and localCheckpoint-pinned: the `ann_*` family's
-    * verdict riders all compare against the same handful of exact frames
-    * (6 queries share the (full, 20, 3) frame alone), so recomputing the
-    * brute-force probe per query paid the corpus×|Q| scan up to 6× per
-    * Verify/Bench session for identical rows. [[graft.util.SessionCache]]
-    * owns the stopped-session eviction contract (spec-pinned in
-    * `SessionCacheSpec`). Entries are |Q|×k rows — driver-trivial. */
-  private val exactTopKCache =
-    new graft.util.SessionCache[(String, String, Int, Int), DataFrame](
-      buildName = Some("exact_topk"))
-
+  /** One exact-top-k frame per (corpus, corpus-slice, |Q|, k), pinned
+    * once: the `ann_*` family's verdict riders all compare against the
+    * same handful of exact frames (6 queries share the (full, 20, 3)
+    * frame alone), so recomputing the brute-force probe per query paid
+    * the corpus×|Q| scan up to 6× per Verify/Bench session for identical
+    * rows. Entries are |Q|×k rows — driver-trivial. */
   private def exactTopKCached(s: SparkSession, dir: String, sliceTag: String,
       corpus: => DataFrame, queriesDf: => DataFrame, nQueries: Int,
       k: Int): DataFrame =
-    exactTopKCache.getOrElseUpdate(s, (dir, sliceTag, nQueries, k)) {
+    graft.util.SharedArtifact(s, "exact_topk", Seq(s"$dir/embeddings.parquet"),
+        (sliceTag, nQueries, k)) {
       // the exact frame IS the recall baseline: its bare-cosine crossJoin
       // + TopKByScore spelling is exactly what the batch-kNN rewrite
       // (r17) matches, so materialize it under the kill switch — a
@@ -149,23 +144,18 @@ object AnnQueries extends QueryPack {
       .filter(col("score") >= minCos)
   }
 
-  /** One exact-pair frame per (session, dir, threshold) — the pairs
-    * analog of [[exactTopKCached]], and the r9→r10 cost attribution for
+  /** One exact-pair frame per (corpus, threshold) — the pairs analog
+    * of [[exactTopKCached]], and the r9→r10 cost attribution for
     * ann_semantic_dedup: its 1.3 s over the r8 number was exactly the
     * O(N²/2) justification rider added with the verdict oracle, computed
-    * AGAIN after ann_cosine_pairs had already built the identical frame. */
-  private val exactPairsCache =
-    new graft.util.SessionCache[(String, Double), DataFrame](
-      buildName = Some("exact_pairs"))
-
-  /** The embeddings frame is derived from `dir` INSIDE the build (not
-    * taken as a parameter) so the cache key fully determines the cached
-    * value — a caller with a filtered slice cannot be served the
-    * full-corpus pair set as its exactness oracle. */
+    * AGAIN after ann_cosine_pairs had already built the identical frame.
+    * The embeddings frame is read from `dir` INSIDE the build (not taken
+    * as a parameter), so a caller with a filtered slice cannot be served
+    * the full-corpus pair set as its exactness oracle. */
   private def exactPairsCached(s: SparkSession, dir: String,
       minCos: Double): DataFrame =
-    exactPairsCache.getOrElseUpdate(s, (dir, minCos))(
-      exactPairs(t(s, dir, "embeddings"), minCos).localCheckpoint())
+    graft.util.SharedArtifact(s, "exact_pairs", Seq(s"$dir/embeddings.parquet"),
+        minCos)(exactPairs(t(s, dir, "embeddings"), minCos).localCheckpoint())
 
   override def queries: Map[String, Q] = Map(
     // LSH-bucketed embedding near-dup pairs (approx analog of

@@ -80,21 +80,16 @@ object DedupQueries extends QueryPack {
         concat_ws(" ", slice(tk, lit(2), greatest(size(tk) - 1, lit(0)))).as("txt")))
   }
 
-  /** One verified near-dup pair table per (session, dir): three queries
-    * consume the identical LSH-banded, Jaccard-verified edge set
+  /** One verified near-dup pair table per documents table: three
+    * queries consume the identical LSH-banded, Jaccard-verified edge set
     * (dedup_near_minhash emits it, dedup_components and
     * dedup_cluster_keep_best treat it as edges), so the band join +
-    * verify ran up to 3x per Verify/Bench session for the same rows —
-    * the same shared-oracle-frame discipline as AnnQueries'
-    * exactTopKCached. At 100 TB this IS the design: the pair table is a
-    * persisted artifact of the dedup index job, not a per-query scan.
-    * Eviction contract lives in graft.util.SessionCache. */
-  private val nearDupPairsCache = new graft.util.SessionCache[String, DataFrame](
-    buildName = Some("near_dup_pairs"))
-
+    * verify ran up to 3x per Verify/Bench session for the same rows.
+    * At 100 TB this IS the design: the pair table is a persisted
+    * artifact of the dedup index job, not a per-query scan. */
   private def verifiedNearDupPairsCached(s: SparkSession, dir: String): DataFrame =
-    nearDupPairsCache.getOrElseUpdate(s, dir)(
-      verifiedNearDupPairs(s, dir).localCheckpoint())
+    graft.util.SharedArtifact(s, "near_dup_pairs", Seq(s"$dir/documents.parquet"),
+      ())(verifiedNearDupPairs(s, dir).localCheckpoint())
 
   private def verifiedNearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val corpus = nearDupCorpus(s, dir)

@@ -31,16 +31,13 @@ object SimilarityQueries extends QueryPack {
   private val Dim = 64
 
   /** The exact margin-mining frame (f_id, f_lang, e_id, cos, margin),
-    * unordered — built once per (session, dir) and shared by
-    * `corpus_bitext_mine` (which IS this frame, ordered) and
+    * unordered — built once per (embeddings, documents) pair and shared
+    * by `corpus_bitext_mine` (which IS this frame, ordered) and
     * `ann_bitext_mine` (which uses the e_id picks as its agreement
-    * oracle). N_f rows — driver-trivial once checkpointed; the build
-    * cost surfaces in the bench as `_shared_build:bitext_exact`. */
-  private val bitextExactCache = new graft.util.SessionCache[String, DataFrame](
-    buildName = Some("bitext_exact"))
-
+    * oracle). N_f rows — driver-trivial once checkpointed. */
   private def bitextExactCached(s: SparkSession, dir: String): DataFrame =
-    bitextExactCache.getOrElseUpdate(s, dir)(
+    graft.util.SharedArtifact(s, "bitext_exact",
+        Seq(s"$dir/embeddings.parquet", s"$dir/documents.parquet"), ())(
       bitextMineExact(s, dir).localCheckpoint())
 
   /** The CCMatrix/LASER margin criterion, exact spelling — see the

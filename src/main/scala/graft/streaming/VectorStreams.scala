@@ -173,34 +173,19 @@ object VectorStreams {
   }
 
   /** Stateless centroid routing shared by [[indexedKnn]] and
-    * [[semanticScreen]]: each query row fans out to its `nProbe`
-    * max-cosine cells (tie-break cell asc — the `IvfIndex.search`
-    * contract) via a per-row map with the few-KiB centroid table in the
-    * task closure. Zero-norm queries have no cosine direction and are
-    * dropped. */
+    * [[semanticScreen]]: each query row fans out to its `nProbe` cells
+    * under [[IvfIndex.route]] via a per-row map with the few-KiB
+    * centroid table in the task closure. Zero-norm queries have no
+    * cosine direction and are dropped. */
   private def route(queries: DataFrame, built: IvfIndex.Built,
       nProbe: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents = IvfIndex.centresOf(built.centroids).zipWithIndex.map(_.swap)
-    val np = nProbe
+    val cellsOf = IvfIndex.route(IvfIndex.centresOf(built.centroids), nProbe)
     queries.select(col("q_id"), col("q_emb")).as[QueryVec]
-      .flatMap { q =>
-        val v = q.q_emb.map(_.toDouble).toArray
-        val nv = math.sqrt(v.map(x => x * x).sum)
-        if (nv == 0.0) Iterator.empty
-        else {
-          val scoredCells = cents.map { case (cell, c) =>
-            var dot = 0.0; var nc = 0.0; var i = 0
-            while (i < c.length && i < v.length) {
-              dot += v(i) * c(i); nc += c(i) * c(i); i += 1
-            }
-            (cell, dot / (nv * math.sqrt(nc)))
-          }
-          scoredCells.sortBy { case (cell, s) => (-s, cell) }.take(np)
-            .iterator.map { case (cell, _) => RoutedQuery(q.q_id, q.q_emb, cell) }
-        }
-      }.toDF()
+      .flatMap(q => cellsOf(q.q_emb.toArray).iterator
+        .map(cell => RoutedQuery(q.q_id, q.q_emb, cell)))
+      .toDF()
   }
 
   def indexedKnn(queries: DataFrame, built: IvfIndex.Built,

@@ -3,10 +3,10 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /**
- * Session-scoped memo for localCheckpoint-pinned oracle frames (the
- * `exactTopKCached` / `exactPairsCached` / shared-pair-table
- * discipline): one value per (live session, key), where entries for
- * STOPPED sessions are purged on every access.
+ * Session-scoped memo: one value per (live session, key), where entries
+ * for STOPPED sessions are purged on every access. Priced shared builds
+ * go through [[SharedArtifact]]; plain instances hold values that are
+ * not derived from a source table.
  *
  * Why both mechanisms: the outer map weak-keys the SparkSession OBJECT
  * so a new session can never be served a dead session's checkpoint
@@ -24,15 +24,9 @@ import org.apache.spark.sql.SparkSession
  * the same key share one build; callers of different keys (or
  * sessions) never wait on each other. A build that throws leaves the
  * slot empty, so the next caller retries instead of caching a failure.
- *
- * `buildName` (when set) reports each build's wall time to
- * [[SharedBuilds]], so `graft.Bench` can emit the amortized
- * one-per-session costs as explicit `_shared_build:*` entries instead
- * of letting them vanish into the warmup pass.
  */
 class SessionCache[K, V](
-    isStopped: SparkSession => Boolean = _.sparkContext.isStopped,
-    buildName: Option[String] = None) {
+    isStopped: SparkSession => Boolean = _.sparkContext.isStopped) {
 
   // @volatile: size/contains read slot values WITHOUT the slot monitor —
   // taking it while holding the cache lock would park the whole cache
@@ -61,9 +55,7 @@ class SessionCache[K, V](
       slot.value match {
         case Some(v) => v
         case None =>
-          val t0 = System.nanoTime()
           val v = build
-          buildName.foreach(SharedBuilds.record(_, (System.nanoTime() - t0) / 1e9))
           slot.value = Some(v)
           v
       }
@@ -95,7 +87,47 @@ class SessionCache[K, V](
 }
 
 /**
- * Per-process ledger of SessionCache build costs: the session caches
+ * A session-shared, priced artifact derived from source tables: an
+ * exact-oracle frame, a verified pair table, a decoded media catalog,
+ * a calibrated IVF geometry. Each is built once and reused by every
+ * consumer query in the session. The contract, for every name:
+ *
+ *  - Keying: (name, key, and the [[graft.ml.IndexCache.sourceSignature]]
+ *    of each path in `sources`). A table rewritten in place, same path
+ *    and new content, therefore rebuilds instead of serving the old
+ *    artifact. `sources` must name every table the build reads and
+ *    `key` every other input that shapes the value; one name holds one
+ *    value type. The signature is a driver-side listing plus a 64 KiB
+ *    head CRC per local file (a listing only on a remote scheme), so a
+ *    hit runs no Spark job.
+ *  - Pricing: a build's wall time adds into [[SharedBuilds]] under
+ *    `name`, which `graft.Bench` emits as `_shared_build:<name>`.
+ *  - Eviction and failure: [[SessionCache]]'s. Entries die with their
+ *    session, one key's racers share one build while other keys never
+ *    wait, and a build that throws caches and prices nothing, so the
+ *    next lookup retries. An entry superseded by a rewrite stays until
+ *    its session stops.
+ *
+ * Nothing is pinned here: a DataFrame build checkpoints itself, once.
+ */
+object SharedArtifact {
+  private val cache = new SessionCache[(String, Any, Seq[(String, String)]), Any]()
+
+  def apply[V](spark: SparkSession, name: String, sources: Seq[String],
+      key: Any)(build: => V): V = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val signed = sources.map(p => p -> graft.ml.IndexCache.sourceSignature(conf, p))
+    cache.getOrElseUpdate(spark, (name, key, signed)) {
+      val t0 = System.nanoTime()
+      val v = build
+      SharedBuilds.record(name, (System.nanoTime() - t0) / 1e9)
+      v
+    }.asInstanceOf[V]
+  }
+}
+
+/**
+ * Per-process ledger of SharedArtifact build costs: the shared artifacts
  * amortize one expensive build (near-dup pair table ~seconds, exact
  * top-k/pair frames) across every consumer query, which made those
  * costs invisible in per-query bench numbers — `dedup_near_minhash`

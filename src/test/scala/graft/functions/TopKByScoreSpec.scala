@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.SparkTestBase
+import graft.functions.TopKReference._
 import org.scalatest.funsuite.AnyFunSuite
 
 class TopKByScoreSpec extends AnyFunSuite with SparkTestBase {

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.scalacheck.{Gen, Properties}
+import graft.functions.TopKReference._
 import org.scalacheck.Prop.forAll
 
 /** Algebraic laws of the bounded top-k aggregator: any partitioning of the
