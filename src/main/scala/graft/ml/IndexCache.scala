@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -414,16 +415,30 @@ private[graft] object IndexCache {
     * read keeps `basePath`: the new files are LEAF files, and a
     * hive-partitioned corpus keeps its partition columns only in the
     * directory structure — without the base path a partition-column id
-    * would vanish from the delta's schema (ADVICE r15). */
+    * would vanish from the delta's schema (ADVICE r15). The delta is read
+    * with the schema of the whole source, partition columns included. */
   private[graft] def openOrGrow(spark: SparkSession, sourcePath: String,
       paramsFingerprint: String, cacheRoot: String, layout: Layout)(
       build: String => Unit)(
       linkAppend: (String, DataFrame, String) => Boolean,
       rewrite: (String, DataFrame, String) => Unit): String =
+    openOrGrow(spark, sourcePath, spark.read.parquet(sourcePath),
+      paramsFingerprint, cacheRoot, layout)(build)(linkAppend, rewrite)
+
+  /** [[openOrGrow]] with `corpus`, the caller's own read of `sourcePath`,
+    * whose schema the grow step reads the delta with: a caller that reads
+    * the corpus anyway ([[IvfGeometry]]'s calibration after a grow) then
+    * infers one schema where the delta's read would infer another. */
+  private[graft] def openOrGrow(spark: SparkSession, sourcePath: String,
+      corpus: => DataFrame, paramsFingerprint: String, cacheRoot: String,
+      layout: Layout)(
+      build: String => Unit)(
+      linkAppend: (String, DataFrame, String) => Boolean,
+      rewrite: (String, DataFrame, String) => Unit): String =
     openOrBuildIncremental(sourcePath, paramsFingerprint, cacheRoot,
       layout.successRel)(build) { (published, newFiles, staging) =>
-      val delta = spark.read.option("basePath", sourcePath)
-        .parquet(newFiles: _*)
+      val delta = spark.read.schema(corpus.schema)
+        .option("basePath", sourcePath).parquet(newFiles: _*)
       if (!linkAppend(published, delta, staging))
         rewrite(published, delta, staging)
     }
@@ -449,12 +464,21 @@ private[graft] object IndexCache {
    * Old-artifact CONTRACT sidecars (nprobe calibration, registration
    * record, cache manifest, `augmented`) are deliberately not linked:
    * the grown artifact recalibrates and re-registers.
+   *
+   * The key table and the sidecar both hold ids of `deltaIds`' key
+   * domain, so both are read with its `id` field (inferring their
+   * schemas costs a footer job each) and probed together in one
+   * [[overlaps]].
    */
   private[graft] def linkAppend(spark: SparkSession, published: String,
       staging: String, layout: Layout, deltaIds: DataFrame)(
       writeDelta: String => Unit): Boolean = {
-    if (overlaps(spark.read.parquet(s"$published/${layout.keyTable}"), deltaIds) ||
-        readTombstones(spark, published).exists(overlaps(_, deltaIds)) ||
+    val idSchema = StructType(Seq(deltaIds.schema("id").copy(nullable = true)))
+    val keys = spark.read.schema(idSchema)
+      .parquet(s"$published/${layout.keyTable}").select("id")
+    val taken = readTombstones(spark, published, Some(idSchema))
+      .fold(keys)(keys.unionByName(_))
+    if (overlaps(taken, deltaIds) ||
         !linkArtifactTables(published, staging,
           (layout.keyTable +: layout.tables) :+ TombstonesRel))
       return false
@@ -462,9 +486,12 @@ private[graft] object IndexCache {
     true
   }
 
-  /** Whether any `id` of `keys` is among `ids` — a one-row probe. */
+  /** Whether any `id` of `keys` is among `ids`: the top-1 of their semi-
+    * join, one job over every partition after the broadcast of a small
+    * `ids` (`limit(1).count()` adds a shuffle job to that). */
   private[graft] def overlaps(keys: DataFrame, ids: DataFrame): Boolean =
-    keys.select("id").join(ids, Seq("id"), "left_semi").limit(1).count() > 0
+    keys.select("id").join(ids, Seq("id"), "left_semi")
+      .orderBy("id").limit(1).collect().nonEmpty
 
   /** Hardlink each existing table dir of `published` into `staging` and
     * write a FRESH (unshared) success marker per table — a linked marker
@@ -518,7 +545,7 @@ private[graft] object IndexCache {
   /** A parquet table dir whose writer finished (`_SUCCESS`), else None.
     * A known `schema` skips the footer-inference job. */
   private[graft] def loadOptional(spark: SparkSession, dir: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[StructType] = None)
       : Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -530,7 +557,7 @@ private[graft] object IndexCache {
   /** The artifact's pending deletes, None when it has none. The serve
     * path passes the registered `schema`. */
   private[graft] def readTombstones(spark: SparkSession, artifact: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      schema: Option[StructType] = None)
       : Option[DataFrame] =
     loadOptional(spark, s"$artifact/$TombstonesRel", schema)
 
@@ -541,14 +568,19 @@ private[graft] object IndexCache {
       .parquet(s"$artifact/$TombstonesRel"))
 
   /** Union `dead` into a published artifact's sidecar (idempotent — a
-    * distinct union). Materialized before the overwrite because the union
-    * otherwise reads the directory the write is replacing.
-    * O(|sidecar| + |batch|), never touches index tables. */
+    * distinct union). A union with an existing sidecar is materialized
+    * before the overwrite because it otherwise reads the directory the
+    * write is replacing. O(|sidecar| + |batch|), never touches index
+    * tables. The sidecar is read with `schema`, the one its registration
+    * recorded. */
   private[graft] def mergeTombstones(spark: SparkSession, artifact: String,
-      dead: DataFrame): Unit =
+      dead: DataFrame, schema: Option[StructType]): Unit = {
+    val current = readTombstones(spark, artifact, schema)
+    val merged = withTombstones(current, dead)
     writeTombstones(
-      Some(withTombstones(readTombstones(spark, artifact), dead).localCheckpoint()),
+      Some(if (current.isDefined) merged.localCheckpoint() else merged),
       artifact)
+  }
 
   /** A delete in memory: the sidecar with `dead` ids added. */
   private[graft] def withTombstones(tombstones: Option[DataFrame],

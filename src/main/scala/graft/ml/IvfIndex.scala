@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructField, StructType}
 
 /**
  * IVF (inverted-file) approximate nearest-neighbor search: a k-means
@@ -284,14 +284,50 @@ object IvfIndex {
   /** Persist a built index: the assigned corpus is written PARTITIONED BY
     * cell — the on-disk analog of a bucketed index table, so a search
     * probing nProbe cells prunes to those cell directories at scan time —
-    * plus the tiny centroid routing table and, when deletes are pending,
-    * the id-tombstone sidecar. */
+    * plus the tiny centroid routing table, the record of `assigned`'s
+    * schema ([[assignedSchema]]) and, when deletes are pending, the
+    * id-tombstone sidecar. */
   def save(built: Built, path: String): Unit = {
     built.assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/assigned")
     built.centroids.coalesce(1).write.mode("overwrite")
       .parquet(s"$path/centroids")
     IndexCache.writeTombstones(built.tombstones, path)
+    // a read reports every column nullable, whatever the frame's plan
+    // proved (prepare's norm filter makes `emb` non-null)
+    val data = StructType(built.assigned.schema.filterNot(_.name == "cell")
+      .map(_.copy(nullable = true)))
+    writeFile(built.assigned.sparkSession, s"$path/$AssignedSchemaRel",
+      data.json)
+  }
+
+  /** The artifact file recording `assigned`'s data schema (`cell` aside,
+    * which a read takes from the directory names). */
+  private val AssignedSchemaRel = "assigned-schema.json"
+
+  /** `assigned`'s data schema as the artifact recorded it when it was
+    * built or grown — a link-append grow keeps its parent's — or None for
+    * an artifact that recorded none. A registration reads it here where
+    * inferring it would cost a parquet footer job. */
+  private[graft] def assignedSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/$AssignedSchemaRel")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      Some(DataType.fromJson(json).asInstanceOf[StructType])
+    }
+  }
+
+  private def writeFile(spark: SparkSession, path: String,
+      text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   def load(spark: SparkSession, path: String): Built =
@@ -403,16 +439,17 @@ object IvfIndex {
       idCol, embCol, cacheRoot)
 
   /** [[openOrBuildPath]] over `corpus`, the caller's own read of
-    * `sourcePath` (only a cold build reads it): a caller that reads the
-    * corpus anyway ([[IvfGeometry]]'s calibration) shares one read, and
-    * one schema-inference job, with the build. */
+    * `sourcePath` (only a cold build or a grow reads it): a caller that
+    * reads the corpus anyway ([[IvfGeometry]]'s calibration) shares one
+    * read, and one schema-inference job, with the build or the grow's
+    * delta read. */
   private[ml] def openOrBuildPath(spark: SparkSession, ivf: IvfIndex,
       sourcePath: String, corpus: => DataFrame, idCol: String, embCol: String,
       cacheRoot: String): String =
     // a grown source encodes ONLY the new files against the frozen
     // centroids — no k-means fit on either grow form
-    IndexCache.openOrGrow(spark, sourcePath, ivf.fingerprint, cacheRoot,
-      Layout) { staging =>
+    IndexCache.openOrGrow(spark, sourcePath, corpus, ivf.fingerprint,
+      cacheRoot, Layout) { staging =>
       save(ivf.build(spark, corpus, idCol, embCol), staging)
     }((published, delta, staging) =>
         appendOnDisk(spark, published, delta, idCol, embCol, staging),
@@ -423,8 +460,9 @@ object IvfIndex {
     * published cell dirs, centroid table and sidecar into `staging` and
     * append ONLY the delta's frozen-centroid assignments as new files in
     * their cell directories — no shuffle of existing rows, no
-    * corpus-sized write. [[IvfIndex.append]]'s rewrite form stays the
-    * LWW fallback (false on overlap or a link-refusing filesystem). */
+    * corpus-sized write. The grown artifact keeps its parent's
+    * [[assignedSchema]] record. [[IvfIndex.append]]'s rewrite form stays
+    * the LWW fallback (false on overlap or a link-refusing filesystem). */
   private[graft] def appendOnDisk(spark: SparkSession, published: String,
       delta: DataFrame, idCol: String, embCol: String,
       staging: String): Boolean = {
@@ -433,6 +471,8 @@ object IvfIndex {
     IndexCache.linkAppend(spark, published, staging, Layout, d.select("id")) { st =>
       if (!d.isEmpty)
         d.write.mode("append").partitionBy("cell").parquet(s"$st/assigned")
+      assignedSchema(spark, published).foreach(schema =>
+        writeFile(spark, s"$st/$AssignedSchemaRel", schema.json))
     }
   }
 }

@@ -122,7 +122,17 @@ object AnnIndexRegistry {
       ivfpq: Option[graft.ml.IvfPqIndex] = None,
       pqCacheRoot: String = graft.ml.IndexCache.DefaultIvfPqRoot,
       servedK: Int = 0)
-      : Entry = {
+      : Entry =
+    registerWith(spark, ivf, sourcePath, idCol, embCol, nProbe, cacheRoot,
+      payloadCols, pqCacheRoot, servedK)(_ => ivfpq)
+
+  /** [[register]] with the IVF-PQ sibling picked by `sibling` from the
+    * embedding dimension, which the collected centroid table gives
+    * without a job. */
+  private def registerWith(spark: SparkSession, ivf: IvfIndex,
+      sourcePath: String, idCol: String, embCol: String, nProbe: Int,
+      cacheRoot: String, payloadCols: Seq[String], pqCacheRoot: String,
+      servedK: Int)(sibling: Int => Option[graft.ml.IvfPqIndex]): Entry = {
     val path = IvfIndex.openOrBuildPath(spark, ivf, sourcePath, idCol, embCol,
       cacheRoot)
     val centroids = loadCentroids(spark, path)
@@ -131,7 +141,7 @@ object AnnIndexRegistry {
     // in the same index job and record what the cost rule needs — the
     // codebooks for driver-side ADC table construction and the corpus
     // size for the advantage-point comparison
-    val pqFam = ivfpq.map { q =>
+    val pqFam = sibling(centroids.headOption.fold(0)(_._2.length)).map { q =>
       // both families must share the coarse quantizer (same cell count +
       // default seed -> same fit on the same sample rows, see
       // graft.ml.Quantizer): the rule routes ONCE against the registered
@@ -184,19 +194,21 @@ object AnnIndexRegistry {
     graft.ml.IvfIndex.centresOf(graft.ml.IvfIndex.readCentroids(spark,
       indexPath)).zipWithIndex.map(_.swap)
 
-  /** The data schemas of an IVF artifact's probed tables, read once at
-    * registration: `assigned`, `augmented` when materialized, and the
-    * `tombstones` sidecar (the id column of `assigned`, which may not
-    * exist yet). A serve-time read then only lists the probed cell
-    * directories: inferring the schema instead costs a parquet footer
-    * job per table per query. The `cell` partition column is still
-    * inferred from the directory names. The tables of a published
-    * artifact never change schema: compaction rewrites cells in place,
-    * and a grown or rebuilt corpus publishes (and registers) a new
-    * artifact. */
+  /** The data schemas of an IVF artifact's probed tables, taken once at
+    * registration: `assigned` as the artifact recorded it
+    * ([[IvfIndex.assignedSchema]]; inferred for an artifact that
+    * recorded none), `augmented` when materialized, and the `tombstones`
+    * sidecar (the id column of `assigned`, which may not exist yet). A
+    * serve-time read then only lists the probed cell directories:
+    * inferring the schema instead costs a parquet footer job per table
+    * per query. The `cell` partition column is still inferred from the
+    * directory names. The tables of a published artifact never change
+    * schema: compaction rewrites cells in place, and a grown or rebuilt
+    * corpus publishes (and registers) a new artifact. */
   private def tableSchemas(spark: SparkSession,
       indexPath: String): Map[String, StructType] = {
-    val assigned = dataSchema(spark, s"$indexPath/assigned", "cell")
+    val assigned = IvfIndex.assignedSchema(spark, indexPath)
+      .getOrElse(dataSchema(spark, s"$indexPath/assigned", "cell"))
     Map("assigned" -> assigned,
       "tombstones" -> StructType(Seq(assigned("id")))) ++
       (if (exists(spark, s"$indexPath/augmented/_SUCCESS"))
@@ -275,16 +287,17 @@ object AnnIndexRegistry {
    * builds what the optimizer will use and never pays the m k-means fits
    * for an artifact the cost rule would ignore. Shared by
    * [[graft.store.MerkonStore.buildIndex]] and the SQL CALL surface
-   * ([[graft.store.MerkonCatalog]]'s `build_index` procedure).
+   * ([[graft.store.MerkonCatalog]]'s `build_index` procedure). The
+   * corpus size `n` comes from the parquet footers and the dimension
+   * from the registered centroid table, so deciding runs no job.
    */
   def indexJob(spark: SparkSession, sourcePath: String, idCol: String,
-      embCol: String, ivf: IvfIndex, servedK: Int): Entry = {
-    val corpus = spark.read.parquet(sourcePath)
-    val n = graft.ml.IndexCache.rowCount(spark, sourcePath, corpus)
-    val dim = corpus.filter(col(embCol).isNotNull)
-      .select(org.apache.spark.sql.functions.size(col(embCol)))
-      .limit(1).collect().headOption.map(_.getInt(0)).getOrElse(0)
-    val pqSibling =
+      embCol: String, ivf: IvfIndex, servedK: Int): Entry =
+    registerWith(spark, ivf, sourcePath, idCol, embCol, ivf.nProbe,
+      graft.ml.IndexCache.DefaultIvfRoot, Seq.empty,
+      graft.ml.IndexCache.DefaultIvfPqRoot, servedK) { dim =>
+      val n = graft.ml.IndexCache.rowCount(spark, sourcePath,
+        spark.read.parquet(sourcePath))
       if (n == 0 || dim == 0) None
       else {
         val minBytes = AnnIndexRule.pqMinBytes(spark.conf.get(_, _))
@@ -294,9 +307,7 @@ object AnnIndexRegistry {
             kCentroids = graft.ml.IvfGeometry.codebookFor(n)))
         else None
       }
-    register(spark, ivf, sourcePath, idCol, embCol, ivf.nProbe,
-      ivfpq = pqSibling, servedK = servedK)
-  }
+    }
 
   /**
    * Batch query-TABLE kNN through the registered index (VERDICT r14 ask
@@ -430,9 +441,11 @@ object AnnIndexRegistry {
     * path. */
   private[graft] def tombstone(spark: SparkSession, entry: Entry,
       dead: DataFrame): Unit = {
-    IndexCache.mergeTombstones(spark, entry.indexPath, dead)
+    IndexCache.mergeTombstones(spark, entry.indexPath, dead,
+      entry.schemas.get("tombstones"))
     entry.pq.foreach(fam =>
-      IndexCache.mergeTombstones(spark, fam.indexPath, famDeadIds(fam, dead)))
+      IndexCache.mergeTombstones(spark, fam.indexPath, famDeadIds(fam, dead),
+        fam.schemas.get("tombstones")))
   }
 
   /** Map registered-artifact tombstone ids into a PQ sibling's own key
@@ -463,7 +476,7 @@ object AnnIndexRegistry {
       entry.pq.foreach { fam =>
         IndexCache.readTombstones(spark, entry.indexPath).foreach { t =>
           IndexCache.mergeTombstones(spark, fam.indexPath,
-            famDeadIds(fam, t.select(col("id"))))
+            famDeadIds(fam, t.select(col("id"))), fam.schemas.get("tombstones"))
         }
         IvfPqIndex.compactOnDisk(spark, fam.indexPath, minDeadFraction)
       }

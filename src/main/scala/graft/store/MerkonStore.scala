@@ -355,9 +355,12 @@ class MerkonStore(spark: SparkSession) {
    *    re-upsert): full re-dump — correctness over cleverness, see
    *    [[buildIndex]].
    *
-   * The update probe is one key-only semi-join (pending × dumped keys,
-   * column-pruned scans); the delta is one anti-join on the same key
-   * column. Neither touches embedding payloads of already-dumped rows.
+   * One probe tells the three waves apart: the top-1, trues first, of
+   * "is this pending key already dumped" over a key-only left join
+   * (pending × dumped keys, column-pruned scans) — no row, true, false.
+   * The delta is one anti-join on the same key column, written straight
+   * to the dump. Neither touches embedding payloads of already-dumped
+   * rows.
    */
   private def syncDump(name: String, dump: String, live: DataFrame): Unit = {
     val marker = new org.apache.hadoop.fs.Path(s"$dump/_SUCCESS")
@@ -382,12 +385,13 @@ class MerkonStore(spark: SparkSession) {
       record()
       return
     }
-    val pending = pendingDumpKeys(name).distinct().localCheckpoint()
-    if (pending.isEmpty) return
     val dumpedKeys = readDump(dump).select("key")
-    val hasUpdates = pending.join(dumpedKeys, Seq("key"), "left_semi")
-      .limit(1).count() > 0
-    if (hasUpdates) {
+    val wave = pendingDumpKeys(name)
+      .join(dumpedKeys.withColumn("dumped", lit(true)), Seq("key"), "left")
+      .select(coalesce(col("dumped"), lit(false)).as("dumped"))
+      .orderBy(col("dumped").desc).limit(1).collect()
+    if (wave.isEmpty) return
+    if (wave.head.getBoolean(0)) {
       live.write.mode("overwrite").parquet(dump)
       record()
       return
@@ -395,8 +399,20 @@ class MerkonStore(spark: SparkSession) {
     // insert-only wave: every live key missing from the dump is pending-
     // new by construction (the only mutation paths are the journaled
     // upsert and the delete, which never adds keys)
-    val delta = live.join(dumpedKeys, Seq("key"), "left_anti").localCheckpoint()
-    if (!delta.isEmpty) { delta.write.mode("append").parquet(dump); record() }
+    def dataFiles = fs.listStatus(new org.apache.hadoop.fs.Path(dump)).toSeq
+      .map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    val before = dataFiles.toSet
+    live.join(dumpedKeys, Seq("key"), "left_anti")
+      .write.mode("append").parquet(dump)
+    // an empty delta (its pending keys deleted again, or without an
+    // embedding) still writes one schema-only file; removing it leaves
+    // the dump, and so its fingerprint, as it was
+    val added = dataFiles.filterNot(before)
+    if (added.forall(f => graft.ml.IndexCache.rowCountFromFooters(
+        spark.sparkContext.hadoopConfiguration, f.toString).contains(0L)))
+      added.foreach(fs.delete(_, false))
+    else record()
   }
 
   /**

@@ -261,6 +261,43 @@ class IndexAppendSpec extends AnyFunSuite with SparkTestBase {
     assert(cells(spark.read.parquet(s"$grownPq/codedCell")) == expected)
   }
 
+  test("an IVF artifact records the schema a read infers for assigned, on a build and both grow forms") {
+    // the registry takes `assigned`'s schema from this record where it
+    // would otherwise infer it in a footer job
+    val srcDir = new java.io.File(scratchDir("graft-schema-src"))
+    val cacheRoot = scratchDir("graft-schema-cache")
+    val ivf = new IvfIndex(nCentroids = 8, nProbe = 3)
+    def open(): String = IvfIndex.openOrBuildPath(spark, ivf, srcDir.getPath,
+      "vec_id", "embedding", cacheRoot)
+    def assignedFiles(path: String): Set[String] = {
+      val root = new java.io.File(path, "assigned").toPath
+      java.nio.file.Files.walk(root).toArray.toSeq
+        .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+        .filter(_.endsWith(".parquet")).toSet
+    }
+    def recordsInferred(path: String): Unit = {
+      val inferred = org.apache.spark.sql.types.StructType(
+        spark.read.parquet(s"$path/assigned").schema.filterNot(_.name == "cell"))
+      assert(IvfIndex.assignedSchema(spark, path).contains(inferred),
+        s"$path recorded ${IvfIndex.assignedSchema(spark, path)}, a read infers $inferred")
+    }
+    copyParquetFile(baseHalf, srcDir, "a.parquet")
+    val built = open()
+    recordsInferred(built)
+    copyParquetFile(deltaHalf.filter(col("vec_id") < 450), srcDir, "b.parquet")
+    val linked = open()
+    assert(assignedFiles(built).subsetOf(assignedFiles(linked)),
+      "disjoint ids must take the link-append grow")
+    recordsInferred(linked)
+    // id 7 again: the rewrite grow
+    copyParquetFile(emb.filter(col("vec_id") === 450)
+      .withColumn("vec_id", col("vec_id") - 443), srcDir, "c.parquet")
+    val rewritten = open()
+    assert((assignedFiles(linked) & assignedFiles(rewritten)).isEmpty,
+      "an id overlap must take the rewrite grow")
+    recordsInferred(rewritten)
+  }
+
   test("hive-partitioned source grows via append even when the id is a partition column (ADVICE r15)") {
     // the r15 recursive fingerprint made partitioned corpora append-
     // eligible; the delta read must keep partition columns visible

@@ -1020,4 +1020,102 @@ class MerkonStoreSpec extends AnyFunSuite with SparkTestBase {
       served("after an append refresh", 3)
     } finally graft.plans.AnnIndexRegistry.clear()
   }
+
+  /** The data files of an artifact's `assigned` table, by cell dir and
+    * name: part-file names are job-unique, so a name both artifacts hold
+    * is a file the grown one hardlinked. */
+  private def assignedFiles(artifact: String): Set[String] =
+    Option(new java.io.File(artifact, "assigned").listFiles()).toSeq.flatten
+      .filter(_.isDirectory)
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .map(f => s"${d.getName}/${f.getName}"))
+      .toSet
+
+  test("a key deleted before it was ever dumped: no dump write while it stays deleted, the rewrite grow once upserted again") {
+    // the sidecar leg of linkAppend's overlap probe: Y is not in the
+    // published key table, only in its tombstone sidecar, so hardlinking
+    // that sidecar into the grown artifact would keep Y dead there
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val st = newStore
+    val dumpRoot = scratchDir("graft-store-readd")
+    try {
+      val corpus = spark.read.parquet(s"$sf0_001/embeddings.parquet")
+      def slice(lo: Int, hi: Int) =
+        corpus.filter(col("vec_id") >= lo && col("vec_id") < hi)
+          .select(concat(lit("k"), col("vec_id")).as("key"), col("embedding"))
+      val dump = s"$dumpRoot/${MerkonStore.pathSafe("vre")}"
+      def entry = graft.plans.AnnIndexRegistry.lookup(dump).get
+      def dumpFiles: Set[String] = new java.io.File(dump).listFiles().toSeq
+        .map(_.getName).filterNot(n => n.startsWith("_") || n.startsWith("."))
+        .toSet
+      st.upsertBatch("vre", slice(0, 200))
+      st.buildIndex("vre", nCentroids = 4, nProbe = 4, dir = dumpRoot)
+      val parent = entry.indexPath
+      val files = dumpFiles
+
+      // an insert-only wave whose delta is empty leaves the dump and the
+      // artifact as they were
+      st.upsertBatch("vre", slice(250, 251))
+      st.removeBatch("vre", Seq("k250"))
+      st.buildIndex("vre", nCentroids = 4, nProbe = 4, dir = dumpRoot)
+      assert(dumpFiles == files, "an empty delta must write no dump file")
+      assert(entry.indexPath == parent)
+
+      st.upsertBatch("vre", slice(300, 301))
+      st.removeBatch("vre", Seq("k300"))
+      st.upsertBatch("vre", slice(300, 301))
+      st.buildIndex("vre", nCentroids = 4, nProbe = 4, dir = dumpRoot)
+      val grown = entry.indexPath
+      assert(grown != parent, "the re-added key must grow the artifact")
+      assert(assignedFiles(parent).nonEmpty &&
+        (assignedFiles(parent) & assignedFiles(grown)).isEmpty,
+        "a key on the published sidecar must take the rewrite, not the hardlinks")
+      val qv = corpus.filter(col("vec_id") === 300).select("embedding")
+        .head().getSeq[Float](0).toArray
+      assert(st.getNearestMatches("vre", qv, 1, useIndex = true)
+        .select("key").head().getString(0) == "k300")
+    } finally graft.plans.AnnIndexRegistry.clear()
+  }
+
+  test("refresh job budget: an insert-only buildIndex runs at most 13 jobs, a deletes-only one at most 2") {
+    // the insert refresh decides its wave in one probe, writes the delta
+    // without a checkpoint, reads the artifact's known schemas and probes
+    // the key table and the sidecar for overlap together
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val st = newStore
+    val dumpRoot = scratchDir("graft-store-refresh-jobs")
+    try {
+      val corpus = spark.read.parquet(s"$sf0_001/embeddings.parquet")
+      def slice(lo: Int, hi: Int) =
+        corpus.filter(col("vec_id") >= lo && col("vec_id") < hi)
+          .select(concat(lit("k"), col("vec_id")).as("key"), col("embedding"))
+      val dump = s"$dumpRoot/${MerkonStore.pathSafe("vrj")}"
+      def entry = graft.plans.AnnIndexRegistry.lookup(dump).get
+      st.upsertBatch("vrj", slice(0, 400))
+      st.compact("vrj")
+      st.buildIndex("vrj", nCentroids = 8, nProbe = 3, dir = dumpRoot)
+      val base = entry.indexPath
+
+      // a wave as a service runs it: insert, delete, compact, refresh
+      st.upsertBatch("vrj", slice(400, 450))
+      st.removeBatch("vrj", Seq("k3", "k4"))
+      st.compact("vrj")
+      val (_, insertJobs) = jobsOf(
+        st.buildIndex("vrj", nCentroids = 8, nProbe = 3, dir = dumpRoot))
+      val grown = entry.indexPath
+      assert(grown != base && assignedFiles(base).subsetOf(assignedFiles(grown)),
+        "an insert-only wave must take the link-append grow")
+      assert(spark.read.parquet(s"$grown/assigned").count() == 450)
+
+      st.removeBatch("vrj", Seq("k420"))
+      st.compact("vrj")
+      val (_, deleteJobs) = jobsOf(
+        st.buildIndex("vrj", nCentroids = 8, nProbe = 3, dir = dumpRoot))
+      assert(entry.indexPath == grown, "a deletes-only refresh reuses the artifact")
+      assert(insertJobs <= 13 && deleteJobs <= 2,
+        s"insert-only refresh ran $insertJobs jobs (budget 13), " +
+          s"deletes-only $deleteJobs (budget 2)")
+    } finally graft.plans.AnnIndexRegistry.clear()
+  }
 }
