@@ -86,37 +86,40 @@ private[graft] object IndexCache {
     * r17: the geometry memo's warm open paid a scheduled count() job per
     * (corpus, contract) entry for a number the footers already hold.
     * None when the source has no readable parquet footprint (caller
-    * falls back to a real count). */
+    * falls back to a real count). The tree is walked with `listStatus`:
+    * `listFiles` builds a `LocatedFileStatus` per file, which copies the
+    * file's permission, and the local file system without Hadoop's
+    * native library reads that by forking `ls -ld`. The footers are
+    * opened with read options over `conf`: without them each open
+    * builds a fresh Hadoop `Configuration`, parsing its XML resources. */
   private[graft] def rowCountFromFooters(
       conf: org.apache.hadoop.conf.Configuration,
       sourcePath: String): Option[Long] =
     try {
       val p = new org.apache.hadoop.fs.Path(sourcePath)
       val fs = p.getFileSystem(conf)
-      val rootUri = fs.makeQualified(p).toUri
-      val files = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.hadoop.fs.FileStatus]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        // mirror the scan's hidden-path convention on EVERY component
-        // below the root, as remoteListingSignature does: a part file
-        // under `_temporary/0/` (a crashed or running writer's staging)
-        // is as invisible to Spark's reader as `_SUCCESS`, and counting
-        // it would silently diverge c from corpus.count() (r18, ADVICE)
-        val rel = rootUri.relativize(f.getPath.toUri).getPath
-        val hidden = (rel.split("/") :+ f.getPath.getName)
-          .exists(c => c.startsWith("_") || c.startsWith("."))
-        if (f.isFile && f.getPath.getName.endsWith(".parquet") && !hidden)
-          files += f
+      // mirror the scan's hidden-path convention on EVERY component
+      // below the root, as remoteListingSignature does: a part file
+      // under `_temporary/0/` (a crashed or running writer's staging)
+      // is as invisible to Spark's reader as `_SUCCESS`, and counting
+      // it would silently diverge c from corpus.count() (r18, ADVICE)
+      def visible(f: org.apache.hadoop.fs.FileStatus): Boolean = {
+        val name = f.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
       }
+      def walk(f: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.filter(visible).flatMap(walk)
+        else Seq(f)
+      val files = walk(fs.getFileStatus(p))
+        .filter(f => f.isFile && visible(f) && f.getPath.getName.endsWith(".parquet"))
       if (files.isEmpty) None
       else {
+        val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
         var n = 0L
         files.foreach { f =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(f, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
           try n += r.getRecordCount finally r.close()
         }
         Some(n)
@@ -463,7 +466,9 @@ private[graft] object IndexCache {
    * later only unlinks names, never bytes the sibling still reads.
    * Old-artifact CONTRACT sidecars (nprobe calibration, registration
    * record, cache manifest, `augmented`) are deliberately not linked:
-   * the grown artifact recalibrates and re-registers.
+   * the grown artifact recalibrates and re-registers. A family's
+   * `writeDelta` copies the records the grown artifact keeps (IVF: the
+   * `assigned` schema and the calibration anchors).
    *
    * The key table and the sidecar both hold ids of `deltaIds`' key
    * domain, so both are read with its `id` field (inferring their

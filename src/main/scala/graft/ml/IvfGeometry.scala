@@ -4,6 +4,7 @@ import graft.functions.{TopKHeap, VectorKernels}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -36,7 +37,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * top-kCap lists, so |partitions| x |A| x kCap hits reach the driver),
  * and a cell-table scan filtered to the <= |A| x kCap neighbour ids
  * that also returns the centroid table; cell ranks and the histogram
- * are driver arithmetic. It runs once per (corpus, contract): the chosen
+ * are driver arithmetic. A link-append grow scores its parent's anchors
+ * against the delta rows only (|A| x |delta| cosines, two jobs) when the
+ * session holds the parent's histogram state, after the result-reuse
+ * idea of the EDBT 2020 incremental top-k framework (PAPERS.md). It runs
+ * once per (corpus, contract): the chosen
  * width is persisted as a sidecar inside the published index directory
  * (the index is fingerprint-keyed on corpus content + build params, so
  * a regenerated corpus recalibrates), and the session-shared
@@ -152,9 +157,10 @@ object IvfGeometry {
     /** Path-safe key of the contract for the persisted sidecar. The
       * trailing token versions the CALIBRATION ALGORITHM (anchor rule,
       * sweep) — bumping it orphans stale sidecars instead of serving a
-      * width measured under a different sampling scheme. */
+      * width measured under a different sampling scheme. v3: a grown
+      * artifact calibrates over the anchors its parent recorded. */
     def fingerprint: String =
-      s"k$k-r${math.round(targetRecall * 1000)}-a$nAnchors-v2"
+      s"k$k-r${math.round(targetRecall * 1000)}-a$nAnchors-v3"
   }
 
   /** The store flagship's calibration contract (recall@10 ≥ 0.95 — the
@@ -208,7 +214,7 @@ object IvfGeometry {
     // probe below) per (corpus, contract) entry, ~0.5 s × 7
     // entries of pure job overhead per bench session.
     val c = centroidsFor(IndexCache.rowCount(spark, sourcePath, corpus))
-    val indexPath = IvfIndex.openOrBuildPath(spark, new IvfIndex(c, 1),
+    val (indexPath, grow) = IvfIndex.openOrGrowPath(spark, new IvfIndex(c, 1),
       sourcePath, corpus, idCol, embCol, cacheRoot)
     val sidecar = new java.io.File(indexPath, s"nprobe-${contract.fingerprint}")
     // a truncated/foreign sidecar (killed writer outside the atomic-move
@@ -231,19 +237,54 @@ object IvfGeometry {
       // zero-norm fail-fast lives in IvfIndex.build (the cold branch);
       // a valid fingerprint-fresh sidecar proves the corpus calibrated
       // before, so the warm open stays job-free (r17)
-      val out = calibrate(spark, IvfIndex.load(spark, indexPath), corpus,
-        idCol, embCol, c, contract, indexPath)
-      // publish atomically: a concurrent calibrator computes the same
-      // deterministic answer, so either writer's file serves both
-      val tmp = java.io.File.createTempFile("nprobe", ".tmp",
-        new java.io.File(indexPath))
-      java.nio.file.Files.write(tmp.toPath,
+      val out = calibrate(spark, indexPath, grow, corpus, idCol, embCol, c,
+        contract)
+      // a concurrent calibrator computes the same deterministic answer,
+      // so either writer's file serves both
+      writeAtomically(indexPath, sidecar.getName,
         s"${out.ivf.nProbe} ${out.measuredRecall}".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, sidecar.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       out
     }
+  }
+
+  /** Publish `bytes` as `indexPath/name` in one rename. */
+  private def writeAtomically(indexPath: String, name: String,
+      bytes: Array[Byte]): Unit = {
+    val tmp = java.io.File.createTempFile(name, ".tmp",
+      new java.io.File(indexPath))
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    java.nio.file.Files.move(tmp.toPath, new java.io.File(indexPath, name).toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Name prefix of the artifact files recording a calibration's anchor
+    * ids, one per anchor count: `anchors-a<nAnchors>`, the sorted
+    * surrogate ids as 8-byte longs (1 KiB at 128 anchors). A link-append
+    * grow keeps its parent's ([[IvfIndex.appendOnDisk]]), so the grown
+    * artifact calibrates over the anchors its parent did, whichever
+    * session does it. */
+  private[ml] val AnchorsPrefix = "anchors-a"
+
+  /** The anchor ids recorded in the artifact at `indexPath`, None when
+    * it recorded none (or the record is not whole). */
+  private[ml] def readAnchors(indexPath: String,
+      nAnchors: Int): Option[Array[Long]] = {
+    val f = new java.io.File(indexPath, s"$AnchorsPrefix$nAnchors")
+    if (!f.isFile) None
+    else scala.util.Try(java.nio.file.Files.readAllBytes(f.toPath)).toOption
+      .filter(b => b.nonEmpty && b.length % 8 == 0)
+      .map { b =>
+        val longs = java.nio.ByteBuffer.wrap(b).asLongBuffer()
+        Array.fill(longs.remaining())(longs.get())
+      }
+  }
+
+  private def writeAnchors(indexPath: String, nAnchors: Int,
+      gids: Array[Long]): Unit = {
+    val bb = java.nio.ByteBuffer.allocate(8 * gids.length)
+    gids.sorted.foreach(bb.putLong)
+    writeAtomically(indexPath, s"$AnchorsPrefix$nAnchors", bb.array())
   }
 
   /** The joint (exact_rank, cell_rank) pair histogram over the anchor
@@ -255,6 +296,28 @@ object IvfGeometry {
     * probed cell (tombstoned-away — they count toward the denominator,
     * never the numerator, exactly as the per-contract histogram did). */
   private[ml] final case class JointHist(kCap: Int, counts: Map[(Int, Int), Long])
+
+  /** A [[JointHist]] with what it was derived from, which a link-append
+    * grow of its artifact needs to derive the grown histogram from the
+    * delta alone ([[grownState]]):
+    *  - `anchors`: the anchor rows (surrogate id, embedding);
+    *  - `lists(s)`: the exact top-kCap (cos, id) of the s-th distinct
+    *    anchor id ([[slotsOf]]), best first, and `cellRank(s)` the probe
+    *    rank of every cell for it;
+    *  - `cells`: the cell-table cells of every listed neighbour,
+    *    tombstoned ones included — a grow reads the sidecar afresh;
+    *  - `files`: the `assigned` part files those cells were read from.
+    *    A grow hardlinks them all, and a compaction replaces some, so a
+    *    missing one tells a grow that `cells` no longer hold;
+    *  - `parent`: the artifact it was grown from, None when it was
+    *    scored over the whole corpus.
+    * The lists stay in the session rather than in the artifact: at
+    * 128 × 64 pairs they would outweigh every other calibration
+    * record. */
+  private[ml] final case class HistState(hist: JointHist,
+      anchors: Array[(Long, Array[Float])], lists: Array[Array[(Double, Long)]],
+      cellRank: Array[Map[Int, Int]], cells: Map[Long, Array[Int]],
+      files: Set[String], parent: Option[String])
 
   /** One histogram per (index dir, anchor-rule, rank cap) and session:
     * the bench session calibrates SEVEN contracts against the embeddings
@@ -269,14 +332,20 @@ object IvfGeometry {
     * additional contract is driver-side arithmetic. A plain memo, not a
     * shared artifact: it runs inside the `ann_geometry` build, which
     * prices it, and is keyed by the artifact directory that build
-    * resolved. */
+    * resolved. An entry a grow derived a child from is dropped: the
+    * child supersedes it, and the parent's record rebuilds it. */
   private val histMemo =
-    new graft.util.SessionCache[(String, Int, Int), JointHist]()
+    new graft.util.SessionCache[(String, Int, Int), HistState]()
+
+  /** The session's histogram state for an artifact, if one was derived. */
+  private[ml] def histState(spark: SparkSession, indexPath: String,
+      nAnchors: Int, kCap: Int): Option[HistState] =
+    histMemo.get(spark, (indexPath, nAnchors, kCap))
 
   /** Rank cap for a contract's k: one shared 64-deep histogram covers
     * every registered contract (max k = 40); a deeper k rounds up to the
     * next power of two so rare deep contracts share among themselves. */
-  private def capFor(k: Int): Int = {
+  private[ml] def capFor(k: Int): Int = {
     var cap = 64
     while (cap < k) cap *= 2
     cap
@@ -287,14 +356,35 @@ object IvfGeometry {
     * and 1 <= cell_rank <= p| / |pairs with exact_rank <= k|, monotone in
     * p by construction. At p == c the probe is exhaustive, so the walk
     * always terminates with a passing width (or the tombstoned-away
-    * fallback at p == c, as before). */
-  private def calibrate(spark: SparkSession, built: IvfIndex.Built,
-      corpus: DataFrame, idCol: String, embCol: String, c: Int,
-      contract: Contract, indexPath: String): Calibrated = {
-    val jh = histMemo.getOrElseUpdate(spark,
-      (indexPath, contract.nAnchors, capFor(contract.k)))(
-      buildJointHist(spark, built, corpus, idCol, embCol, c,
-        contract.nAnchors, capFor(contract.k)))
+    * fallback at p == c, as before).
+    *
+    * The histogram of a link-append grow is derived from its parent's
+    * state when this session holds it ([[grownState]]); every other
+    * artifact is scored over the whole corpus ([[scratchState]]), over
+    * the anchors it records when it records them. Either way the
+    * artifact ends up recording its anchors. */
+  private def calibrate(spark: SparkSession, indexPath: String,
+      grow: Option[IvfIndex.LinkGrow], corpus: => DataFrame, idCol: String,
+      embCol: String, c: Int, contract: Contract): Calibrated = {
+    val (nAnchors, kCap) = (contract.nAnchors, capFor(contract.k))
+    val jh = histMemo.getOrElseUpdate(spark, (indexPath, nAnchors, kCap)) {
+      val recorded = readAnchors(indexPath, nAnchors)
+      val files = assignedFiles(indexPath)
+      val grown = for {
+        g <- grow
+        parent <- histMemo.get(spark, (g.parent, nAnchors, kCap))
+        st <- grownState(spark, parent, g, indexPath, idCol, embCol,
+          recorded, files)
+      } yield {
+        histMemo.remove(spark, (g.parent, nAnchors, kCap))
+        st
+      }
+      val st = grown.getOrElse(scratchState(spark,
+        IvfIndex.load(spark, indexPath), corpus, idCol, embCol, c, nAnchors,
+        kCap, recorded, files))
+      if (recorded.isEmpty) writeAnchors(indexPath, nAnchors, slotsOf(st.anchors)._1)
+      st
+    }.hist
     val k = contract.k
     // toSeq first: collecting (cr, n) pairs straight off the Map would
     // REBUILD a map and silently overwrite same-cr entries from
@@ -332,19 +422,14 @@ object IvfGeometry {
     *
     *  1. count the searchable rows, then collect the ≤ nAnchors anchors
     *     (hash-strided, id-ordered — the rule below) to the driver;
-    *  2. ONE pass over the searchable corpus: each partition keeps a
-    *     bounded top-kCap buffer per anchor id, ordered (cos desc, gid
-    *     asc) by the [[TopKHeap]] the SQL top-k aggregate uses (same
-    *     ties, NaN skipped), scored with the one cosine kernel
-    *     `cosine_similarity` also runs; `treeAggregate` merges the
-    *     buffers — a bounded local top-k per partition, merged once
-    *     (REPOSE's distributed top-k shape);
+    *  2. ONE pass over the searchable corpus ([[scoreInto]]);
     *  3. one collect of the cell table (plus the tombstone sidecar, so
     *     the live filter needs no join) restricted to the ≤ nAnchors·kCap
-    *     neighbour ids, with the centroid table beside it;
+    *     neighbour ids, with the centroid table beside it
+    *     ([[neighbourRows]]);
     *  4. on the driver: every anchor's cell ranks under the routing
     *     order (cell_score desc, cell asc), then the per-pair MIN cell
-    *     rank and the histogram.
+    *     rank and the histogram ([[histOf]]).
     *
     * Why the histogram is recall: an exact neighbour n of anchor q is
     * returned by a width-p search IFF rank(q, cell(n)) <= p. (<=: ranks
@@ -361,20 +446,44 @@ object IvfGeometry {
     * denominator only. */
   private[ml] def buildJointHist(spark: SparkSession, built: IvfIndex.Built,
       corpus: DataFrame, idCol: String, embCol: String, c: Int,
-      nAnchors: Int, kCap: Int): JointHist = {
-    // zero-norm vectors are structurally excluded from the index
-    // (IvfIndex.prepare drops them) and their cosine is NaN — an exact
-    // oracle that kept one would poison its top-k buffer and cap
-    // measured recall below any target, breaking the "exhaustive probe
-    // passes" termination guarantee. Calibrate over the searchable
-    // corpus only. Ids go through a DETERMINISTIC LONG SURROGATE
-    // (xxhash64): the store's collections carry STRING keys (the
-    // reference's shape) — recall is id-representation-agnostic, and a
-    // 64-bit collision (~n²/2⁶⁵) would only perturb one anchor's
-    // measured recall.
-    val searchable = corpus
-      .filter(graft.functions.VectorFunctions.l2Norm(col(embCol)) > 0)
+      nAnchors: Int, kCap: Int): JointHist =
+    scratchState(spark, built, corpus, idCol, embCol, c, nAnchors, kCap,
+      None, Set.empty).hist
+
+  /** The searchable rows of `df` with their surrogate id `__gid`.
+    * Zero-norm vectors are structurally excluded from the index
+    * (IvfIndex.prepare drops them) and their cosine is NaN — an exact
+    * oracle that kept one would poison its top-k buffer and cap
+    * measured recall below any target, breaking the "exhaustive probe
+    * passes" termination guarantee. Ids go through a DETERMINISTIC LONG
+    * SURROGATE (xxhash64): the store's collections carry STRING keys
+    * (the reference's shape) — recall is id-representation-agnostic,
+    * and a 64-bit collision (~n²/2⁶⁵) would only perturb one anchor's
+    * measured recall. */
+  private def searchableOf(df: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    df.filter(graft.functions.VectorFunctions.l2Norm(col(embCol)) > 0)
       .withColumn("__gid", xxhash64(col(idCol)))
+
+  /** The distinct anchor ids, and each anchor row's index among them:
+    * rows sharing an id (a duplicated corpus key) feed one list, as the
+    * grouped aggregate did. */
+  private def slotsOf(anchors: Array[(Long, Array[Float])])
+      : (Array[Long], Array[Int]) = {
+    val gids = anchors.map(_._1).distinct
+    (gids, anchors.map(a => gids.indexOf(a._1)))
+  }
+
+  /** The histogram state of the artifact `built`, scored over the whole
+    * searchable corpus: the anchors are the `recorded` ids' rows when
+    * any exist, else the sample below. */
+  private def scratchState(spark: SparkSession, built: IvfIndex.Built,
+      corpus: DataFrame, idCol: String, embCol: String, c: Int,
+      nAnchors: Int, kCap: Int, recorded: Option[Array[Long]],
+      files: Set[String]): HistState = {
+    val searchable = searchableOf(corpus, idCol, embCol)
+    def rowsOf(df: DataFrame) = df.select(col("__gid"), col(embCol)).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     // anchor sample: hash-strided so anchors spread over the id space
     // (a head-of-ids sample would sit inside one cluster of a clustered
     // corpus and calibrate on unrepresentative geometry), deterministic
@@ -384,97 +493,207 @@ object IvfGeometry {
     // a wider stride (2x anchors) would make the limit cut the top HALF
     // of the id space out of the sample. The count runs on the RDD: a
     // Dataset count() is an aggregate, whose exchange is a second job.
-    val n = searchable.queryExecution.toRdd.count()
-    // an empty (or all-zero-norm) corpus has no exact oracle rows, so
-    // every recall would divide by zero and the sweep would persist a
-    // NaN sidecar — fail fast with the actual cause
-    require(n > 0, "cannot calibrate IVF geometry: corpus has no " +
-      "searchable (non-zero-norm) vectors")
-    val stride = math.max(1L, n / nAnchors)
-    val anchors = searchable
-      .filter(pmod(hash(col(idCol)), lit(stride)) === 0)
-      .orderBy(col(idCol)).limit(nAnchors)
-      .select(col("__gid"), col(embCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    // one top-k list per anchor ID: rows sharing an id (a duplicated
-    // corpus key) feed one list, as the grouped aggregate did
-    val gids = anchors.map(_._1).distinct
-    val slot = anchors.map(a => gids.indexOf(a._1))
-    val qEmb = anchors.map(_._2)
-    val merge = (a: Array[TopKHeap], b: Array[TopKHeap]) => {
-      a.indices.foreach(i => a(i).absorb(b(i)))
-      a
+    def sample() = {
+      val n = searchable.queryExecution.toRdd.count()
+      // an empty (or all-zero-norm) corpus has no exact oracle rows, so
+      // every recall would divide by zero and the sweep would persist a
+      // NaN sidecar — fail fast with the actual cause
+      require(n > 0, "cannot calibrate IVF geometry: corpus has no " +
+        "searchable (non-zero-norm) vectors")
+      val stride = math.max(1L, n / nAnchors)
+      rowsOf(searchable
+        .filter(pmod(hash(col(idCol)), lit(stride)) === 0)
+        .orderBy(col(idCol)).limit(nAnchors))
     }
-    val exact = searchable.select(col("__gid"), col(embCol))
-      .queryExecution.toRdd
-      .mapPartitions { rows =>
+    // a grown corpus keeps its recorded anchors: their rows are still in
+    // it, since a link-append only adds source files
+    val anchors = recorded
+      .map(ids => rowsOf(searchable.filter(col("__gid").isin(ids.toIndexedSeq: _*))))
+      .filter(_.nonEmpty)
+      .getOrElse(sample())
+    val (gids, slot) = slotsOf(anchors)
+    val lists = scoreInto(spark, Array.fill(gids.length)(Array.empty),
+      anchors, slot, searchable.select(col("__gid"), col(embCol)), kCap)
+    val (cells, dead, centroids) = neighbourRows(built.assigned,
+      built.tombstones, Some(built.centroids), neighboursOf(lists))
+    val cellRank = cellRanks(anchors, slot, gids.length, centroids, c)
+    HistState(histOf(kCap, lists, cellRank, cells, dead), anchors, lists,
+      cellRank, cells, files, None)
+  }
+
+  /** The histogram state of the link-append grow `g`, derived from its
+    * parent's: the parent's anchors scored against the delta rows only
+    * and merged into the parent's lists ([[scoreInto]]); the cells of
+    * the delta's neighbours read off the rows the append wrote, which
+    * [[Quantizer.cellOf]] assigned against the frozen centroids, and the
+    * tombstoned neighbours off the grown artifact's sidecar, in one
+    * collect; the parent's cell ranks as they were, the centroids being
+    * frozen. Two jobs, whatever the corpus size. None — the caller then
+    * scores from scratch — unless the grown artifact records the
+    * parent's anchors and still holds every part file the parent's
+    * cells were read from (a compaction in between rewrites some). */
+  private def grownState(spark: SparkSession, parent: HistState,
+      g: IvfIndex.LinkGrow, indexPath: String, idCol: String, embCol: String,
+      recorded: Option[Array[Long]], files: Set[String]): Option[HistState] = {
+    val (gids, slot) = slotsOf(parent.anchors)
+    if (!recorded.exists(_.toSet == gids.toSet) || !parent.files.subsetOf(files))
+      None
+    else {
+      val kCap = parent.hist.kCap
+      val lists = scoreInto(spark, parent.lists, parent.anchors, slot,
+        searchableOf(g.delta, idCol, embCol).select(col("__gid"), col(embCol)),
+        kCap)
+      val need = neighboursOf(lists)
+      val idSchema = StructType(Seq(g.assigned.schema("id").copy(nullable = true)))
+      val (deltaCells, dead, _) = neighbourRows(g.assigned,
+        IndexCache.readTombstones(spark, indexPath, Some(idSchema)), None, need)
+      val none = Array.empty[Int]
+      val cells = need.iterator.map(id => id ->
+        (parent.cells.getOrElse(id, none) ++ deltaCells.getOrElse(id, none)))
+        .filter(_._2.nonEmpty).toMap
+      Some(HistState(histOf(kCap, lists, parent.cellRank, cells, dead),
+        parent.anchors, lists, parent.cellRank, cells, files, Some(g.parent)))
+    }
+  }
+
+  /** THE scoring pass, for a whole corpus and for a grow's delta alike:
+    * each anchor's exact top-kCap (cos, id) over the rows already scored
+    * (`lists`, empty for a whole corpus) and the (surrogate id,
+    * embedding) `rows` together. Each task keeps a bounded top-kCap
+    * buffer per anchor id, ordered (cos desc, gid asc) by the
+    * [[TopKHeap]] the SQL top-k aggregate uses (same ties, NaN skipped)
+    * and scored with the one cosine kernel `cosine_similarity` also
+    * runs; the driver merges the buffers into `lists` — a bounded local
+    * top-k per task, merged once (REPOSE's distributed top-k shape).
+    * Merging into `lists` is exact: the top-kCap of a union is the
+    * top-kCap of its two sides' top-kCap lists under one total order
+    * (the prefix property TopKProps pins). A corpus of fewer scan
+    * partitions than the default parallelism is scanned once per group
+    * of anchors, one task per (group, partition), so every core scores:
+    * one job, and no shuffle. */
+  private def scoreInto(spark: SparkSession,
+      lists: Array[Array[(Double, Long)]], anchors: Array[(Long, Array[Float])],
+      slot: Array[Int], rows: DataFrame, kCap: Int): Array[Array[(Double, Long)]] = {
+    val rdd = rows.queryExecution.toRdd
+    val parts = math.max(1, rdd.getNumPartitions)
+    val groups = math.max(1, math.min(lists.length,
+      (spark.sparkContext.defaultParallelism + parts - 1) / parts))
+    val scored = spark.sparkContext.union((0 until groups).map { g =>
+      val mine = anchors.indices.filter(i => slot(i) % groups == g).toArray
+      val qEmb = mine.map(i => anchors(i)._2)
+      val qSlot = mine.map(slot)
+      val slots = qSlot.distinct
+      val local = qSlot.map(s => slots.indexOf(s))
+      rdd.mapPartitions { it =>
         val q = qEmb.map(e => UnsafeArrayData.fromPrimitiveArray(e): ArrayData)
-        val heaps = Array.fill(gids.length)(new TopKHeap(kCap))
-        rows.foreach { r =>
+        val heaps = Array.fill(slots.length)(new TopKHeap(kCap))
+        it.foreach { r =>
           val id = r.getLong(0)
           val e = r.getArray(1)
           var i = 0
           while (i < q.length) {
-            heaps(slot(i)).insert(VectorKernels.cosine(q(i), e), id)
+            heaps(local(i)).insert(VectorKernels.cosine(q(i), e), id)
             i += 1
           }
         }
-        Iterator.single(heaps)
+        Iterator.single(slots.zip(heaps))
       }
-      .treeAggregate(Array.fill(gids.length)(new TopKHeap(kCap)))(merge, merge)
-      // index p of a drained list is exact rank p + 1 under the
-      // (cos desc, id asc) total order, and a contract's depth-k exact
-      // set is ranks <= k — the prefix property (TopKProps) that lets
-      // one kCap-deep pass serve every contract
-      .map { h => val (_, ids, m) = h.drainSortedDesc(); ids.take(m) }
-    // ONE collect: the (id, cell, dead) rows of every neighbour —
-    // cell-table rows plus tombstone rows, so a tombstoned id has no
-    // live cell (IndexCache.live's anti-join, applied on the driver) —
-    // and, with a null id, the centroid table's (cell, centroid) rows
-    // a closure over the id set, not an `isin` of up to 8k literals that
-    // the analyzer and optimizer would walk on every rule pass
-    val need = exact.flatten.toSet
+    })
+    val heaps = lists.map { l =>
+      val h = new TopKHeap(kCap)
+      l.foreach { case (s, id) => h.insert(s, id) }
+      h
+    }
+    scored.collect().foreach(_.foreach { case (s, h) => heaps(s).absorb(h) })
+    // index p of a drained list is exact rank p + 1 under the
+    // (cos desc, id asc) total order, and a contract's depth-k exact
+    // set is ranks <= k — the prefix property (TopKProps) that lets
+    // one kCap-deep pass serve every contract
+    heaps.map { h =>
+      val (s, ids, m) = h.drainSortedDesc()
+      Array.tabulate(m)(p => (s(p), ids(p)))
+    }
+  }
+
+  private def neighboursOf(lists: Array[Array[(Double, Long)]]): Set[Long] =
+    lists.iterator.flatMap(_.iterator.map(_._2)).toSet
+
+  /** ONE collect: the cells of `cellRows` ((id, cell) rows) whose
+    * surrogate id is in `need`, the ids of `need` on the tombstone
+    * sidecar (IndexCache.live's anti-join, applied on the driver), and,
+    * when given, the centroid table's rows, which come back with a null
+    * id. The id filter is a closure over the id set, not an `isin` of up
+    * to 8k literals that the analyzer and optimizer would walk on every
+    * rule pass. */
+  private def neighbourRows(cellRows: DataFrame, tombstones: Option[DataFrame],
+      centroids: Option[DataFrame], need: Set[Long])
+      : (Map[Long, Array[Int]], Set[Long], Array[(Int, ArrayData)]) = {
     val isNeighbour = udf((id: Long) => need(id))
-    val tombstones = built.tombstones.fold(Seq.empty[DataFrame])(t =>
-      Seq(t.select(xxhash64(col("id")).as("id"), lit(-1).as("cell"),
-        lit(true).as("dead"))))
-    val (centroidRows, rows) = (built.assigned.select(xxhash64(col("id")).as("id"),
-        col("cell"), lit(false).as("dead")) +: tombstones)
+    val rows = (cellRows.select(xxhash64(col("id")).as("id"), col("cell"),
+        lit(false).as("dead")) +:
+      tombstones.toSeq.map(_.select(xxhash64(col("id")).as("id"),
+        lit(-1).as("cell"), lit(true).as("dead"))))
       .reduce(_ unionByName _)
       .filter(isNeighbour(col("id")))
-      .unionByName(built.centroids.select(col("cell"), col("centroid")),
-        allowMissingColumns = true)
+    val (centroidRows, hits) = centroids.fold(rows)(t => rows.unionByName(
+        t.select(col("cell"), col("centroid")), allowMissingColumns = true))
       .collect().partition(_.isNullAt(0))
-    val dead = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSet
-    val cellsOf = rows.filter(r => !dead(r.getLong(0)))
-      .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getInt(1)) }
-    // cell ranks per anchor id: the routing top-c under (cell_score
-    // desc, cell asc) of every distinct (id, embedding) anchor row, with
-    // a duplicated row scored once per copy as the grouped aggregate
-    // did; a cell's rank for an id is its min over that id's rows
-    val centroids = centroidRows.map(r => (r.getInt(1),
-      UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](3).toArray): ArrayData))
-    val cellRank = Array.fill(gids.length)(
-      scala.collection.mutable.HashMap.empty[Int, Int])
-    anchors.indices.groupBy(i => (anchors(i)._1, qEmb(i).toSeq)).values
+    val (deadRows, cellHits) = hits.partition(_.getBoolean(2))
+    (cellHits.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getInt(1)) },
+      deadRows.map(_.getLong(0)).toSet,
+      centroidRows.map(r => (r.getInt(1),
+        UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](3).toArray): ArrayData)))
+  }
+
+  /** Cell ranks per anchor id: the routing top-c under (cell_score desc,
+    * cell asc) of every distinct (id, embedding) anchor row, with a
+    * duplicated row scored once per copy as the grouped aggregate did; a
+    * cell's rank for an id is its min over that id's rows. */
+  private def cellRanks(anchors: Array[(Long, Array[Float])], slot: Array[Int],
+      nSlots: Int, centroids: Array[(Int, ArrayData)], c: Int): Array[Map[Int, Int]] = {
+    val ranks = Array.fill(nSlots)(scala.collection.mutable.HashMap.empty[Int, Int])
+    anchors.indices.groupBy(i => (anchors(i)._1, anchors(i)._2.toSeq)).values
       .foreach { copies =>
-        val q = UnsafeArrayData.fromPrimitiveArray(qEmb(copies.head))
+        val q = UnsafeArrayData.fromPrimitiveArray(anchors(copies.head)._2)
         val h = new TopKHeap(c)
         for ((cell, cent) <- centroids; _ <- copies)
           h.insert(VectorKernels.cosine(q, cent), cell.toLong)
         val (_, cells, m) = h.drainSortedDesc()
-        val ranks = cellRank(slot(copies.head))
+        val r = ranks(slot(copies.head))
         (0 until m).foreach { p =>
           val cell = cells(p).toInt
-          ranks(cell) = math.min(ranks.getOrElse(cell, Int.MaxValue), p + 1)
+          r(cell) = math.min(r.getOrElse(cell, Int.MaxValue), p + 1)
         }
       }
+    ranks.map(_.toMap)
+  }
+
+  /** The histogram: each listed pair at (exact rank, the MIN probe rank
+    * over its neighbour's cells), or cell rank 0 when the neighbour is
+    * tombstoned or in no cell. */
+  private def histOf(kCap: Int, lists: Array[Array[(Double, Long)]],
+      cellRank: Array[Map[Int, Int]], cells: Map[Long, Array[Int]],
+      dead: Set[Long]): JointHist = {
     val counts = scala.collection.mutable.HashMap.empty[(Int, Int), Long]
-    for (s <- exact.indices; (nb, r0) <- exact(s).zipWithIndex) {
-      val crs = cellsOf.getOrElse(nb, Array.empty[Int]).flatMap(cellRank(s).get)
+    for (s <- lists.indices; ((_, nb), r0) <- lists(s).zipWithIndex) {
+      val crs =
+        if (dead(nb)) Array.empty[Int]
+        else cells.getOrElse(nb, Array.empty[Int]).flatMap(cellRank(s).get)
       val key = (r0 + 1, if (crs.isEmpty) 0 else crs.min)
       counts(key) = counts.getOrElse(key, 0L) + 1
     }
     JointHist(kCap, counts.toMap)
+  }
+
+  /** The visible part files of an artifact's `assigned` table, by path
+    * below it. Part-file names are unique per write, and a grow
+    * hardlinks its parent's under the same names. */
+  private def assignedFiles(indexPath: String): Set[String] = {
+    def walk(dir: java.io.File, rel: String): Seq[String] =
+      Option(dir.listFiles()).toSeq.flatten
+        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+        .flatMap(f =>
+          if (f.isDirectory) walk(f, s"$rel${f.getName}/") else Seq(rel + f.getName))
+    walk(new java.io.File(indexPath, "assigned"), "").toSet
   }
 }

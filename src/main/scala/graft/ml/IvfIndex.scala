@@ -69,8 +69,8 @@ class IvfIndex(val nCentroids: Int = 16, val nProbe: Int = 4, val seed: Long = 4
    */
   def append(built: IvfIndex.Built, delta: DataFrame,
       idCol: String, embCol: String): IvfIndex.Built = {
-    val assignedDelta = IvfIndex.assignDelta(built.centroids, delta,
-      idCol, embCol)
+    val assignedDelta = IvfIndex.assignDelta(IvfIndex.centresOf(built.centroids),
+      delta, idCol, embCol)
     // LWW on id collisions: a delta row REPLACES an existing row with the
     // same id (anti-join the old side) — a blind union would leave the
     // stale vector in the index and let one id occupy two top-k slots.
@@ -211,16 +211,49 @@ object IvfIndex {
     }
   }
 
+  /** The fitted centres of the artifact at `path` ([[centresOf]] of its
+    * centroid table), collected once per table rather than once per
+    * caller: an insert refresh's append assigns against them and its
+    * registration routes by them. Keyed by the table's part files — names
+    * unique per write, which a link-append grow hardlinks — so a grown
+    * artifact reuses its parent's collect and a rebuilt one never sees
+    * another table's centres. The table of an artifact the driver cannot
+    * list is collected on every call. */
+  private[graft] def centres(spark: SparkSession,
+      path: String): Array[Array[Double]] = {
+    val files = Option(new java.io.File(path, "centroids").listFiles()).toSeq
+      .flatten
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .map(f => s"${f.getName}:${f.length}").sorted
+    def collect() = centresOf(readCentroids(spark, path))
+    if (files.isEmpty) collect()
+    else CentresMemo.synchronized(Option(CentresMemo.get(files))).getOrElse {
+      val cs = collect()
+      CentresMemo.synchronized(CentresMemo.put(files, cs))
+      cs
+    }
+  }
+
+  /** The last few centre tables [[centres]] collected, least recently
+    * used first out: a few KiB each, and a refresh reads only its
+    * parent's. */
+  private object CentresMemo
+      extends java.util.LinkedHashMap[Seq[String], Array[Array[Double]]](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[Seq[String], Array[Array[Double]]]): Boolean =
+      size() > 16
+  }
+
   /** The frozen-quantizer delta encode shared by the in-memory
     * [[IvfIndex.append]] and the on-disk [[appendOnDisk]]: dedup the
     * delta's ids, drop zero-norm rows, and assign each unit vector with
     * the build's own rule, [[Quantizer.cellOf]], against the FROZEN
-    * centroid table — a map-side pass, no fit. */
-  private[ml] def assignDelta(centroids: DataFrame, delta: DataFrame,
+    * centres — a map-side pass, no fit. */
+  private[ml] def assignDelta(centres: Array[Array[Double]], delta: DataFrame,
       idCol: String, embCol: String): DataFrame =
     dedupDeltaIds(Quantizer.prepare(delta, idCol, embCol))
       .select(col("id"), col("emb"),
-        Quantizer.cellOf(centresOf(centroids))(col("unit")).as("cell"))
+        Quantizer.cellOf(centres)(col("unit")).as("cell"))
 
   /** A delta carrying the same id twice (a document upserted twice in
     * one ingest batch) must contribute exactly ONE row, or the LWW
@@ -330,9 +363,17 @@ object IvfIndex {
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
-  def load(spark: SparkSession, path: String): Built =
-    Built(spark.read.parquet(s"$path/assigned"), readCentroids(spark, path),
-      IndexCache.readTombstones(spark, path))
+  /** A published index, read with the schemas its [[assignedSchema]]
+    * record gives (`assigned`'s, and its `id` field for the sidecar):
+    * inferring them costs a parquet footer job per table. An artifact
+    * without the record is inferred. */
+  def load(spark: SparkSession, path: String): Built = {
+    val schema = assignedSchema(spark, path)
+    Built(schema.fold(spark.read)(spark.read.schema).parquet(s"$path/assigned"),
+      readCentroids(spark, path),
+      IndexCache.readTombstones(spark, path,
+        schema.map(s => StructType(Seq(s("id"))))))
+  }
 
   /**
    * Per-cell on-disk compaction of a PUBLISHED index: rewrite ONLY the
@@ -435,44 +476,72 @@ object IvfIndex {
       idCol: String,
       embCol: String,
       cacheRoot: String = IndexCache.DefaultIvfRoot): String =
-    openOrBuildPath(spark, ivf, sourcePath, spark.read.parquet(sourcePath),
-      idCol, embCol, cacheRoot)
+    openOrGrowPath(spark, ivf, sourcePath, spark.read.parquet(sourcePath),
+      idCol, embCol, cacheRoot)._1
+
+  /** A link-append grow, for the calibration that follows it
+    * ([[IvfGeometry]]): the artifact it grew from, the delta as read from
+    * the new source files, and the rows the append wrote for it (id,
+    * emb, cell), checkpointed. */
+  private[ml] final case class LinkGrow(parent: String, delta: DataFrame,
+      assigned: DataFrame)
 
   /** [[openOrBuildPath]] over `corpus`, the caller's own read of
-    * `sourcePath` (only a cold build or a grow reads it): a caller that
-    * reads the corpus anyway ([[IvfGeometry]]'s calibration) shares one
-    * read, and one schema-inference job, with the build or the grow's
-    * delta read. */
-  private[ml] def openOrBuildPath(spark: SparkSession, ivf: IvfIndex,
+    * `sourcePath` (only a cold build or a grow reads it), with the
+    * link-append this open ran, if it ran one: a caller that reads the
+    * corpus anyway ([[IvfGeometry]]'s calibration) shares one read, and
+    * one schema-inference job, with the build or the grow's delta read,
+    * and calibrates a grow from its delta. */
+  private[ml] def openOrGrowPath(spark: SparkSession, ivf: IvfIndex,
       sourcePath: String, corpus: => DataFrame, idCol: String, embCol: String,
-      cacheRoot: String): String =
+      cacheRoot: String): (String, Option[LinkGrow]) = {
+    var grow: Option[LinkGrow] = None
     // a grown source encodes ONLY the new files against the frozen
     // centroids — no k-means fit on either grow form
-    IndexCache.openOrGrow(spark, sourcePath, corpus, ivf.fingerprint,
+    val path = IndexCache.openOrGrow(spark, sourcePath, corpus, ivf.fingerprint,
       cacheRoot, Layout) { staging =>
       save(ivf.build(spark, corpus, idCol, embCol), staging)
-    }((published, delta, staging) =>
-        appendOnDisk(spark, published, delta, idCol, embCol, staging),
+    }({ (published, delta, staging) =>
+        grow = linkAppendRows(spark, published, delta, idCol, embCol, staging)
+          .map(LinkGrow(published, delta, _))
+        grow.isDefined
+      },
       (published, delta, staging) =>
         save(ivf.append(load(spark, published), delta, idCol, embCol), staging))
+    (path, grow)
+  }
 
   /** The O(delta) refresh ([[IndexCache.linkAppend]]): hardlink the
     * published cell dirs, centroid table and sidecar into `staging` and
     * append ONLY the delta's frozen-centroid assignments as new files in
     * their cell directories — no shuffle of existing rows, no
     * corpus-sized write. The grown artifact keeps its parent's
-    * [[assignedSchema]] record. [[IvfIndex.append]]'s rewrite form stays
-    * the LWW fallback (false on overlap or a link-refusing filesystem). */
+    * [[assignedSchema]] record and calibration anchor records
+    * ([[IvfGeometry.AnchorsPrefix]]). [[IvfIndex.append]]'s rewrite form
+    * stays the LWW fallback (false on overlap or a link-refusing
+    * filesystem). */
   private[graft] def appendOnDisk(spark: SparkSession, published: String,
       delta: DataFrame, idCol: String, embCol: String,
-      staging: String): Boolean = {
-    val d = assignDelta(readCentroids(spark, published), delta, idCol,
+      staging: String): Boolean =
+    linkAppendRows(spark, published, delta, idCol, embCol, staging).isDefined
+
+  /** [[appendOnDisk]], returning the delta rows it appended, or None
+    * when it declined. */
+  private def linkAppendRows(spark: SparkSession, published: String,
+      delta: DataFrame, idCol: String, embCol: String,
+      staging: String): Option[DataFrame] = {
+    val d = assignDelta(centres(spark, published), delta, idCol,
       embCol).localCheckpoint()
-    IndexCache.linkAppend(spark, published, staging, Layout, d.select("id")) { st =>
+    val linked = IndexCache.linkAppend(spark, published, staging, Layout,
+        d.select("id")) { st =>
       if (!d.isEmpty)
         d.write.mode("append").partitionBy("cell").parquet(s"$st/assigned")
-      assignedSchema(spark, published).foreach(schema =>
-        writeFile(spark, s"$st/$AssignedSchemaRel", schema.json))
+      Option(new java.io.File(published).listFiles()).toSeq.flatten
+        .filter(f => f.getName == AssignedSchemaRel ||
+          f.getName.startsWith(IvfGeometry.AnchorsPrefix))
+        .foreach(f => java.nio.file.Files.copy(f.toPath,
+          new java.io.File(st, f.getName).toPath))
     }
+    if (linked) Some(d) else None
   }
 }

@@ -191,8 +191,7 @@ object AnnIndexRegistry {
 
   private def loadCentroids(spark: SparkSession,
       indexPath: String): Array[(Int, Array[Double])] =
-    graft.ml.IvfIndex.centresOf(graft.ml.IvfIndex.readCentroids(spark,
-      indexPath)).zipWithIndex.map(_.swap)
+    graft.ml.IvfIndex.centres(spark, indexPath).zipWithIndex.map(_.swap)
 
   /** The data schemas of an IVF artifact's probed tables, taken once at
     * registration: `assigned` as the artifact recorded it

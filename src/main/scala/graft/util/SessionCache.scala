@@ -62,6 +62,17 @@ class SessionCache[K, V](
     }
   }
 
+  /** The value built for (s, key), if any; never builds. */
+  def get(s: SparkSession, key: K): Option[V] = cache.synchronized {
+    purgeStopped()
+    Option(cache.get(s)).flatMap(_.get(key)).flatMap(_.value)
+  }
+
+  /** Drop (s, key): the next lookup builds again. */
+  def remove(s: SparkSession, key: K): Unit = cache.synchronized {
+    Option(cache.get(s)).foreach(_.remove(key))
+  }
+
   /** Live-session CACHED-VALUE count — spec observability only. Counts
     * only slots holding a built value: a build that threw leaves its
     * slot empty for retry, and an empty slot is bookkeeping, not a

@@ -31,9 +31,12 @@ object JointHistOracle {
         (col("p0") + 1).as("cell_rank"))
   }
 
-  /** The (exact_rank, cell_rank) pair counts over the anchor sample. */
+  /** The (exact_rank, cell_rank) pair counts over the anchor sample, or
+    * over the rows of the `anchors` surrogate ids (an artifact's recorded
+    * anchors, [[IvfGeometry.readAnchors]]) when given. */
   def counts(built: IvfIndex.Built, corpus: DataFrame, idCol: String,
-      embCol: String, c: Int, nAnchors: Int, kCap: Int): Map[(Int, Int), Long] = {
+      embCol: String, c: Int, nAnchors: Int, kCap: Int,
+      anchorIds: Option[Set[Long]] = None): Map[(Int, Int), Long] = {
     val searchable = graft.util.Spread.byKey(
         corpus.filter(l2Norm(col(embCol)) > 0), idCol)
       .withColumn("__gid", xxhash64(col(idCol)))
@@ -41,11 +44,13 @@ object JointHistOracle {
       built.assigned.withColumn("id", xxhash64(col("id"))),
       built.centroids,
       built.tombstones.map(_.withColumn("id", xxhash64(col("id")))))
-    val n = searchable.count()
-    val stride = math.max(1L, n / nAnchors)
-    val anchors = searchable
-      .filter(pmod(hash(col(idCol)), lit(stride)) === 0)
-      .orderBy(col(idCol)).limit(nAnchors)
+    val anchors = anchorIds.fold {
+      val n = searchable.count()
+      val stride = math.max(1L, n / nAnchors)
+      searchable
+        .filter(pmod(hash(col(idCol)), lit(stride)) === 0)
+        .orderBy(col(idCol)).limit(nAnchors)
+    }(ids => searchable.filter(col("__gid").isin(ids.toSeq: _*)))
       .localCheckpoint()
     val exact = searchable
       .select(col("__gid").as("n_id"), col(embCol).as("n_emb"))

@@ -1118,4 +1118,39 @@ class MerkonStoreSpec extends AnyFunSuite with SparkTestBase {
           s"deletes-only $deleteJobs (budget 2)")
     } finally graft.plans.AnnIndexRegistry.clear()
   }
+
+  test("refresh job budget, derived geometry: an insert-only buildIndex grows the calibration from the delta, in at most 14 jobs") {
+    // the serve shape: the store calibrates nProbe itself, so an insert
+    // refresh also recalibrates the grown artifact; the parent's anchors
+    // are scored against the delta alone, and the append's centroid
+    // collect serves the registration too
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val st = newStore
+    val dumpRoot = scratchDir("graft-store-refresh-derived")
+    try {
+      val corpus = spark.read.parquet(s"$sf0_001/embeddings.parquet")
+      def slice(lo: Int, hi: Int) =
+        corpus.filter(col("vec_id") >= lo && col("vec_id") < hi)
+          .select(concat(lit("k"), col("vec_id")).as("key"), col("embedding"))
+      val dump = s"$dumpRoot/${MerkonStore.pathSafe("vrd")}"
+      def entry = graft.plans.AnnIndexRegistry.lookup(dump).get
+      st.upsertBatch("vrd", slice(0, 400))
+      st.compact("vrd")
+      st.buildIndex("vrd", dir = dumpRoot)
+      val base = entry
+
+      st.upsertBatch("vrd", slice(400, 450))
+      st.removeBatch("vrd", Seq("k3", "k4"))
+      st.compact("vrd")
+      val (_, insertJobs) = jobsOf(st.buildIndex("vrd", dir = dumpRoot))
+      val grown = entry
+      assert(grown.indexPath != base.indexPath &&
+        assignedFiles(base.indexPath).subsetOf(assignedFiles(grown.indexPath)),
+        "an insert-only wave must take the link-append grow")
+      assert(grown.centroids.length == base.centroids.length && grown.servedK == 10)
+      info(s"derived-geometry insert-only refresh: $insertJobs jobs")
+      assert(insertJobs <= 14,
+        s"derived-geometry insert-only refresh ran $insertJobs jobs (budget 14)")
+    } finally graft.plans.AnnIndexRegistry.clear()
+  }
 }
