@@ -141,7 +141,7 @@ private[graft] object IndexCache {
     * validation were blind to in-place rewrites of exactly the layout a
     * partitioned 100 TB corpus uses. Hidden (`_`/`.`-prefixed)
     * subdirectories are skipped like hidden files. */
-  private def dataFiles(sourcePath: String): Seq[java.io.File] = {
+  private[ml] def dataFiles(sourcePath: String): Seq[java.io.File] = {
     val root = new java.io.File(sourcePath)
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory)

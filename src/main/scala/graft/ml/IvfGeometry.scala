@@ -689,11 +689,8 @@ object IvfGeometry {
     * below it. Part-file names are unique per write, and a grow
     * hardlinks its parent's under the same names. */
   private def assignedFiles(indexPath: String): Set[String] = {
-    def walk(dir: java.io.File, rel: String): Seq[String] =
-      Option(dir.listFiles()).toSeq.flatten
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .flatMap(f =>
-          if (f.isDirectory) walk(f, s"$rel${f.getName}/") else Seq(rel + f.getName))
-    walk(new java.io.File(indexPath, "assigned"), "").toSet
+    val root = new java.io.File(indexPath, "assigned").toPath
+    IndexCache.dataFiles(root.toString)
+      .map(f => root.relativize(f.toPath).toString).toSet
   }
 }

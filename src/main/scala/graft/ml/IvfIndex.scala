@@ -221,10 +221,8 @@ object IvfIndex {
     * list is collected on every call. */
   private[graft] def centres(spark: SparkSession,
       path: String): Array[Array[Double]] = {
-    val files = Option(new java.io.File(path, "centroids").listFiles()).toSeq
-      .flatten
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .map(f => s"${f.getName}:${f.length}").sorted
+    val files = IndexCache.dataFiles(s"$path/centroids")
+      .map(f => s"${f.getName}:${f.length}")
     def collect() = centresOf(readCentroids(spark, path))
     if (files.isEmpty) collect()
     else CentresMemo.synchronized(Option(CentresMemo.get(files))).getOrElse {
